@@ -6,7 +6,6 @@ shared session, cold (first build+run, what TIER2 sees) and warm
 
 Usage:
   python bench_extra.py [--sf DIR] [--warm N] [--plans TAG] q1 q2 ...
-  python bench_extra.py --all-tier2      # every TIER2 query, cold pass
 """
 
 from __future__ import annotations

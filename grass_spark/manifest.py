@@ -7,7 +7,8 @@ row carries the creating ``command`` string
 ``update_from_registered_maps`` recomputes rollup metadata after each
 append.  This engine replaces that SQLite catalog with a JSON manifest
 per pipeline: one entry per (tier, output partition) recording rows,
-bytes, duration and the input fingerprint — which is what makes a tier
+bytes and the input fingerprint (the tier record holds the tier's write
+wall; a day's share of it is not measured) — which is what makes a tier
 job **resumable mid-tier**: on restart the pipeline diffs target
 partitions against completed manifest entries and recomputes only the
 missing ones, overwriting idempotently (dynamic partition overwrite).
@@ -35,7 +36,7 @@ class PartitionEntry:
     rows_out: int = 0
     bytes_out: int = 0
     n_files: int = 0
-    duration_s: float = 0.0
+    duration_s: float = 0.0        # 0.0: not measured per partition
     input_fingerprint: str = ""    # identifies the input snapshot
     finished_at: float = 0.0
     status: str = "ok"
@@ -47,6 +48,7 @@ class TierRecord:
     source: str                    # "raw" or the tier below
     aggregation: list[str] = field(default_factory=list)
     command: str = ""              # reference's strds_metadata.command analog
+    write_s: float = 0.0           # wall time of the tier's last write
 
 
 class CheckpointManifest:
@@ -91,7 +93,13 @@ class CheckpointManifest:
         self._data["partitions"].append(asdict(entry))
         self._save()
 
-    def record_many(self, entries: list[PartitionEntry]) -> None:
+    def record_many(
+        self, entries: list[PartitionEntry],
+        tiers: dict[str, TierRecord] | None = None,
+    ) -> None:
+        """Upsert ``entries`` and, in the same save, ``tiers``."""
+        for name, rec in (tiers or {}).items():
+            self._data["tiers"][name] = asdict(rec)
         keys = {(e.tier, e.part) for e in entries}
         now = time.time()
         for e in entries:

@@ -22,8 +22,9 @@ Spark-first decisions, justified at 100 TB:
   shuffle; Spark's partial aggregation (map-side combine) absorbs
   hot-conversation skew because the grouping key includes the bucket —
   a conversation with 10^9 turns spreads over ~10^6 minute buckets.
-  For the write, rows are explicitly repartitioned by
-  (day, salted hash(conv_id)) so no single output task owns a hot day.
+  The write is a ``rebalance`` by day: AQE gives each day one output
+  file and splits a day larger than the advisory partition size over
+  several tasks, so no single output task owns a hot day.
 * **Idempotent, resumable writes.** Output is parquet partitioned by
   bucket day; dynamic partition overwrite + the checkpoint manifest
   (:mod:`grass_spark.manifest`) make mid-tier resume a pure diff of
@@ -198,7 +199,6 @@ class RollupPipeline:
         base_dir: str,
         tiers: tuple[tuple[str, str], ...] = DEFAULT_TIERS,
         keys: list[str] | None = None,
-        write_salt: int = 4,
         compress: bool = False,
         compress_tiers: tuple[str, ...] | None = None,
         layout: str = "plain",
@@ -213,7 +213,6 @@ class RollupPipeline:
         self.base_dir = base_dir
         self.tiers = tiers
         self.keys = ["conv_id"] if keys is None else list(keys)
-        self.write_salt = write_salt
         self.layout = layout
         # auto-layout density threshold: raw rows per (day, tier-0
         # bucket) below which the bucketed publish premium (measured
@@ -422,14 +421,10 @@ class RollupPipeline:
         from grass_spark.operators.blocks import decompress_blocks
 
         blocks = spark.read.parquet(self.tier_path(name) + "_blocks")
-        out = decompress_blocks(
+        return decompress_blocks(
             blocks, keys=self.keys, ts_col="bucket_start",
             int_cols=list(self.INT_METRICS),
         )
-        # int metrics decode as double (NULL-capable); tiers are non-null
-        for m in self.INT_METRICS:
-            out = out.withColumn(m, F.col(m).cast("long"))
-        return out
 
     def _write_blocks(self, spark: SparkSession, name: str) -> dict:
         """Materialize the tier's Gorilla block store (delta-of-delta
@@ -472,36 +467,37 @@ class RollupPipeline:
         spark = raw.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-        t0 = raw.agg(F.min("ts").alias("s")).collect()[0]["s"]
-        if t0 is None:
+        # the one raw pre-scan: rows per day (stored as rows_in lineage;
+        # drives incremental dirty-day detection) and each day's first
+        # ts, whose minimum anchors every tier's bucket origin
+        rows = raw.groupBy(
+            F.date_format("ts", "yyyy-MM-dd").alias("d")
+        ).agg(F.count(F.lit(1)).alias("n"), F.min("ts").alias("t0")).collect()
+        days = [r for r in rows if r["d"] is not None]
+        if not days:
             raise ValueError("empty raw input")
-
-        # one cheap aggregate: raw rows per day (stored as rows_in
-        # lineage; drives incremental dirty-day detection)
-        raw_day_counts = {
-            str(r["d"]): int(r["n"])
-            for r in raw.groupBy(
-                F.date_format("ts", "yyyy-MM-dd").alias("d")
-            ).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        n_null = sum(r["n"] for r in rows if r["d"] is None)
+        if n_null:
+            raise ValueError(
+                f"raw input has {n_null} rows with a NULL ts; they fall in "
+                "no bucket and no day — drop or repair them first"
+            )
+        raw_day_counts = {r["d"]: int(r["n"]) for r in days}
+        t0 = min(r["t0"] for r in days)
 
         if self.layout == "auto":
             self._resolve_auto_layout(raw_day_counts)
 
         results: list[TierResult] = []
-        lower: DataFrame | None = None
         lower_days: set[str] | None = None  # days (re)written in the lower tier
         for i, (name, gran) in enumerate(self.tiers):
             origin = adjust_datetime_to_granularity(t0, gran)
             src = "raw" if i == 0 else self.tiers[i - 1][0]
-            self.manifest.register_tier(
-                name,
-                TierRecord(
-                    granularity=gran,
-                    source=src,
-                    aggregation=["count", "sum", "min", "max"],
-                    command=f"rollup(tier={name}, gran={gran!r}, keys={self.keys}, src={src})",
-                ),
+            record = TierRecord(
+                granularity=gran,
+                source=src,
+                aggregation=["count", "sum", "min", "max"],
+                command=f"rollup(tier={name}, gran={gran!r}, keys={self.keys}, src={src})",
             )
             done_now: set[str] = set()
             if resume and incremental and i == 0:
@@ -526,7 +522,7 @@ class RollupPipeline:
                     src, gran, origin, self.keys, sketches=self.sketches
                 )
             else:
-                src = lower
+                src = self._read_tier_frame(spark, self.tiers[i - 1][0])
                 if done_now:
                     # d is the lower tier's PARTITION column -> real
                     # partition pruning, not just a row filter
@@ -539,6 +535,7 @@ class RollupPipeline:
                 done=done_now if resume else set(),
                 rows_in_map=raw_day_counts if i == 0 else None,
                 n_days=len(raw_day_counts),
+                record=record,
             )
             results.append(res)
             if self.compress and name in self.compress_tiers and res.days_written:
@@ -546,13 +543,11 @@ class RollupPipeline:
                 rec = self.manifest.tiers()[name]
                 self.manifest.register_tier(
                     name,
-                    TierRecord(
-                        granularity=rec["granularity"], source=rec["source"],
-                        aggregation=rec["aggregation"],
-                        command=rec["command"] + f" | blocks(ratio={codec['ratio']})",
-                    ),
+                    TierRecord(**{
+                        **rec,
+                        "command": rec["command"] + f" | blocks(ratio={codec['ratio']})",
+                    }),
                 )
-            lower = self._read_tier_frame(spark, name)
             lower_days = set(res.days_written)
         return results
 
@@ -665,11 +660,16 @@ class RollupPipeline:
         done: set[str],
         rows_in_map: dict[str, int] | None,
         n_days: int | None = None,
+        *,
+        record: TierRecord,
     ) -> TierResult:
         """Write one tier partitioned by bucket day, skipping ``done``
         days (already excluded upstream; the filter here is the safety
         net that keeps the write idempotent even if a caller passes an
-        unfiltered frame)."""
+        unfiltered frame).  ``record`` is registered with the write wall
+        in the same manifest save as the tier's partition entries."""
+        import pyarrow.parquet as pq
+
         path = self.tier_path(name)
         tiered = tiered.withColumn("d", F.date_format("bucket_start", "yyyy-MM-dd"))
 
@@ -680,54 +680,62 @@ class RollupPipeline:
         if self.layout == "bucketed":
             self._write_tier_bucketed(spark, tiered, name, n_days=n_days)
         else:
-            # spread each day over `write_salt` tasks so a hot day/conv
-            # doesn't serialize the write; sort by (conv_id, bucket) for
-            # range-clustered files (predicate-prunable on both).
-            out = (
-                tiered.repartition(
-                    F.col("d"), F.pmod(F.xxhash64(*self.keys), F.lit(self.write_salt))
-                )
-                .sortWithinPartitions(*self.keys, "bucket_start")
+            # rebalance by day: AQE writes one file per day and splits a
+            # day larger than advisoryPartitionSizeInBytes over several
+            # tasks (OptimizeSkewInRebalancePartitions), so a hot day
+            # doesn't serialize the write.  Leading the sort with d meets
+            # the writer's required ordering, so Spark adds no sort of its
+            # own and each file stays range-clustered on (conv_id, bucket)
+            # — predicate-prunable on both.
+            out = tiered.hint("rebalance", "d").sortWithinPartitions(
+                "d", *self.keys, "bucket_start"
             )
             out.write.mode("overwrite").partitionBy("d").parquet(path)
         duration = time.time() - start
 
-        # per-partition metrics from the files just written (metadata-only
-        # count: parquet footers, no data scan)
-        written = spark.read.parquet(path).withColumn("d", F.col("d").cast("string"))
-        if done:
-            written = written.filter(~F.col("d").isin(sorted(done)))
-        per_day = {
-            r["d"]: r["n"]
-            for r in written.groupBy("d").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        # per-day metrics from the files on disk: rows from the parquet
+        # footers, no Spark job (Iceberg's counterpart is the commit's
+        # data-file record_count).  Done days are not this run's output.
+        per_day: dict[str, int] = {}
         entries = []
-        for day, n in sorted(per_day.items()):
-            day_dir = os.path.join(path, f"d={day}")
+        for part in sorted(os.listdir(path)):
+            if not part.startswith("d="):
+                continue
+            day = part[len("d="):]
+            if day == "__HIVE_DEFAULT_PARTITION__":
+                raise ValueError(
+                    f"{path} holds a NULL-day partition (rows with a NULL "
+                    "ts from an earlier write); remove it and rerun"
+                )
+            if day in done:
+                continue
+            day_dir = os.path.join(path, part)
             files = [
                 os.path.join(day_dir, f)
                 for f in os.listdir(day_dir)
                 if f.endswith(".parquet")
-            ] if os.path.isdir(day_dir) else []
+            ]
+            if not files:
+                continue
+            per_day[day] = sum(pq.read_metadata(f).num_rows for f in files)
             entries.append(
                 PartitionEntry(
                     tier=name,
                     part=day,
                     rows_in=int((rows_in_map or {}).get(day, 0)),
-                    rows_out=int(n),
+                    rows_out=per_day[day],
                     bytes_out=sum(os.path.getsize(f) for f in files),
                     n_files=len(files),
-                    duration_s=round(duration, 3),
                     input_fingerprint=input_fingerprint,
                 )
             )
-        if entries:
-            self.manifest.record_many(entries)
+        record.write_s = round(duration, 3)
+        self.manifest.record_many(entries, tiers={name: record})
         return TierResult(
             name=name,
             granularity=gran,
             path=path,
             days_written=sorted(per_day),
-            rows_out=int(sum(per_day.values())),
+            rows_out=sum(per_day.values()),
             duration_s=duration,
         )
