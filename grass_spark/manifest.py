@@ -82,22 +82,12 @@ class CheckpointManifest:
             and (input_fingerprint is None or e["input_fingerprint"] == input_fingerprint)
         }
 
-    def record(self, entry: PartitionEntry) -> None:
-        if not entry.finished_at:
-            entry.finished_at = time.time()
-        # idempotent upsert on (tier, part)
-        self._data["partitions"] = [
-            e for e in self._data["partitions"]
-            if not (e["tier"] == entry.tier and e["part"] == entry.part)
-        ]
-        self._data["partitions"].append(asdict(entry))
-        self._save()
-
     def record_many(
         self, entries: list[PartitionEntry],
         tiers: dict[str, TierRecord] | None = None,
     ) -> None:
-        """Upsert ``entries`` and, in the same save, ``tiers``."""
+        """Upsert ``entries`` (idempotent on (tier, part)) and, in the same
+        save, ``tiers``."""
         for name, rec in (tiers or {}).items():
             self._data["tiers"][name] = asdict(rec)
         keys = {(e.tier, e.part) for e in entries}

@@ -52,11 +52,20 @@ from grass_spark.functions.granularity import (
     bucket_start_col,
 )
 from grass_spark.manifest import CheckpointManifest, PartitionEntry, TierRecord
+from grass_spark.operators.bucketed import write_bucketed
 
 ROLES = ("user", "assistant", "system", "tool")
 
 #: tier name -> granularity, in cascade order
 DEFAULT_TIERS = (("t1m", "1 minute"), ("t1h", "1 hour"), ("t1d", "1 day"))
+
+#: auto-layout density threshold: raw rows per (day, tier-0 bucket)
+#: below which the bucketed publish premium (measured 1.4-2.1x on
+#: day-sparse shapes, BASELINE.md "Layout write-cost comparison") is not
+#: repaid — the adversarial 10^8-turn shape sits at ~220 rows/bucket-day
+#: (plain wins), the dense bench shape at ~6k (bucketed wins); 4096
+#: splits the measured configs
+MIN_BUCKET_DAY_ROWS = 4096
 
 
 def _role_count(role: str):
@@ -200,10 +209,8 @@ class RollupPipeline:
         tiers: tuple[tuple[str, str], ...] = DEFAULT_TIERS,
         keys: list[str] | None = None,
         compress: bool = False,
-        compress_tiers: tuple[str, ...] | None = None,
         layout: str = "plain",
         buckets: int | dict[str, int] = 64,
-        min_bucket_day_rows: int = 4096,
         sketches: bool = False,
     ):
         if layout not in ("plain", "bucketed", "auto"):
@@ -214,13 +221,6 @@ class RollupPipeline:
         self.tiers = tiers
         self.keys = ["conv_id"] if keys is None else list(keys)
         self.layout = layout
-        # auto-layout density threshold: raw rows per (day, tier-0
-        # bucket) below which the bucketed publish premium (measured
-        # 1.4-2.1x on day-sparse shapes, BASELINE.md "Layout write-cost
-        # comparison") is not repaid — the adversarial 10^8-turn shape
-        # sits at ~220 rows/bucket-day (plain wins), the dense bench
-        # shape at ~6k (bucketed wins); 4096 splits the measured configs
-        self.min_bucket_day_rows = min_bucket_day_rows
         # opt-in mergeable-sketch tier path (operators/sketches.py):
         # tiers additionally carry KLL(len)/HLL(text) sketches so
         # approximate holistic stats fold tier-to-tier by merge instead
@@ -242,14 +242,6 @@ class RollupPipeline:
         # cross-tier co-located joins with differing counts.
         self.buckets = buckets
         self.compress = compress
-        # block stores only pay where groups are dense: the finest tier
-        # compresses 5.8x, but a day tier's (conv, block) groups hold a
-        # handful of points and the per-block headers EXCEED the data
-        # (measured ratio 0.55) — so default to tier 0 only
-        self.compress_tiers = (
-            compress_tiers if compress_tiers is not None
-            else (tiers[0][0],)
-        )
         os.makedirs(base_dir, exist_ok=True)
         self.manifest = CheckpointManifest(os.path.join(base_dir, "manifest.json"))
         self._check_layout_pin()
@@ -327,7 +319,7 @@ class RollupPipeline:
         vals = sorted(day_counts.values())
         median_day_rows = vals[len(vals) // 2]
         nb = self._buckets_for(self.tiers[0][0])
-        dense = median_day_rows >= self.min_bucket_day_rows * nb
+        dense = median_day_rows >= MIN_BUCKET_DAY_ROWS * nb
         self.layout = "bucketed" if dense else "plain"
         self._check_layout_pin()
         self.manifest.set_meta("layout_decision", {
@@ -335,7 +327,7 @@ class RollupPipeline:
             "median_day_rows": int(median_day_rows),
             "n_days": len(vals),
             "buckets_t0": nb,
-            "threshold_rows_per_bucket_day": self.min_bucket_day_rows,
+            "threshold_rows_per_bucket_day": MIN_BUCKET_DAY_ROWS,
         })
 
     def _buckets_for(self, name: str) -> int:
@@ -538,7 +530,11 @@ class RollupPipeline:
                 record=record,
             )
             results.append(res)
-            if self.compress and name in self.compress_tiers and res.days_written:
+            # block stores only pay where groups are dense: the finest
+            # tier compresses 5.8x, but a day tier's (conv, block) groups
+            # hold a handful of points and the per-block headers EXCEED
+            # the data (measured ratio 0.55) — so only tier 0 gets one
+            if self.compress and i == 0 and res.days_written:
                 codec = self._write_blocks(spark, name)
                 rec = self.manifest.tiers()[name]
                 self.manifest.register_tier(
@@ -595,28 +591,19 @@ class RollupPipeline:
         cap = max(4096, 64 * par)
         n_tasks = min(n_days * nb, cap) if n_days else nb
         out = tiered.repartition(n_tasks, F.col("d"), bucket_id)
+        # a fresh tier is written in place; changed days of an existing
+        # one go to the staging table and are swapped in below
         fresh = not os.path.isdir(path)
-        if fresh:
-            table = self._table_name(name)
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-            (
-                out.write.mode("overwrite").format("parquet")
-                .bucketBy(nb, *self.keys)
-                .sortBy(*self.keys, "bucket_start")
-                .partitionBy("d").option("path", path)
-                .saveAsTable(table)
-            )
-            return
         stg_path, stg_table = path + "_stg", self._table_name(name) + "_stg"
-        shutil.rmtree(stg_path, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {stg_table}")
-        (
-            out.write.mode("overwrite").format("parquet")
-            .bucketBy(nb, *self.keys)
-            .sortBy(*self.keys, "bucket_start")
-            .partitionBy("d").option("path", stg_path)
-            .saveAsTable(stg_table)
+        if not fresh:
+            shutil.rmtree(stg_path, ignore_errors=True)
+        write_bucketed(
+            out, self._table_name(name) if fresh else stg_table,
+            buckets=nb, key=self.keys, sort=(*self.keys, "bucket_start"),
+            partition_by=("d",), path=path if fresh else stg_path,
         )
+        if fresh:
+            return
         staged = [
             e for e in os.listdir(stg_path) if e.startswith("d=")
         ] if os.path.isdir(stg_path) else []

@@ -81,11 +81,17 @@ def ewma_daily(
         F.element_at(w_arr, F.col("_o") + 1).alias("_w"),
         "_x",
     )
+    # a present day's weight sum includes w_0 = 1; only target days the
+    # join below drops can sum to 0 (alpha = 1 zeroes every w_o, o > 0),
+    # and ANSI mode would raise on them if the plan divides before the
+    # join filters — try_divide makes those rows NULL instead
     agg = contrib.groupBy("_k", "_td").agg(
         F.count(F.lit(1)).alias("n_window_days"),
         F.round(
-            F.sum(F.col("_w") * F.col("_x").cast("double"))
-            / F.sum("_w"),
+            F.try_divide(
+                F.sum(F.col("_w") * F.col("_x").cast("double")),
+                F.sum("_w"),
+            ),
             6,
         ).alias("ewma"),
     )

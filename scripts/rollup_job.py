@@ -58,12 +58,6 @@ def main() -> None:
                          "per-tier spec 't1m=256,t1h=64,t1d=16' — upper "
                          "tiers hold ~1/60th the rows and want smaller "
                          "counts (see BASELINE.md write-cost table)")
-    ap.add_argument("--bucketed", type=int, default=0, metavar="N",
-                    help="legacy: additionally publish each tier as a "
-                         "separate conv_id-bucketed COPY (N buckets) "
-                         "under --output/bucketed; superseded by "
-                         "--layout bucketed, kept for layouts that must "
-                         "stay plain")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -97,17 +91,6 @@ def main() -> None:
         resume=not args.no_resume,
         incremental=args.incremental,
     )
-    if args.bucketed:
-        from grass_spark.operators.bucketed import write_bucketed
-
-        for r in results:
-            write_bucketed(
-                pipe.read_tier(spark, r.name),
-                f"{r.name}_bucketed",
-                buckets=args.bucketed,
-                sort=("conv_id", "bucket_start"),
-                path=os.path.join(args.output, "bucketed", r.name),
-            )
     print(json.dumps([
         {"tier": r.name, "granularity": r.granularity, "rows": r.rows_out,
          "days": len(r.days_written), "sec": round(r.duration_s, 2)}

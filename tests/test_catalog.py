@@ -264,8 +264,10 @@ def test_copy_rename_support_unregister(spark, tmp_path):
 
     cat = TierCatalog(str(tmp_path))
     cat.create("t1h", "1 hour", aggregation=["sum", "count"], command="v1")
-    cat.manifest.record(PartitionEntry(tier="t1h", part="2024-01-01", rows_out=5))
-    cat.manifest.record(PartitionEntry(tier="t1h", part="2024-01-02", rows_out=7))
+    cat.manifest.record_many([
+        PartitionEntry(tier="t1h", part="2024-01-01", rows_out=5),
+        PartitionEntry(tier="t1h", part="2024-01-02", rows_out=7),
+    ])
 
     copy_tier(cat, "t1h", "t1h_copy")
     assert "t1h_copy" in cat.tiers()

@@ -10,8 +10,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from grass_oracle import ORACLE, quantile as oracle_quantile
 from grass_spark.functions.kernels import KERNELS, NEEDS_INDEX, kernel_expr
-from grass_spark.functions.oracle import ORACLE, quantile as oracle_quantile
 
 NAN = float("nan")
 

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from grass_spark.functions.granularity import granule_series
@@ -248,46 +247,6 @@ def test_list_deltas(spark):
     assert out[0]["gap_to_next"] == 3 * 86400.0
     assert out[1]["distance_from_begin"] == 4 * 86400.0
     assert out[1]["gap_to_next"] is None
-
-
-# ---------------- skew utilities ----------------
-
-
-def test_salted_two_phase_agg_exact(spark):
-    from grass_spark.functions.skew import salted_two_phase_agg
-    from grass_spark.datagen import synth_transcripts
-
-    raw = synth_transcripts(spark, n_convs=10, avg_turns=50, seed=2).withColumn(
-        "v", F.length("text").cast("double")
-    )
-    salted = salted_two_phase_agg(
-        raw, ["conv_id"], "v", ["count", "sum", "min", "max", "average"]
-    )
-    direct = raw.groupBy("conv_id").agg(
-        F.count("v").alias("count"), F.sum("v").alias("sum"),
-        F.min("v").alias("min"), F.max("v").alias("max"),
-        F.avg("v").alias("average"),
-    )
-    cols = ["conv_id", "count", "sum", "min", "max", "average"]
-    assert salted.select(*cols).exceptAll(direct.select(*cols)).count() == 0
-    assert direct.select(*cols).exceptAll(salted.select(*cols)).count() == 0
-
-
-def test_salted_rejects_holistic(spark):
-    from grass_spark.functions.skew import salted_two_phase_agg
-
-    df = spark.createDataFrame([("a", 1.0)], ["k", "v"])
-    with pytest.raises(ValueError, match="non-algebraic"):
-        salted_two_phase_agg(df, ["k"], "v", ["median"])
-
-
-def test_salted_repartition_layout(spark):
-    from grass_spark.functions.skew import salted_repartition
-    from grass_spark.datagen import synth_transcripts
-
-    raw = synth_transcripts(spark, n_convs=5, avg_turns=30, seed=4)
-    out = salted_repartition(raw, ["conv_id"], 4, sort_cols=["turn_idx"])
-    assert out.count() == raw.count()
 
 
 # ---------------------------------------------------------------------------

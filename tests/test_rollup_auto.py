@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from grass_spark.operators.rollup import RollupPipeline
+from grass_spark.operators.rollup import MIN_BUCKET_DAY_ROWS, RollupPipeline
 
 
 def _shaped_raw(spark, n_days: int, rows_per_day: int):
@@ -106,3 +106,58 @@ def test_explicit_layout_overrides_density(spark, tmp_path):
     pipe = RollupPipeline(base, layout="plain")
     pipe.run(dense)
     assert pipe.layout == "plain" and _pin(base) == {"layout": "plain"}
+
+
+# -- the density rule itself (no Spark: run() feeds it the measured
+# per-day raw counts; these pin its boundary and its manifest record)
+
+
+def _decide(tmp_path, day_counts, buckets=2):
+    pipe = RollupPipeline(str(tmp_path / "tiers"), layout="auto",
+                          buckets=buckets)
+    pipe._resolve_auto_layout(day_counts)
+    return pipe
+
+
+def test_density_threshold_boundary_is_inclusive(tmp_path):
+    at = MIN_BUCKET_DAY_ROWS * 2
+    pipe = _decide(tmp_path / "at", {"d1": at, "d2": at, "d3": at})
+    assert pipe.layout == "bucketed"
+    assert _pin(pipe.base_dir) == {"layout": "bucketed", "buckets": 2}
+    below = _decide(tmp_path / "below", {"d1": at - 1, "d2": at - 1})
+    assert below.layout == "plain"
+    assert _pin(below.base_dir) == {"layout": "plain"}
+
+
+def test_density_uses_the_median_day(tmp_path):
+    """One huge day does not make a day-sparse store dense; the upper
+    median decides an even day count."""
+    dense = MIN_BUCKET_DAY_ROWS * 2
+    pipe = _decide(tmp_path / "a", {"d1": 10, "d2": 10, "d3": 10**9})
+    assert pipe.layout == "plain"
+    dec = pipe.manifest.get_meta("layout_decision")
+    assert dec["median_day_rows"] == 10 and dec["n_days"] == 3
+    even = _decide(tmp_path / "b", {"d1": 10, "d2": dense})
+    assert even.layout == "bucketed"
+    assert even.manifest.get_meta("layout_decision")["median_day_rows"] == dense
+
+
+def test_density_scales_with_finest_tier_buckets(tmp_path):
+    rows = MIN_BUCKET_DAY_ROWS * 4
+    per_tier = {"t1m": 8, "t1h": 2, "t1d": 1}
+    pipe = _decide(tmp_path / "a", {"d1": rows}, buckets=per_tier)
+    assert pipe.layout == "plain"  # 4 buckets' worth < t1m's 8
+    dec = pipe.manifest.get_meta("layout_decision")
+    assert dec["buckets_t0"] == 8
+    assert _decide(tmp_path / "b", {"d1": rows}, buckets=4).layout == "bucketed"
+
+
+def test_layout_decision_record_keys(tmp_path):
+    pipe = _decide(tmp_path, {"d1": 100, "d2": 200})
+    assert pipe.manifest.get_meta("layout_decision") == {
+        "layout": "plain",
+        "median_day_rows": 200,
+        "n_days": 2,
+        "buckets_t0": 2,
+        "threshold_rows_per_bucket_day": MIN_BUCKET_DAY_ROWS,
+    }

@@ -1,4 +1,4 @@
-"""Training-data ops: dedup, similarity search, text stats, multimodal."""
+"""Training-data ops: dedup, similarity search, text stats."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from grass_spark.operators import multimodal as mm
 from grass_spark.operators.dedup import (
     exact_dedup,
     minhash_candidates,
@@ -219,42 +218,6 @@ def test_fingerprint_rolling_shift_tolerant(spark):
     # but both share window hashes: xor of the two fingerprints equals
     # xor of the symmetric-difference windows only (sanity: non-zero)
     assert rows[1] ^ rows[2] != 0
-
-
-# ---------------- multimodal ----------------
-
-
-def test_media_features_deterministic(spark):
-    media = mm.synth_media(spark, n=12)
-    f1 = {r["media_id"]: r["feature"] for r in mm.extract_features(media, fake=True).collect()}
-    f2 = {r["media_id"]: r["feature"] for r in mm.extract_features(media, fake=True).collect()}
-    assert f1 == f2
-    assert all(len(v) == mm.FEATURE_DIM for v in f1.values())
-
-
-def test_media_decode_rejects_out_of_contract_payload(spark):
-    # arbitrary bytes are neither BMP nor WAV: ValueError naming the
-    # contract, not a stub NotImplementedError (round-2: real decode)
-    media = mm.synth_media(spark, n=2)
-    with pytest.raises(Exception, match="unsupported media payload"):
-        mm.extract_features(media, fake=False).collect()
-
-
-def test_resize_stub_shapes(spark):
-    media = mm.synth_media(spark, n=6)
-    out = mm.resize_images(media, 8, 4, fake=True).collect()
-    assert all(len(bytes(r["payload"])) == 32 for r in out)
-    assert all(r["width"] == 8 and r["height"] == 4 for r in out)
-
-
-def test_frame_sampling(spark):
-    media = mm.synth_media(spark, n=9).filter("kind = 'video'")
-    frames = mm.sample_frames(media, every_ms=500, fake=True)
-    per = {r["media_id"]: r["n"] for r in frames.groupBy("media_id").agg(F.count("*").alias("n")).collect()}
-    durs = {r["media_id"]: r["duration_ms"] for r in media.collect()}
-    import math
-    for mid, n in per.items():
-        assert n == max(1, math.ceil(max(durs[mid], 1) / 500))
 
 
 def test_dedup_clusters(spark):
@@ -505,99 +468,6 @@ def test_ivf_centroids_invariant_under_repartition(spark):
     c1 = train_ivf_centroids(df.repartition(1), 8, n_centroids=4, sample=64)
     c2 = train_ivf_centroids(df.repartition(13, "id"), 8, n_centroids=4, sample=64)
     assert c1 == c2
-
-
-# ---------------------------------------------------------------------------
-# real multimodal decode (round 2): vendored BMP/WAV codecs end-to-end
-# ---------------------------------------------------------------------------
-
-
-def test_bmp_roundtrip_and_stream_split():
-    import numpy as np
-    from grass_spark.functions import codecs
-
-    rng = np.random.default_rng(0)
-    img = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)
-    payload = codecs.encode_bmp(img)
-    back = codecs.decode_bmp(payload)
-    assert (back == img).all()
-    # odd width exercises 4-byte row padding
-    img2 = rng.integers(0, 256, size=(3, 3, 3), dtype=np.uint8)
-    stream = payload + codecs.encode_bmp(img2)
-    parts = codecs.split_bmp_stream(stream)
-    assert len(parts) == 2
-    assert (codecs.decode_bmp(parts[1]) == img2).all()
-
-
-def test_wav_roundtrip():
-    import numpy as np
-    from grass_spark.functions import codecs
-
-    t = np.arange(1600) / 16000.0
-    x = 0.25 * np.sin(2 * np.pi * 440 * t)
-    data, rate = codecs.decode_wav(codecs.encode_wav(x, 16000))
-    assert rate == 16000
-    assert np.abs(data - x).max() < 1e-3  # 16-bit quantization
-
-
-def test_extract_features_real_kernels(spark):
-    import numpy as np
-    from grass_spark.functions import codecs
-    from grass_spark.operators.multimodal import extract_features, synth_real_media
-
-    media = synth_real_media(spark, n=6)
-    out = {r["media_id"]: r["feature"]
-           for r in extract_features(media).collect()}
-    assert len(out) == 6
-    # cross-check one image row against a local decode
-    row = media.filter("media_id = 0").collect()[0]
-    want = codecs.image_features(codecs.decode_bmp(bytes(row["payload"])), 16)
-    assert np.allclose(out[0], want, atol=1e-6)
-    # audio features: rms of a 0.5-amplitude sine ~ 0.3535
-    assert abs(out[1][0] - 0.5 / np.sqrt(2)) < 0.01
-
-
-def test_extract_features_unsupported_payload_raises(spark):
-    from grass_spark.operators.multimodal import extract_features, synth_media
-
-    media = synth_media(spark, n=3)  # arbitrary bytes, not BMP/WAV
-    try:
-        extract_features(media).collect()
-        raise AssertionError("expected decode failure")
-    except Exception as e:  # Py4J wraps the ValueError
-        assert "unsupported media payload" in str(e)
-
-
-def test_resize_images_real(spark):
-    import numpy as np
-    from grass_spark.functions import codecs
-    from grass_spark.operators.multimodal import resize_images, synth_real_media
-
-    media = synth_real_media(spark, n=3).filter("kind = 'image'")
-    out = resize_images(media, 4, 4).collect()[0]
-    img = codecs.decode_bmp(bytes(out["payload"]))
-    assert img.shape == (4, 4, 3)
-    assert out["width"] == 4 and out["height"] == 4
-    # nearest-neighbor: every output pixel exists in the source
-    src = codecs.decode_bmp(
-        bytes(media.collect()[0]["payload"])
-    ).reshape(-1, 3)
-    assert all(any((p == s).all() for s in src) for p in img.reshape(-1, 3))
-
-
-def test_sample_frames_real_video(spark):
-    from grass_spark.functions import codecs
-    from grass_spark.operators.multimodal import sample_frames, synth_real_media
-
-    media = synth_real_media(spark, n=3).filter("kind = 'video'")
-    out = sample_frames(media, every_ms=250).collect()
-    # duration 1000ms / 250ms -> 4 frames at 0,250,500,750
-    assert [r["frame_ms"] for r in out] == [0, 250, 500, 750]
-    for r in out:
-        img = codecs.decode_bmp(bytes(r["frame"]))
-        assert img.shape == (4, 4, 3)
-    # 5 source frames, 4 samples: indices 0,1,2,3 -> distinct frames
-    assert len({bytes(r["frame"]) for r in out}) == 4
 
 
 # ---------------------------------------------------------------------

@@ -141,3 +141,22 @@ def test_ewma_alpha_one_is_identity(spark):
     df = spark.createDataFrame(rows, "event_type string, ts timestamp")
     out = ewma_daily(df, alpha=1.0, horizon=5).collect()
     assert all(r.ewma == float(r.x) for r in out)
+
+
+def test_ewma_alpha_one_under_sort_merge_join(spark):
+    """alpha = 1 zeroes the weight sum of every target day without data
+    of its own; the final join drops those days, but a sort-merge join
+    computes the aggregate's division first.  Under ANSI mode that
+    raised DIVIDE_BY_ZERO, so the result depended on the join the
+    planner picked."""
+    d0 = dt.datetime(2024, 1, 1)
+    rows = [("k", d0), ("k", d0), ("k", d0 + dt.timedelta(days=1))]
+    df = spark.createDataFrame(rows, "event_type string, ts timestamp")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = ewma_daily(df, alpha=1.0, horizon=5).collect()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert sorted((str(r.day), r.x, r.ewma) for r in out) == [
+        ("2024-01-01", 2, 2.0), ("2024-01-02", 1, 1.0),
+    ]
