@@ -492,23 +492,29 @@ def distinct_delta_components(
     # gap deltas and interval lengths in ONE pass over `pairs` (a union
     # of two filtered branches computes the window subtree twice);
     # when() without otherwise yields a null struct, filtered below.
+    # Only the (a, b) endpoints are exploded; the delta expression runs
+    # in the projection after the Generate.  Inside the Generate, the
+    # two delta structs made the stage's generated code exceed the
+    # JVM's 64 KB method limit, so Spark fell back from whole-stage
+    # codegen on every inference.
     origin = F.coalesce(F.col("__prev_e"), F.col("__prev_s"))
-    comps = [
+    ends = [
         F.when(
             F.col("__prev_s").isNotNull() & (F.col("__s") > origin),
-            delta_components_col(origin, F.col("__s")),
+            F.struct(origin.alias("a"), F.col("__s").alias("b")),
         )
     ]
     if has_end:
-        comps.append(
+        ends.append(
             F.when(
                 e_col.isNotNull(),
-                delta_components_col(F.col("__s"), e_col),
+                F.struct(F.col("__s").alias("a"), e_col.alias("b")),
             )
         )
     out = (
-        pairs.select(*keys, F.explode(F.array(*comps)).alias("__d"))
-        .where(F.col("__d").isNotNull())
+        pairs.select(*keys, F.explode(F.array(*ends)).alias("__p"))
+        .where(F.col("__p").isNotNull())
+        .select(*keys, delta_components_col(F.col("__p.a"), F.col("__p.b")).alias("__d"))
     )
     out = out.select(*keys, _normalize_delta_struct(F.col("__d")).alias("__d"))
     return out.select(*keys, "__d.*").distinct()

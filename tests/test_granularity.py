@@ -269,3 +269,29 @@ def test_grouped_inference(spark):
     df = spark.createDataFrame(rows, "k int, ts timestamp")
     got = infer_granularity_grouped(df, keys=["k"], ts_col="ts")
     assert got == [(1, "1 day"), (2, "6 hours")]
+
+
+def test_delta_inference_compiles_without_codegen_fallback(spark):
+    """The delta decomposition compiles under whole-stage codegen.  With
+    the fallback off, a stage whose generated code exceeds the JVM's
+    64 KB method limit raises instead of quietly running interpreted
+    (the algebra's granularity mode hit that on every inference)."""
+    from datetime import datetime, timedelta
+    from grass_spark.functions.granularity import (
+        infer_granularity_from_df, infer_granularity_grouped)
+    from pyspark.sql import functions as F
+
+    times = [
+        (datetime(2001, 1, 1) + timedelta(days=3 * i),
+         datetime(2001, 1, 1) + timedelta(days=3 * i + 1))
+        for i in range(10)
+    ]
+    df = _mk_ts_df(spark, times, end=True)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert infer_granularity_from_df(df, "ts", "te") == "1 day"
+        assert infer_granularity_from_df(df, "ts", "te", assume_small=True) == "1 day"
+        keyed = df.withColumn("k", F.lit(1))
+        assert infer_granularity_grouped(keyed, ["k"], "ts", "te") == [(1, "1 day")]
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")

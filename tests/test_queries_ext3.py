@@ -1,4 +1,4 @@
-"""Oracle parity for the third-wave driver queries (queries_ext3) at
+"""Oracle parity for the third-wave driver queries at
 sf0.001 — the same compare the driver's CORRECTNESS gate runs at
 sf0.01: row count, sorted column names, and exact sorted values.
 """
@@ -10,10 +10,20 @@ import math
 import duckdb
 import pytest
 
-from grass_spark.queries_ext3 import EXT3_ORACLES, EXT3_QUERIES
+from grass_spark.queries import ORACLES, QUERIES
 
 SF = "/root/testdata/sf0.001"
 TABLES = ("events", "documents", "embeddings", "orders", "lineitem")
+# The keys of the third query wave: temporal and algebra operators that
+# round 1 left unit-only, plus the round-4 corpus-hygiene queries.
+THIRD_WAVE = (
+    "shift_extents", "agg_relative", "sample_granules", "topology_census",
+    "jaccard_verify", "simhash_portable", "group_granules", "algebra_select",
+    "merge_extract", "algebra_condition", "algebra_gran", "algebra_gran_cond",
+    "near_dedup_keep", "sketch_cascade_day", "heavy_hitters", "contamination",
+    "decontaminate_keep", "chunk_dedup", "pack_sequences", "corpus_mixture",
+    "mixture_sample", "pii_redact", "repetition_stats", "lm_perplexity",
+)
 
 
 @pytest.fixture(scope="module")
@@ -37,16 +47,16 @@ def _norm(cols, rows):
     return sorted(cols), sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
-@pytest.mark.parametrize("name", sorted(EXT3_QUERIES))
+@pytest.mark.parametrize("name", sorted(THIRD_WAVE))
 def test_oracle_parity(spark, con, name):
-    sdf = EXT3_QUERIES[name](spark, SF)
+    sdf = QUERIES[name](spark, SF)
     s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    if name not in EXT3_ORACLES:
+    if name not in ORACLES:
         # rows-only query (iterative op, no SQL oracle — e.g.
         # near_dedup_keep's connected components): non-vacuity only
         assert len(s_rows) > 0
         return
-    rel = con.execute(EXT3_ORACLES[name])
+    rel = con.execute(ORACLES[name])
     d_cols = [d[0] for d in rel.description]
     d_rows = rel.fetchall()
     sc, sr = _norm(s_cols, s_rows)
@@ -73,7 +83,7 @@ def test_simhash_default_path_same_shape(spark):
 
 
 def test_topology_census_no_cartesian(spark):
-    df = EXT3_QUERIES["topology_census"](spark, SF)
+    df = QUERIES["topology_census"](spark, SF)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -83,7 +93,7 @@ def test_topology_census_no_cartesian(spark):
 
 
 def test_jaccard_verify_no_cartesian(spark):
-    df = EXT3_QUERIES["jaccard_verify"](spark, SF)
+    df = QUERIES["jaccard_verify"](spark, SF)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -93,7 +103,7 @@ def test_jaccard_verify_no_cartesian(spark):
 
 
 def test_algebra_select_is_semi_join(spark):
-    df = EXT3_QUERIES["algebra_select"](spark, SF)
+    df = QUERIES["algebra_select"](spark, SF)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"

@@ -550,7 +550,7 @@ def test_sig_fold_equals_exploded_aggregate(spark):
     2-arg-lambda trap: a second lambda parameter silently receives the
     ARRAY INDEX and corrupts every slot)."""
     from grass_spark.operators.dedup import with_shingles
-    from grass_spark.queries_ext import N_SIG
+    from grass_spark.queries.corpus import N_SIG
 
     texts = [
         (0, "the quick brown fox jumps over the lazy dog again and again"),
