@@ -13,7 +13,7 @@ with ``np.packbits``) plus a variable-width payload stream whose
 offsets are recoverable from the class codes alone.  Every step of
 encode AND decode is then a whole-array numpy operation — zero
 per-value Python, which is what makes the codec legal inside
-Arrow-backed pandas UDFs under the engine's no-per-row-Python rule.
+Arrow UDFs under the engine's no-per-row-Python rule.
 
 Classes (both streams):
   0: delta-of-delta == 0 / XOR == 0            (0 payload bits)
@@ -25,6 +25,14 @@ Timestamps are int64 microseconds; dods are zigzag-encoded before
 classification.  Floats are bit-cast to uint64 and XORed with the
 previous value (prefix-xor <=> cumulative-xor on decode).  NULLs are
 carried in a separate validity bitmap (GRASS NULL-cell analog).
+
+Segmented kernels: every codec works on a *batch* of blocks at once —
+the values of all blocks concatenated, plus one length per block
+(``lengths``).  Diffs, XORs and cumulative sums reset at block starts,
+and the encoders return all blobs as one byte buffer plus Arrow-style
+``offsets`` (blob ``i`` is ``data[offsets[i]:offsets[i + 1]]``).  The
+per-block ``encode_*``/``decode_*`` functions are the one-segment case,
+so a blob is the same bytes whichever way it was made.
 """
 
 from __future__ import annotations
@@ -32,7 +40,8 @@ from __future__ import annotations
 import numpy as np
 
 _MAGIC = 0x47  # 'G'
-_CLASS_BITS = np.array([0, 16, 32, 64], dtype=np.int64)
+_HEAD = 10  # magic, version, n as little-endian int64
+_WIDTH = np.array([0, 2, 4, 8], dtype=np.int64)  # payload bytes per class
 
 
 def _zigzag(x: np.ndarray) -> np.ndarray:
@@ -53,133 +62,236 @@ def _classify(u: np.ndarray) -> np.ndarray:
     return cls
 
 
-def _pack_payload(u: np.ndarray, cls: np.ndarray) -> bytes:
-    """Concatenate per-value little-endian payloads of 0/2/4/8 bytes."""
-    nbytes = (_CLASS_BITS[cls] // 8).astype(np.int64)
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    # byte offsets of each value's payload
-    offs = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    le = u.astype("<u8").view(np.uint8).reshape(-1, 8)
-    for c, width in ((1, 2), (2, 4), (3, 8)):
-        sel = cls == c
-        if not sel.any():
-            continue
-        base = offs[sel]
-        idx = base[:, None] + np.arange(width)
-        out[idx.ravel()] = le[sel, :width].ravel()
-    return out.tobytes()
+# ---------------------------------------------------------------------------
+# segment helpers
+# ---------------------------------------------------------------------------
 
 
-def _unpack_payload(buf: np.ndarray, cls: np.ndarray) -> np.ndarray:
-    nbytes = (_CLASS_BITS[cls] // 8).astype(np.int64)
-    offs = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    out = np.zeros((len(cls), 8), dtype=np.uint8)
-    for c, width in ((1, 2), (2, 4), (3, 8)):
-        sel = cls == c
-        if not sel.any():
-            continue
-        base = offs[sel]
-        idx = base[:, None] + np.arange(width)
-        out[sel, :width] = buf[idx.ravel()].reshape(-1, width)
-    return out.view("<u8").ravel().astype(np.uint64)
+def _starts(lengths: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum: where each segment begins."""
+    return np.add.accumulate(lengths) - lengths
 
 
-def _encode_u64_stream(u: np.ndarray) -> bytes:
-    cls = _classify(u)
-    head = np.array([_MAGIC, 1], dtype=np.uint8).tobytes()  # magic, version
-    n = np.array([len(u)], dtype="<i8").tobytes()
-    cls_packed = np.packbits(
-        ((cls[:, None] >> np.array([1, 0], dtype=np.uint8)) & 1).astype(np.uint8).ravel()
-    ).tobytes()
-    return head + n + cls_packed + _pack_payload(u, cls)
+def _offsets(lengths: np.ndarray) -> np.ndarray:
+    """Arrow-style offsets: ``[0, l0, l0 + l1, ...]``."""
+    out = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.add.accumulate(lengths, out=out[1:])
+    return out
 
 
-def _decode_u64_stream(buf: bytes) -> np.ndarray:
+def _spread(base: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Positions ``base[i] + 0 .. base[i] + lengths[i] - 1``, concatenated."""
+    ends = np.add.accumulate(lengths)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.repeat(base - (ends - lengths), lengths) + np.arange(total)
+
+
+def _first(lengths: np.ndarray) -> np.ndarray:
+    """Index of each non-empty segment's first value."""
+    return _starts(lengths)[lengths > 0]
+
+
+def _prev(v: np.ndarray, first: np.ndarray) -> np.ndarray:
+    """The previous value within the segment; 0 before a segment's first."""
+    p = np.empty_like(v)
+    p[1:] = v[:-1]
+    p[first] = 0
+    return p
+
+
+def _seg_cumsum(x: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    cs = np.zeros(len(x) + 1, dtype=x.dtype)
+    np.add.accumulate(x, out=cs[1:])
+    return cs[1:] - np.repeat(cs[_starts(lengths)], lengths)
+
+
+def _seg_cumxor(x: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    acc = np.zeros(len(x) + 1, dtype=x.dtype)
+    np.bitwise_xor.accumulate(x, out=acc[1:])
+    return acc[1:] ^ np.repeat(acc[_starts(lengths)], lengths)
+
+
+def _seg_packbits(bits: np.ndarray, nbits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``np.packbits`` of each segment, each padded to whole bytes."""
+    nbytes = (nbits + 7) >> 3
+    padded = np.zeros(8 * int(np.add.reduce(nbytes)), dtype=np.uint8)
+    padded[_spread(_starts(nbytes) << 3, nbits)] = bits
+    return np.packbits(padded), nbytes
+
+
+def _seg_unpackbits(data: np.ndarray, at: np.ndarray, nbits: np.ndarray) -> np.ndarray:
+    """The first ``nbits[i]`` bits of the bytes at ``data[at[i]:]``."""
+    nbytes = (nbits + 7) >> 3
+    packed = data[_spread(at, nbytes)]
+    return np.unpackbits(packed)[_spread(_starts(nbytes) << 3, nbits)]
+
+
+def _join(parts: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
+    """Interleave per-segment pieces: blob ``i`` is piece ``i`` of each
+    part in turn.  Returns ``(data, offsets)``."""
+    offsets = _offsets(sum(n for _, n in parts))
+    data = np.empty(int(offsets[-1]), dtype=np.uint8)
+    at = offsets[:-1]
+    for piece, n in parts:
+        data[_spread(at, n)] = piece
+        at = at + n
+    return data, offsets
+
+
+def _one(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
+    """One blob as a batch of one: ``(data, offsets)``."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if len(b) < 10 or b[0] != _MAGIC:
-        raise ValueError("bad block header")
-    n = int(np.frombuffer(b[2:10], dtype="<i8")[0])
-    cls_bytes = (2 * n + 7) // 8
-    bits = np.unpackbits(b[10:10 + cls_bytes])[: 2 * n].reshape(-1, 2)
-    cls = (bits[:, 0] << 1 | bits[:, 1]).astype(np.uint8)
-    return _unpack_payload(b[10 + cls_bytes:], cls)
+    return b, np.array([0, len(b)], dtype=np.int64)
 
 
 # ---------------------------------------------------------------------------
-# public codecs
+# the uint64 stream: header, 2-bit class codes, variable-width payload
+# ---------------------------------------------------------------------------
+
+
+def _encode_u64(u: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    cls = _classify(u)
+    head = np.zeros((len(lengths), _HEAD), dtype=np.uint8)
+    head[:, 0] = _MAGIC
+    head[:, 1] = 1  # version
+    head[:, 2:] = lengths.astype("<i8").view(np.uint8).reshape(-1, 8)
+    cls_bits = ((cls[:, None] >> np.array([1, 0], dtype=np.uint8)) & 1).ravel()
+    cls_bytes, ncls = _seg_packbits(cls_bits, 2 * lengths)
+    # payload: each value's low 0/2/4/8 little-endian bytes, in order
+    width = _WIDTH[cls]
+    keep = np.arange(8) < width[:, None]
+    payload = u.astype("<u8").view(np.uint8).reshape(-1, 8)[keep]
+    cw = _offsets(width)
+    ends = np.add.accumulate(lengths)
+    npay = cw[ends] - cw[ends - lengths]
+    return _join([
+        (head.ravel(), np.full(len(lengths), _HEAD, dtype=np.int64)),
+        (cls_bytes, ncls),
+        (payload, npay),
+    ])
+
+
+def _decode_u64(data: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    at = offsets[:-1].astype(np.int64)
+    if (offsets[1:] - offsets[:-1] < _HEAD).any() or (data[at] != _MAGIC).any():
+        raise ValueError("bad block header")
+    n = data[at[:, None] + np.arange(2, _HEAD)].view("<i8").ravel().astype(np.int64)
+    bits = _seg_unpackbits(data, at + _HEAD, 2 * n).reshape(-1, 2)
+    cls = bits[:, 0] << 1 | bits[:, 1]
+    width = _WIDTH[cls]
+    # each value's payload position: its offset inside the block's
+    # payload plus where that payload begins in ``data``
+    cw = _offsets(width)
+    pay = at + (_HEAD + ((2 * n + 7) >> 3))
+    pos = cw[:-1] + np.repeat(pay - cw[_starts(n)], n)
+    keep = np.arange(8) < width[:, None]
+    out = np.zeros((len(cls), 8), dtype=np.uint8)
+    out[keep] = data[(pos[:, None] + np.arange(8))[keep]]
+    return out.view("<u8").ravel().astype(np.uint64), n
+
+
+# ---------------------------------------------------------------------------
+# segmented codecs
+# ---------------------------------------------------------------------------
+
+
+def encode_timestamps_segments(ts_us: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Delta-of-delta encode each segment of int64 microsecond
+    timestamps.  A segment's first value is carried verbatim in slot 0
+    (zigzagged), so each blob is self-contained."""
+    ts = np.asarray(ts_us, dtype=np.int64)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    first = _first(lengths)
+    deltas = ts - _prev(ts, first)
+    deltas[first] = 0
+    dod = deltas - _prev(deltas, first)
+    dod[first] = ts[first]
+    return _encode_u64(_zigzag(dod), lengths)
+
+
+def decode_timestamps_segments(data: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    dod, n = _decode_u64(data, offsets)
+    dod = _unzigzag(dod)
+    first = _first(n)
+    base = dod[first]
+    dod[first] = 0
+    ts = _seg_cumsum(_seg_cumsum(dod, n), n) + np.repeat(base, n[n > 0])
+    return ts.astype(np.int64), n
+
+
+def encode_floats_segments(vals: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """XOR-encode each segment of float64 values against the previous
+    value.  NaN is a legal value and round-trips bit-exactly."""
+    v = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    return _encode_u64(v ^ _prev(v, _first(lengths)), lengths)
+
+
+def decode_floats_segments(data: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    x, n = _decode_u64(data, offsets)
+    return _seg_cumxor(x, n).view(np.float64), n
+
+
+def encode_ints_segments(vals: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Delta encode each segment of int64 metric values (counts are
+    near-constant per conversation, so deltas are tiny)."""
+    v = np.asarray(vals, dtype=np.int64)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    return _encode_u64(_zigzag(v - _prev(v, _first(lengths))), lengths)
+
+
+def decode_ints_segments(data: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    d, n = _decode_u64(data, offsets)
+    return _seg_cumsum(_unzigzag(d), n).astype(np.int64), n
+
+
+def encode_validity_segments(mask: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One validity bitmap (True = present) per segment."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    data, nbytes = _seg_packbits(np.asarray(mask, dtype=bool), lengths)
+    return data, _offsets(nbytes)
+
+
+def decode_validity_segments(data: np.ndarray, offsets: np.ndarray, n: np.ndarray) -> np.ndarray:
+    return _seg_unpackbits(data, offsets[:-1].astype(np.int64), np.asarray(n, dtype=np.int64)).astype(bool)
+
+
+# ---------------------------------------------------------------------------
+# per-block codecs: the one-segment case
 # ---------------------------------------------------------------------------
 
 
 def encode_timestamps(ts_us: np.ndarray) -> bytes:
     """Delta-of-delta encode int64 microsecond timestamps."""
-    ts = np.asarray(ts_us, dtype=np.int64)
-    if len(ts) == 0:
-        return _encode_u64_stream(np.empty(0, dtype=np.uint64))
-    deltas = np.diff(ts, prepend=ts[0])        # first delta = 0
-    dod = np.diff(deltas, prepend=deltas[0])   # first dod = 0
-    # first value is carried verbatim in slot 0 (zigzagged) so the
-    # stream is self-contained
-    dod[0] = ts[0]
-    return _encode_u64_stream(_zigzag(dod))
+    return encode_timestamps_segments(ts_us, [len(ts_us)])[0].tobytes()
 
 
 def decode_timestamps(buf: bytes) -> np.ndarray:
-    dod = _unzigzag(_decode_u64_stream(buf))
-    if len(dod) == 0:
-        return np.empty(0, dtype=np.int64)
-    first = dod[0]
-    dod = dod.copy()
-    dod[0] = 0
-    deltas = np.cumsum(dod)
-    ts = first + np.cumsum(deltas)
-    return ts.astype(np.int64)
+    return decode_timestamps_segments(*_one(buf))[0]
 
 
 def encode_floats(vals: np.ndarray) -> bytes:
-    """XOR-encode float64 values (prefix XOR vs previous value).
-
-    NaN is a legal value (used by callers for NULL slots) and
-    round-trips bit-exactly.
-    """
-    v = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
-    if len(v) == 0:
-        return _encode_u64_stream(np.empty(0, dtype=np.uint64))
-    x = v ^ np.concatenate(([np.uint64(0)], v[:-1]))
-    return _encode_u64_stream(x)
+    """XOR-encode float64 values (prefix XOR vs previous value)."""
+    return encode_floats_segments(vals, [len(vals)])[0].tobytes()
 
 
 def decode_floats(buf: bytes) -> np.ndarray:
-    x = _decode_u64_stream(buf)
-    if len(x) == 0:
-        return np.empty(0, dtype=np.float64)
-    # cumulative xor inverts the prefix xor
-    v = np.bitwise_xor.accumulate(x)
-    return v.view(np.float64)
+    return decode_floats_segments(*_one(buf))[0]
 
 
 def encode_ints(vals: np.ndarray) -> bytes:
-    """Delta encode int64 metric values (counts are near-constant per
-    conversation, so deltas are tiny)."""
-    v = np.asarray(vals, dtype=np.int64)
-    if len(v) == 0:
-        return _encode_u64_stream(np.empty(0, dtype=np.uint64))
-    d = np.diff(v, prepend=v[0])
-    d[0] = v[0]
-    return _encode_u64_stream(_zigzag(d))
+    """Delta encode int64 metric values."""
+    return encode_ints_segments(vals, [len(vals)])[0].tobytes()
 
 
 def decode_ints(buf: bytes) -> np.ndarray:
-    d = _unzigzag(_decode_u64_stream(buf))
-    if len(d) == 0:
-        return np.empty(0, dtype=np.int64)
-    return np.cumsum(d).astype(np.int64)
+    return decode_ints_segments(*_one(buf))[0]
 
 
 def encode_validity(mask: np.ndarray) -> bytes:
     """Validity bitmap (True = present)."""
-    return np.packbits(np.asarray(mask, dtype=bool)).tobytes()
+    return encode_validity_segments(mask, [len(mask)])[0].tobytes()
 
 
 def decode_validity(buf: bytes, n: int) -> np.ndarray:
-    return np.unpackbits(np.frombuffer(buf, dtype=np.uint8))[:n].astype(bool)
+    return decode_validity_segments(*_one(buf), [n])

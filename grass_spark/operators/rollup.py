@@ -420,18 +420,22 @@ class RollupPipeline:
 
     def _write_blocks(self, spark: SparkSession, name: str) -> dict:
         """Materialize the tier's Gorilla block store (delta-of-delta
-        timestamps + delta ints inside Arrow pandas UDFs) and return the
-        codec metrics (ratio recorded per tier in the manifest)."""
-        from grass_spark.operators.blocks import compress_blocks, compression_report
+        timestamps + delta ints inside batched Arrow UDFs) and return the
+        codec metrics (ratio recorded per tier in the manifest), observed
+        on the write itself rather than by reading the store back."""
+        from pyspark.sql import Observation
+
+        from grass_spark.operators.blocks import compress_blocks, report_columns
 
         tier = spark.read.parquet(self.tier_path(name))
         blocks = compress_blocks(
             tier, keys=self.keys, ts_col="bucket_start",
             int_cols=list(self.INT_METRICS), block="month",
         )
+        report = Observation()
         bpath = self.tier_path(name) + "_blocks"
-        blocks.write.mode("overwrite").parquet(bpath)
-        rep = compression_report(spark.read.parquet(bpath)).collect()[0]
+        blocks.observe(report, *report_columns()).write.mode("overwrite").parquet(bpath)
+        rep = report.get
         return {
             "n_blocks": int(rep["n_blocks"]), "n_points": int(rep["n_points"]),
             "raw_bytes": int(rep["raw_bytes"]), "comp_bytes": int(rep["comp_bytes"]),

@@ -7,8 +7,9 @@
   files actually on disk.
 * Write shape: one parquet file per (tier, day) by default; a day larger
   than AQE's advisory partition size is split over several files.
-* Job budget: the Spark jobs one run launches, so a re-added raw scan or
-  per-tier re-count fails loudly.
+* Job budget: the Spark jobs one run launches, without and with the
+  block codec, so a re-added raw scan, per-tier re-count or codec report
+  scan fails loudly.
 * Honest durations: the tier write wall lives on the tier record;
   partition entries do not claim it.
 """
@@ -234,6 +235,29 @@ def test_run_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("rollup-run-budget")
     assert len(jobs) <= RUN_JOB_BUDGET, f"{len(jobs)} jobs, budget {RUN_JOB_BUDGET}"
+
+
+#: Spark jobs of one fresh ``compress=True`` run over BASE_TURNS plus a
+#: full t1m block decode: the plain run's jobs, then the tier's schema
+#: read, the block write's shuffle and write (codec metrics observed on
+#: the write, no read-back), and the block store's schema read and
+#: decode.
+CODEC_JOB_BUDGET = 18
+
+
+def test_codec_run_job_budget(spark, tmp_path):
+    sc = spark.sparkContext
+    raw = _raw(spark, BASE_TURNS)
+    sc.setJobGroup("rollup-codec-budget", "RollupPipeline.run codec job budget")
+    try:
+        pipe = RollupPipeline(str(tmp_path / "tiers"), compress=True)
+        pipe.run(raw, input_fingerprint="fp")
+        pipe.read_tier_from_blocks(spark, "t1m").write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("rollup-codec-budget")
+    assert len(jobs) <= CODEC_JOB_BUDGET, f"{len(jobs)} jobs, budget {CODEC_JOB_BUDGET}"
 
 
 def test_partition_durations_within_tier_wall(spark, tmp_path):
