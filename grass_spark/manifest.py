@@ -128,7 +128,14 @@ class CheckpointManifest:
 
     # -- io -------------------------------------------------------------
     def _save(self) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._data, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        write_json_atomic(self.path, self._data, indent=1, sort_keys=True)
+
+
+def write_json_atomic(path: str, data, **dump_kw) -> None:
+    """Write ``data`` as JSON to ``path`` via a tmp file + ``os.replace``:
+    a crash mid-write leaves the previous file (or none), never a
+    truncated one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(data, f, **dump_kw)
+    os.replace(tmp, path)

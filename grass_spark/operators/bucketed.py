@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -86,12 +86,3 @@ def write_bucketed(
     w.saveAsTable(table)
     return spark.table(table)
 
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Scan a bucketed table (plain ``spark.table`` — named for intent).
-
-    The returned frame's scan reports ``Bucketed: true`` and exposes
-    HashPartitioning(key) to Catalyst; anything keyed by a superset of
-    the bucket key plans with no Exchange.
-    """
-    return spark.table(table)

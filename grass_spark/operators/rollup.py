@@ -51,10 +51,18 @@ from grass_spark.functions.granularity import (
     bucket_end_col,
     bucket_start_col,
 )
-from grass_spark.manifest import CheckpointManifest, PartitionEntry, TierRecord
+from grass_spark.datagen import ROLES
+from grass_spark.manifest import (
+    CheckpointManifest,
+    PartitionEntry,
+    TierRecord,
+    write_json_atomic,
+)
 from grass_spark.operators.bucketed import write_bucketed
 
-ROLES = ("user", "assistant", "system", "tool")
+#: integer metric columns carried by every tier, in column order
+TIER_METRICS = ("turn_cnt", *[f"n_{r}" for r in ROLES], "tool_calls",
+                "len_cnt", "len_sum", "len_min", "len_max")
 
 #: tier name -> granularity, in cascade order
 DEFAULT_TIERS = (("t1m", "1 minute"), ("t1h", "1 hour"), ("t1d", "1 day"))
@@ -72,6 +80,28 @@ def _role_count(role: str):
     return F.sum(F.when(F.col("role") == role, 1).otherwise(0)).alias(f"n_{role}")
 
 
+def raw_metric_aggs() -> list:
+    """:data:`TIER_METRICS` as aggregates over raw turns.  ``len_*`` skip
+    NULL text like every GRASS kernel skips NULL cells."""
+    length = F.length("text")
+    return [
+        F.count(F.lit(1)).alias("turn_cnt"),
+        *[_role_count(r) for r in ROLES],
+        F.count("tool").alias("tool_calls"),
+        F.count(length).alias("len_cnt"),
+        F.sum(length).alias("len_sum"),
+        F.min(length).alias("len_min"),
+        F.max(length).alias("len_max"),
+    ]
+
+
+def tier_metric_aggs() -> list:
+    """:data:`TIER_METRICS` re-aggregated from a finer tier: counts and
+    sums add, the length extremes fold by min/max."""
+    fold = {"len_min": F.min, "len_max": F.max}
+    return [fold.get(m, F.sum)(m).alias(m) for m in TIER_METRICS]
+
+
 def rollup_from_raw(
     df: DataFrame, granularity: str, origin, keys: list[str],
     sketches: bool = False,
@@ -79,7 +109,6 @@ def rollup_from_raw(
     """First tier: aggregate raw turns into buckets.
 
     All metrics are algebraic so upper tiers can re-aggregate exactly.
-    ``len_*`` skip NULL text like every GRASS kernel skips NULL cells.
 
     ``sketches=True`` additionally carries two mergeable DataSketches
     per bucket (operators/sketches.py): a KLL quantile sketch over turn
@@ -88,28 +117,13 @@ def rollup_from_raw(
     messages) by sketch merge instead of a raw re-scan.  Opt-in, never
     a parity substitute for the exact kernels.
     """
-    length = F.length("text")
     bucketed = df.withColumn("bucket_start", bucket_start_col("ts", granularity, origin))
     extra = []
     if sketches:
-        from grass_spark.operators.sketches import DEFAULT_K, DEFAULT_LG_K
+        from grass_spark.operators.sketches import sketch_aggs
 
-        extra = [
-            F.kll_sketch_agg_double(
-                length.cast("double"), F.lit(DEFAULT_K)
-            ).alias("len_kll"),
-            F.hll_sketch_agg(F.col("text"), F.lit(DEFAULT_LG_K)).alias("txt_hll"),
-        ]
-    return bucketed.groupBy(*keys, "bucket_start").agg(
-        F.count(F.lit(1)).alias("turn_cnt"),
-        *[_role_count(r) for r in ROLES],
-        F.count("tool").alias("tool_calls"),
-        F.count(length).alias("len_cnt"),
-        F.sum(length).alias("len_sum"),
-        F.min(length).alias("len_min"),
-        F.max(length).alias("len_max"),
-        *extra,
-    )
+        extra = sketch_aggs(F.length("text"), F.col("text"), "len_kll", "txt_hll")
+    return bucketed.groupBy(*keys, "bucket_start").agg(*raw_metric_aggs(), *extra)
 
 
 def rollup_from_tier(lower: DataFrame, granularity: str, origin, keys: list[str]) -> DataFrame:
@@ -123,20 +137,10 @@ def rollup_from_tier(lower: DataFrame, granularity: str, origin, keys: list[str]
     )
     extra = []
     if "len_kll" in lower.columns:
-        extra = [
-            F.kll_merge_agg_double("len_kll").alias("len_kll"),
-            F.hll_union_agg("txt_hll", True).alias("txt_hll"),
-        ]
-    return bucketed.groupBy(*keys, "bucket_start").agg(
-        F.sum("turn_cnt").alias("turn_cnt"),
-        *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
-        F.sum("tool_calls").alias("tool_calls"),
-        F.sum("len_cnt").alias("len_cnt"),
-        F.sum("len_sum").alias("len_sum"),
-        F.min("len_min").alias("len_min"),
-        F.max("len_max").alias("len_max"),
-        *extra,
-    )
+        from grass_spark.operators.sketches import sketch_merge_aggs
+
+        extra = sketch_merge_aggs("len_kll", "txt_hll")
+    return bucketed.groupBy(*keys, "bucket_start").agg(*tier_metric_aggs(), *extra)
 
 
 def with_derived(df: DataFrame, granularity: str) -> DataFrame:
@@ -200,8 +204,7 @@ class RollupPipeline:
     """
 
     #: integer metric columns carried by every tier (compressible)
-    INT_METRICS = ("turn_cnt", *[f"n_{r}" for r in ROLES], "tool_calls",
-                   "len_cnt", "len_sum", "len_min", "len_max")
+    INT_METRICS = TIER_METRICS
 
     def __init__(
         self,
@@ -287,8 +290,7 @@ class RollupPipeline:
                 # a pin with no tier files behind it (constructed-but-
                 # never-run pipeline, or a first run that crashed before
                 # any write) constrains nothing — re-pin
-                with open(pin_path, "w") as f:
-                    json.dump(pin, f)
+                write_json_atomic(pin_path, pin)
                 return
             raise ValueError(
                 f"tier store at {self.base_dir} was written with "
@@ -305,8 +307,7 @@ class RollupPipeline:
                 "and its files are not bucketed; re-open with "
                 "layout='plain' or publish into a fresh base_dir"
             )
-        with open(pin_path, "w") as f:
-            json.dump(pin, f)
+        write_json_atomic(pin_path, pin)
 
     def _resolve_auto_layout(self, day_counts: dict[str, int]) -> None:
         """Pick plain vs bucketed from MEASURED day density (the rule

@@ -27,7 +27,7 @@ standard error on distinct counts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from grass_spark.functions.granularity import bucket_start_col
@@ -36,6 +36,26 @@ from grass_spark.functions.granularity import bucket_start_col
 DEFAULT_K = 200
 #: HLL precision: 2^12 registers, ~1.6% relative standard error
 DEFAULT_LG_K = 12
+
+
+def sketch_aggs(
+    value: Column, distinct: Column, kll_name: str, hll_name: str,
+    *, k: int = DEFAULT_K, lg_k: int = DEFAULT_LG_K,
+) -> list[Column]:
+    """A KLL quantile sketch over ``value`` and an HLL distinct sketch
+    over ``distinct``: the finest tier's sketch aggregates."""
+    return [
+        F.kll_sketch_agg_double(value.cast("double"), F.lit(k)).alias(kll_name),
+        F.hll_sketch_agg(distinct, F.lit(lg_k)).alias(hll_name),
+    ]
+
+
+def sketch_merge_aggs(kll_name: str, hll_name: str) -> list[Column]:
+    """The coarser tier's sketches: merge the finer tier's by name."""
+    return [
+        F.kll_merge_agg_double(kll_name).alias(kll_name),
+        F.hll_union_agg(hll_name, True).alias(hll_name),
+    ]
 
 
 def sketch_from_raw(
@@ -58,16 +78,13 @@ def sketch_from_raw(
     bucketed = df.withColumn(
         "bucket_start", bucket_start_col(ts_col, granularity, origin)
     )
-    return bucketed.groupBy(*keys, "bucket_start").agg(
-        F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(k)).alias(
-            "val_kll"
-        ),
+    return bucketed.groupBy(*keys, "bucket_start").agg(*sketch_aggs(
+        F.col(value_col),
         # HLL accepts int/bigint/string/binary only; a string cast is
         # injective for numerics, a no-op for text
-        F.hll_sketch_agg(
-            F.col(distinct_col).cast("string"), F.lit(lg_k)
-        ).alias("dist_hll"),
-    )
+        F.col(distinct_col).cast("string"),
+        "val_kll", "dist_hll", k=k, lg_k=lg_k,
+    ))
 
 
 def sketch_from_tier(
@@ -83,8 +100,7 @@ def sketch_from_tier(
         "bucket_start", bucket_start_col(F.col("bucket_start"), granularity, origin)
     )
     return bucketed.groupBy(*keys, "bucket_start").agg(
-        F.kll_merge_agg_double("val_kll").alias("val_kll"),
-        F.hll_union_agg("dist_hll", True).alias("dist_hll"),
+        *sketch_merge_aggs("val_kll", "dist_hll")
     )
 
 

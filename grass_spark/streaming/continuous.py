@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grass_spark.operators.rollup import ROLES, _role_count
+from grass_spark.operators.rollup import TIER_METRICS, raw_metric_aggs
 
 RAW_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -58,25 +58,15 @@ def stream_minute_tier(
         .option("maxFilesPerTrigger", 16)
         .parquet(input_path)
     )
-    length = F.length("text")
     return (
         raw.withWatermark("ts", watermark)
         .groupBy(*keys, F.window("ts", "1 minute").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("turn_cnt"),
-            *[_role_count(r) for r in ROLES],
-            F.count("tool").alias("tool_calls"),
-            F.count(length).alias("len_cnt"),
-            F.sum(length).alias("len_sum"),
-            F.min(length).alias("len_min"),
-            F.max(length).alias("len_max"),
-        )
+        .agg(*raw_metric_aggs())
         .select(
             *keys,
             F.col("win.start").alias("bucket_start"),
             F.col("win.end").alias("bucket_end"),
-            "turn_cnt", *[f"n_{r}" for r in ROLES], "tool_calls",
-            "len_cnt", "len_sum", "len_min", "len_max",
+            *TIER_METRICS,
         )
     )
 

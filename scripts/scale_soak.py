@@ -13,16 +13,29 @@ under real write pressure, and manifest bookkeeping at ~10^2 days ×
 Prints one JSON line: {"turns": N, "gen_sec": g, "pipeline_sec": p,
 "turns_per_sec": r, ...}.  The generated raw table is cached on disk
 (marker file) so re-runs measure only the pipeline.
+
+The other 29 legs soak one operator family each; one selector flag
+(``--dsir-docs N``, ``--seq-events N``, ... see ``--help``) picks a
+leg, and two selector flags are a usage error.  Every leg is declared
+once in the registry below, with its flags, and runs on a small harness:
+``cached`` generates an input once, ``lohi`` times a leg at lo=2 and
+hi=``--cores`` in interleaved rounds (such a leg needs ``--cores`` > 2),
+and ``hot_bot_events``/``boiler_docs`` build the adversarial inputs
+several legs share.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import functools
 import json
 import os
 import shutil
 import sys
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,33 +48,308 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
+#: the lo parallelism of every lo/hi leg; hi is --cores
+LO_CORES = 2
 
+
+# ----------------------------------------------------------------- harness
+@dataclass(frozen=True)
+class Leg:
+    """One soak leg: ``fn(args)`` runs it and prints its JSON line."""
+
+    selector: str | None  # the flag that picks it; None = the default leg
+    help: str | None
+    fn: Callable
+    flags: tuple = ()  # its own (names, argparse kwargs) pairs
+    lohi: bool = False  # times itself at LO_CORES and --cores
+
+    @property
+    def dest(self) -> str | None:
+        return self.selector and self.selector.lstrip("-").replace("-", "_")
+
+
+LEGS: list[Leg] = []
+
+
+def leg(selector: str | None, help: str | None, *flags, lohi: bool = False):
+    """Register the decorated function as the leg ``selector`` picks."""
+    def register(fn):
+        LEGS.append(Leg(selector, help, fn, flags, lohi))
+        return fn
+    return register
+
+
+def flag(*names, **kwargs) -> tuple:
+    """A leg's own argparse option, declared with the leg."""
+    return names, kwargs
+
+
+def session(app: str, cores: int, min_partitions: int = 32,
+            quiet: bool = False, conf: dict | None = None):
+    """A leg's session at ``cores``: max(cores*4, min_partitions) shuffle
+    partitions; ``quiet`` hides the console progress bar."""
+    from grass_spark.session import get_spark
+
+    extra = {"spark.ui.showConsoleProgress": "false"} if quiet else {}
+    return get_spark(
+        app, cores=cores, shuffle_partitions=max(cores * 4, min_partitions),
+        extra_conf={**extra, **(conf or {})},
+    )
+
+
+def cached(path: str, app: str, build: Callable, partitions: int = 64) -> float:
+    """Generate-once input: unless ``path`` has its ``_done`` marker,
+    write ``build(spark)`` there from an all-cores session named ``app``.
+    Returns the generation wall (0.0 when the cache is reused)."""
+    from grass_spark.session import get_spark
+
+    marker = path + "_done"
+    if os.path.exists(marker):
+        return 0.0
+    spark = get_spark(app, cores=None, shuffle_partitions=partitions)
+    t0 = time.perf_counter()
+    build(spark).write.mode("overwrite").parquet(path)
+    gen_sec = round(time.perf_counter() - t0, 1)
+    spark.stop()
+    open(marker, "w").write("ok")
+    return gen_sec
+
+
+def cached_docs(args, n: int, app: str = "soak_doc_gen") -> tuple[str, float]:
+    """``synth_documents(n)`` cached as ``docs_<n>`` (shared by the doc legs)."""
+    from grass_spark.datagen import synth_documents
+
+    path = os.path.join(args.data, f"docs_{n}")
+    return path, cached(path, app, lambda spark: synth_documents(spark, n_docs=n))
+
+
+def cached_embeddings(args, n: int) -> tuple[str, float]:
+    """``synth_embeddings(n)`` cached as ``embs_<n>``."""
+    from grass_spark.datagen import synth_embeddings
+
+    path = os.path.join(args.data, f"embs_{n}")
+    return path, cached(
+        path, "soak_emb_gen", lambda spark: synth_embeddings(spark, n_vecs=n)
+    )
+
+
+def lohi(args, *runs: Callable, rounds: int = 2,
+         per_sec: dict[str, float] | None = None) -> tuple[dict, object]:
+    """The lo/hi scaling protocol: ``rounds`` interleaved rounds, min-of-N
+    (host noise is one-sided).  Each round calls every ``run(cores,
+    clock)`` at LO_CORES, then at --cores; a run times its measured
+    region with ``with clock(name):`` (default name "") and returns its
+    result.  Returns the fields — cores_lo/cores_hi and, per clock name,
+    sec_lo/sec_hi/times_lo/times_hi, one ``round(work / sec_hi)`` rate
+    per ``per_sec`` item, speedup and efficiency; the "" clock's fields
+    sit at the top level, a named clock's under its name — and the last
+    run's result."""
+    lo, hi = LO_CORES, args.cores
+    times: dict[str, tuple[list, list]] = {}
+    result = None
+    for _ in range(rounds):
+        for run in runs:
+            for level, cores in enumerate((lo, hi)):
+                @contextlib.contextmanager
+                def clock(name: str = "", level: int = level):
+                    t0 = time.perf_counter()
+                    yield
+                    times.setdefault(name, ([], []))[level].append(
+                        round(time.perf_counter() - t0, 1))
+
+                result = run(cores, clock)
+    out: dict = {"cores_lo": lo, "cores_hi": hi}
+    for name, (t_lo, t_hi) in times.items():
+        sec_lo, sec_hi = min(t_lo), min(t_hi)
+        speedup = round(sec_lo / sec_hi, 3)
+        fields = {
+            "sec_lo": sec_lo, "sec_hi": sec_hi,
+            "times_lo": t_lo, "times_hi": t_hi,
+            **{k: round(work / sec_hi) for k, work in (per_sec or {}).items()},
+            "speedup": speedup,
+            "efficiency": round(speedup / (hi / lo), 3),
+        }
+        if name:
+            out[name] = fields
+        else:
+            out.update(fields)
+    return out, result
+
+
+def hot_bot_events(spark, n: int, cores: int):
+    """N synthetic events (view/click/signup/purchase/error) over 90 days
+    from 2024-01-01, checkpointed.  Returns (events, n_users)."""
+    from pyspark.sql import functions as F
+
+    n_users = max(n // 2000, 10)
+    h = F.abs(F.xxhash64(F.lit(11), "event_id"))
+    types = F.array(
+        F.lit("view"), F.lit("view"), F.lit("view"), F.lit("view"),
+        F.lit("click"), F.lit("click"), F.lit("signup"),
+        F.lit("purchase"), F.lit("error"), F.lit("error"),
+    )
+    ev = (
+        spark.range(n).withColumnRenamed("id", "event_id")
+        .repartition(cores * 4)
+        .select(
+            "event_id",
+            # bot user 0 holds ~10% of events; the rest spread evenly
+            F.when(F.col("event_id") % 10 == 0, F.lit(0).cast("bigint"))
+            .otherwise(1 + F.abs(F.xxhash64(F.lit(3), "event_id"))
+                       % F.lit(n_users)).alias("user_id"),
+            F.timestamp_seconds(
+                F.lit(1704067200) + (h % F.lit(90 * 86400))
+            ).alias("ts"),
+            F.element_at(types, (h % 10 + 1).cast("int"))
+            .alias("event_type"),
+            ((h % 10000) / F.lit(100.0)).alias("value"),
+        )
+        .localCheckpoint()
+    )
+    return ev, n_users
+
+
+def boiler_docs(spark, n: int, cores: int, boiler: str, words: int):
+    """N docs of ``words`` unique words each; every 3rd doc starts with
+    the SAME ``boiler`` text.  Checkpointed.  Returns (docs, n_boiler)."""
+    from pyspark.sql import functions as F
+
+    body = F.concat_ws(
+        " ",
+        *[F.concat(F.lit(f"w{j}u"), (F.xxhash64(F.col("doc_id"), F.lit(j)) % 99999).cast("string"))
+          for j in range(words)],
+    )
+    docs = (
+        spark.range(n).withColumnRenamed("id", "doc_id")
+        .repartition(cores * 4)
+        .withColumn(
+            "text",
+            F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit(boiler + " "), body))
+            .otherwise(body),
+        )
+        .localCheckpoint()
+    )
+    return docs, n // 3 + (1 if n % 3 else 0)
+
+
+# -------------------------------------------------------------------- legs
+def _parse_buckets(s: str):
+    if "=" in s:
+        return {k: int(v) for k, v in (p.split("=") for p in s.split(","))}
+    return int(s)
+
+
+@leg(
+    None, None,
+    flag("--turns", type=int, default=100_000_000),
+    flag("--layout", choices=("plain", "bucketed"), default="bucketed"),
+    flag("--buckets", type=_parse_buckets, default=256,
+         help="int or per-tier spec 't1m=256,t1h=64,t1d=16'"),
+    flag("--compress", action="store_true"),
+    flag("--sketches", action="store_true",
+         help="carry KLL/HLL sketches through the tiers and "
+              "measure the approx-holistic read path (day "
+              "quantiles from stored sketches) against the "
+              "exact raw re-scan it replaces"),
+)
+def _rollup_soak(args) -> None:
+    """The persisted 3-tier rollup (the module docstring's leg)."""
+    from grass_spark.datagen import synth_transcripts
+    from grass_spark.operators.rollup import RollupPipeline
+
+    n_convs = args.turns // args.avg_turns
+    raw_path = os.path.join(args.data, f"raw_{n_convs}_{args.avg_turns}")
+    gen_sec = cached(raw_path, "soak_gen", lambda spark: synth_transcripts(
+        spark, n_convs=n_convs, avg_turns=args.avg_turns, seed=42,
+        partitions=256,
+    ), partitions=256)
+
+    tiers_dir = os.path.join(
+        args.data,
+        f"tiers_{args.layout}{'_c' if args.compress else ''}"
+        f"{'_sk' if args.sketches else ''}",
+    )
+    shutil.rmtree(tiers_dir, ignore_errors=True)
+
+    spark = session("soak_pipeline", args.cores, conf={
+        "spark.sql.warehouse.dir": os.path.join(args.data, "wh")})
+    raw = spark.read.parquet(raw_path)
+    turns = raw.count()
+    pipe = RollupPipeline(
+        tiers_dir, layout=args.layout, buckets=args.buckets,
+        compress=args.compress, sketches=args.sketches,
+    )
+    t0 = time.perf_counter()
+    results = pipe.run(raw, input_fingerprint="soak")
+    pipeline_sec = round(time.perf_counter() - t0, 1)
+
+    sketch_read = None
+    if args.sketches:
+        from pyspark.sql import functions as F
+
+        def _noop(df):
+            df.write.format("noop").mode("overwrite").save()
+
+        # the read the sketch path buys: day-level holistic stats from
+        # the STORED day-tier sketches (no raw scan) ...
+        t0 = time.perf_counter()
+        _noop(pipe.read_tier_approx(spark, "t1d", {"median": 0.5, "perc90": 0.9}))
+        approx_sec = round(time.perf_counter() - t0, 2)
+        # ... vs the exact raw re-scan it replaces
+        t0 = time.perf_counter()
+        _noop(
+            raw.withColumn("value", F.length("text").cast("double"))
+            .groupBy("conv_id", F.date_trunc("day", "ts").alias("d"))
+            .agg(
+                F.expr("percentile(value, array(0.5D, 0.9D))").alias("q"),
+                F.count_distinct("text").alias("nd"),
+            )
+        )
+        exact_sec = round(time.perf_counter() - t0, 2)
+        sketch_read = {
+            "approx_day_stats_sec": approx_sec,
+            "exact_raw_rescan_sec": exact_sec,
+            "read_speedup": round(exact_sec / max(approx_sec, 1e-9), 2),
+        }
+
+    out = {
+        "turns": int(turns),
+        "n_convs": n_convs,
+        "cores": args.cores,
+        "layout": args.layout,
+        "buckets": args.buckets,
+        "compress": bool(args.compress),
+        "gen_sec": gen_sec,
+        "pipeline_sec": pipeline_sec,
+        "turns_per_sec": round(turns / pipeline_sec),
+        "tiers": [
+            {"tier": r.name, "rows": r.rows_out, "days": len(r.days_written)}
+            for r in results
+        ],
+    }
+    if sketch_read:
+        out["sketches"] = True
+        out["sketch_read"] = sketch_read
+    spark.stop()
+    print(json.dumps(out))
+
+
+@leg("--dedup-docs",
+     "instead of the rollup soak, run the dedup "
+     "stack (LSH caps + CC rounds) over N synthetic "
+     "documents with known duplicate structure")
 def _dedup_soak(args) -> None:
     """near_dedup end-to-end over a duplicate-rich corpus: exercises the
     LSH bucket caps (a deliberate boilerplate hot bucket) and the
     pointer-doubling CC rounds at a scale the unit tests never reach."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_documents
     from grass_spark.operators.dedup import near_dedup
-    from grass_spark.session import get_spark
 
     n = args.dedup_docs
-    docs_path = os.path.join(args.data, f"docs_{n}")
-    marker = docs_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_docs_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(docs_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    docs_path, gen_sec = cached_docs(args, n, "soak_docs_gen")
 
-    spark = get_spark(
-        "soak_dedup", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_dedup", args.cores)
     docs = spark.read.parquet(docs_path)
     t0 = time.perf_counter()
     out = near_dedup(docs.select("doc_id", "text"), jaccard_threshold=0.8)
@@ -91,6 +379,10 @@ def _dedup_soak(args) -> None:
     spark.stop()
 
 
+@leg("--semdedup-vecs",
+     "instead of the rollup soak, run semantic "
+     "dedup over N planted-duplicate embeddings "
+     "with lo/hi-core scaling evidence", lohi=True)
 def _semdedup_soak(args) -> None:
     """SemDeDup end-to-end over a planted-duplicate embedding corpus:
     exercises the literal-centroid assignment, the within-cluster pair
@@ -99,72 +391,49 @@ def _semdedup_soak(args) -> None:
     asks for (interleaved lo/hi rounds, min-of-N)."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_embeddings
     from grass_spark.operators.semdedup import semantic_dedup
-    from grass_spark.session import get_spark
 
     n = args.semdedup_vecs
     k = max(16, n // 256)  # SemDeDup contract: k grows with N so
     # cluster population stays ~256 and the pair join stays bounded
-    vec_path = os.path.join(args.data, f"embs_{n}")
-    marker = vec_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_emb_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_embeddings(spark, n_vecs=n).write.mode("overwrite").parquet(vec_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    vec_path, gen_sec = cached_embeddings(args, n)
 
-    def one_run(cores: int) -> tuple[float, int, int, int]:
-        spark = get_spark(
-            "soak_semdedup", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-        )
+    def one_run(cores: int, clock) -> tuple[int, int, int]:
+        spark = session("soak_semdedup", cores)
         # the 200k-vec parquet is ~50 MB = 1-2 scan splits; repartition
         # so the map-side phases actually use the cores (at real scale
         # input splits provide this for free)
         emb = spark.read.parquet(vec_path).repartition(cores * 4)
-        t0 = time.perf_counter()
-        out = semantic_dedup(
-            emb.select("vec_id", "embedding"), k=k, threshold=0.9,
-            probes=2,  # soft assignment recovers boundary-split dups
-        )
-        flagged = out.filter(~F.col("keep")).select("vec_id")
-        truth = emb.filter(F.col("true_head") >= 0).select("vec_id")
-        n_planted = truth.count()
-        caught = truth.join(flagged, "vec_id").count()
-        n_flagged = flagged.count()
-        dt = round(time.perf_counter() - t0, 1)
+        with clock():
+            out = semantic_dedup(
+                emb.select("vec_id", "embedding"), k=k, threshold=0.9,
+                probes=2,  # soft assignment recovers boundary-split dups
+            )
+            flagged = out.filter(~F.col("keep")).select("vec_id")
+            truth = emb.filter(F.col("true_head") >= 0).select("vec_id")
+            n_planted = truth.count()
+            caught = truth.join(flagged, "vec_id").count()
+            n_flagged = flagged.count()
         spark.stop()
-        return dt, n_planted, caught, n_flagged
+        return n_planted, caught, n_flagged
 
-    lo, hi = 2, args.cores
-    times: dict[int, list[float]] = {lo: [], hi: []}
-    stats = None
-    for _ in range(3):  # interleaved rounds, min-of-3 (one-sided noise)
-        for cores in (lo, hi):
-            dt, n_planted, caught, n_flagged = one_run(cores)
-            times[cores].append(dt)
-            stats = (n_planted, caught, n_flagged)
-    n_planted, caught, n_flagged = stats
-    sec_lo, sec_hi = min(times[lo]), min(times[hi])
-    speedup = round(sec_lo / sec_hi, 3)
+    # interleaved rounds, min-of-3 (one-sided noise)
+    scaling, (n_planted, caught, n_flagged) = lohi(
+        args, one_run, rounds=3, per_sec={"vecs_per_sec_hi": n})
     print(json.dumps({
-        "vecs": n, "k": k, "gen_sec": gen_sec,
-        "cores_lo": lo, "cores_hi": hi,
-        "sec_lo": sec_lo, "sec_hi": sec_hi,
-        "times_lo": times[lo], "times_hi": times[hi],
-        "vecs_per_sec_hi": round(n / sec_hi),
-        "speedup": speedup,
-        "efficiency": round(speedup / (hi / lo), 3),
+        "vecs": n, "k": k, "gen_sec": gen_sec, **scaling,
         "planted": int(n_planted), "caught": int(caught),
         "recall": round(caught / max(n_planted, 1), 4),
         "false_positives": int(n_flagged - caught),
     }))
 
 
+@leg("--semdecon-vecs",
+     "run the semantic-decontamination soak at N "
+     "corpus vectors instead of the rollup soak",
+     flag("--bench-vecs", type=int, default=200,
+          help="broadcast benchmark size for --semdecon-vecs"),
+     lohi=True)
 def _semdecon_soak(args) -> None:
     """Semantic decontamination at 10^6 corpus vectors: the broadcast
     bench scoring pass (rows x |bench| fused HOF dot products, zero
@@ -172,186 +441,102 @@ def _semdecon_soak(args) -> None:
     lo/hi rounds, min-of-N — the north rule's two-parallelism protocol."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_embeddings
     from grass_spark.operators.semdecon import semantic_contamination
-    from grass_spark.session import get_spark
 
     n = args.semdecon_vecs
     nb = args.bench_vecs
-    vec_path = os.path.join(args.data, f"embs_{n}")
-    marker = vec_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_emb_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_embeddings(spark, n_vecs=n).write.mode("overwrite").parquet(vec_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    vec_path, gen_sec = cached_embeddings(args, n)
 
-    def one_run(cores: int) -> tuple[float, int]:
-        spark = get_spark(
-            "soak_semdecon", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock) -> int:
+        spark = session("soak_semdecon", cores, quiet=True)
         e = spark.read.parquet(vec_path).select("vec_id", "embedding")
         # ~50 MB parquet = 1-2 scan splits; spread the scoring pass
         corpus = e.filter(F.col("vec_id") >= nb).repartition(cores * 4)
         bench = e.filter(F.col("vec_id") < nb)
         corpus = corpus.localCheckpoint()  # input prep outside the clock
         bench = bench.localCheckpoint()
-        t0 = time.perf_counter()
-        out = semantic_contamination(corpus, bench)
-        n_flagged = out.filter(F.col("max_bench_cos") >= 0.9).count()
-        dt = round(time.perf_counter() - t0, 1)
+        with clock():
+            out = semantic_contamination(corpus, bench)
+            n_flagged = out.filter(F.col("max_bench_cos") >= 0.9).count()
         spark.stop()
-        return dt, n_flagged
+        return n_flagged
 
-    lo, hi = 2, args.cores
-    times: dict[int, list[float]] = {lo: [], hi: []}
-    n_flagged = 0
-    for _ in range(2):  # interleaved rounds, min-of-2
-        for cores in (lo, hi):
-            dt, n_flagged = one_run(cores)
-            times[cores].append(dt)
-    sec_lo, sec_hi = min(times[lo]), min(times[hi])
-    speedup = round(sec_lo / sec_hi, 3)
+    scaling, n_flagged = lohi(args, one_run, per_sec={
+        "vecs_per_sec_hi": n - nb, "cos_per_sec_hi": (n - nb) * nb})
     print(json.dumps({
-        "vecs": n - nb, "bench": nb, "gen_sec": gen_sec,
-        "cores_lo": lo, "cores_hi": hi,
-        "sec_lo": sec_lo, "sec_hi": sec_hi,
-        "times_lo": times[lo], "times_hi": times[hi],
-        "vecs_per_sec_hi": round((n - nb) / sec_hi),
-        "cos_per_sec_hi": round((n - nb) * nb / sec_hi),
-        "speedup": speedup,
-        "efficiency": round(speedup / (hi / lo), 3),
+        "vecs": n - nb, "bench": nb, "gen_sec": gen_sec, **scaling,
         "flagged_at_0.9": int(n_flagged),
     }))
 
 
+@leg("--drift-docs",
+     "run the corpus-drift (KL/JS) soak at N docs "
+     "instead of the rollup soak", lohi=True)
 def _drift_soak(args) -> None:
     """Corpus drift diagnostics (divergence.py) between two synthetic
     snapshot halves at 10^6 docs: two corpus token scans + a
     vocabulary-sized join/agg.  Interleaved lo/hi, min-of-2."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_documents
     from grass_spark.operators.divergence import corpus_divergence
-    from grass_spark.session import get_spark
 
     n = args.drift_docs
-    doc_path = os.path.join(args.data, f"docs_{n}")
-    marker = doc_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_doc_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(doc_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    doc_path, gen_sec = cached_docs(args, n)
 
-    def one_run(cores: int) -> tuple[float, float]:
-        spark = get_spark(
-            "soak_drift", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock) -> float:
+        spark = session("soak_drift", cores, quiet=True)
         d = spark.read.parquet(doc_path).select("doc_id", "text")
         d = d.repartition(cores * 4).localCheckpoint()
         a = d.filter(F.col("doc_id") % 2 == 0)
         b = d.filter(F.col("doc_id") % 2 == 1)
-        t0 = time.perf_counter()
-        row = corpus_divergence(a, b).first()
-        dt = round(time.perf_counter() - t0, 1)
+        with clock():
+            row = corpus_divergence(a, b).first()
         spark.stop()
-        return dt, float(row["js"])
+        return float(row["js"])
 
-    lo, hi = 2, args.cores
-    times: dict[int, list[float]] = {lo: [], hi: []}
-    js = 0.0
-    for _ in range(2):
-        for cores in (lo, hi):
-            dt, js = one_run(cores)
-            times[cores].append(dt)
-    sec_lo, sec_hi = min(times[lo]), min(times[hi])
-    speedup = round(sec_lo / sec_hi, 3)
+    scaling, js = lohi(args, one_run, per_sec={"docs_per_sec_hi": n})
     print(json.dumps({
-        "docs": n, "gen_sec": gen_sec,
-        "cores_lo": lo, "cores_hi": hi,
-        "sec_lo": sec_lo, "sec_hi": sec_hi,
-        "times_lo": times[lo], "times_hi": times[hi],
-        "docs_per_sec_hi": round(n / sec_hi),
-        "speedup": speedup,
-        "efficiency": round(speedup / (hi / lo), 3),
-        "js": round(js, 6),
+        "docs": n, "gen_sec": gen_sec, **scaling, "js": round(js, 6),
     }))
 
 
+@leg("--bm25-docs",
+     "BM25 retrieval soak: score 8 probe queries "
+     "over N synthetic docs (one tokenize scan, "
+     "two censuses, sharded top-k), lo/hi", lohi=True)
 def _bm25_soak(args) -> None:
     """BM25 retrieval at 10^6-doc scale: one tokenize scan feeds the
     checkpointed tf census; dl/df censuses + candidate join + sharded
     top-k run downstream.  8 probe queries of 3 vocab words each (~
     n*40/5000 matches per word — the candidate frame is corpus-
     fraction-sized, the realistic shape).  Interleaved lo/hi, min-of-2."""
-    from grass_spark.datagen import synth_documents
     from grass_spark.operators.search import bm25_search
-    from grass_spark.session import get_spark
 
     n = args.bm25_docs
-    doc_path = os.path.join(args.data, f"docs_{n}")
-    marker = doc_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_doc_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(doc_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
-
+    doc_path, gen_sec = cached_docs(args, n)
     probe = [
         (i, f"w{(11 * i) % 5000} w{(37 * i + 3) % 5000} w{(101 * i + 7) % 5000}")
         for i in range(1, 9)
     ]
 
-    def one_run(cores: int) -> tuple[float, int]:
-        spark = get_spark(
-            "soak_bm25", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock) -> int:
+        spark = session("soak_bm25", cores, quiet=True)
         d = spark.read.parquet(doc_path).select("doc_id", "text")
         d = d.repartition(cores * 4).localCheckpoint()
         q = spark.createDataFrame(probe, "query_id int, q_text string")
-        t0 = time.perf_counter()
-        hits = bm25_search(d, q, top_k=10).count()
-        dt = round(time.perf_counter() - t0, 1)
+        with clock():
+            hits = bm25_search(d, q, top_k=10).count()
         spark.stop()
-        return dt, hits
+        return hits
 
-    lo, hi = 2, args.cores
-    times: dict[int, list[float]] = {lo: [], hi: []}
-    hits = 0
-    for _ in range(2):
-        for cores in (lo, hi):
-            dt, hits = one_run(cores)
-            times[cores].append(dt)
-    sec_lo, sec_hi = min(times[lo]), min(times[hi])
-    speedup = round(sec_lo / sec_hi, 3)
+    scaling, hits = lohi(args, one_run, per_sec={"docs_per_sec_hi": n})
     print(json.dumps({
-        "docs": n, "gen_sec": gen_sec, "queries": len(probe),
-        "cores_lo": lo, "cores_hi": hi,
-        "sec_lo": sec_lo, "sec_hi": sec_hi,
-        "times_lo": times[lo], "times_hi": times[hi],
-        "docs_per_sec_hi": round(n / sec_hi),
-        "speedup": speedup,
-        "efficiency": round(speedup / (hi / lo), 3),
+        "docs": n, "gen_sec": gen_sec, "queries": len(probe), **scaling,
         "hits": hits,
     }))
 
 
+@leg("--dsir-docs", "run the DSIR selection soak at N raw docs", lohi=True)
 def _dsir_soak(args) -> None:
     """DSIR selection at 10^6 raw docs: two distribution fits (one
     combinable groupBy(bucket) each over the gram Generates), the
@@ -359,58 +544,28 @@ def _dsir_soak(args) -> None:
     TakeOrdered top-k.  Interleaved lo/hi, min-of-2."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_documents
     from grass_spark.operators.dsir import dsir_sample
-    from grass_spark.session import get_spark
 
     n = args.dsir_docs
-    doc_path = os.path.join(args.data, f"docs_{n}")
-    marker = doc_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_doc_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(doc_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    doc_path, gen_sec = cached_docs(args, n)
 
-    def one_run(cores: int) -> tuple[float, int]:
-        spark = get_spark(
-            "soak_dsir", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock) -> int:
+        spark = session("soak_dsir", cores, quiet=True)
         d = spark.read.parquet(doc_path).select("doc_id", "text")
         d = d.repartition(cores * 4).localCheckpoint()
         target = d.filter(F.col("doc_id") % 100 == 0)  # 1% "trusted"
-        t0 = time.perf_counter()
-        picked = dsir_sample(d, target, 10_000).count()
-        dt = round(time.perf_counter() - t0, 1)
+        with clock():
+            picked = dsir_sample(d, target, 10_000).count()
         spark.stop()
-        return dt, picked
+        return picked
 
-    lo, hi = 2, args.cores
-    times: dict[int, list[float]] = {lo: [], hi: []}
-    picked = 0
-    for _ in range(2):
-        for cores in (lo, hi):
-            dt, picked = one_run(cores)
-            times[cores].append(dt)
-    sec_lo, sec_hi = min(times[lo]), min(times[hi])
-    speedup = round(sec_lo / sec_hi, 3)
+    scaling, picked = lohi(args, one_run, per_sec={"docs_per_sec_hi": n})
     print(json.dumps({
-        "docs": n, "gen_sec": gen_sec,
-        "cores_lo": lo, "cores_hi": hi,
-        "sec_lo": sec_lo, "sec_hi": sec_hi,
-        "times_lo": times[lo], "times_hi": times[hi],
-        "docs_per_sec_hi": round(n / sec_hi),
-        "speedup": speedup,
-        "efficiency": round(speedup / (hi / lo), 3),
-        "picked": int(picked),
+        "docs": n, "gen_sec": gen_sec, **scaling, "picked": int(picked),
     }))
 
 
+@leg("--ppl-docs", "run the CCNet perplexity-bucket soak at N docs", lohi=True)
 def _ppl_soak(args) -> None:
     """CCNet perplexity buckets at 10^6 docs: self-trained bigram LM
     (two combinable count groupBys), two bounded scoring joins +
@@ -418,63 +573,36 @@ def _ppl_soak(args) -> None:
     back.  Interleaved lo/hi, min-of-2."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_documents
     from grass_spark.operators.lm import perplexity_buckets
-    from grass_spark.session import get_spark
 
     n = args.ppl_docs
-    doc_path = os.path.join(args.data, f"docs_{n}")
-    marker = doc_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_doc_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(doc_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    doc_path, gen_sec = cached_docs(args, n)
 
-    def one_run(cores: int) -> tuple[float, dict]:
-        spark = get_spark(
-            "soak_ppl", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock) -> dict:
+        spark = session("soak_ppl", cores, quiet=True)
         d = spark.read.parquet(doc_path).select(
             "doc_id", "text", (F.col("doc_id") % 4).alias("lang")
         )
         d = d.repartition(cores * 4).localCheckpoint()
-        t0 = time.perf_counter()
-        counts = {
-            r["bucket"]: r["n"]
-            for r in perplexity_buckets(d, lang_col="lang")
-            .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        dt = round(time.perf_counter() - t0, 1)
+        with clock():
+            counts = {
+                r["bucket"]: r["n"]
+                for r in perplexity_buckets(d, lang_col="lang")
+                .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
+            }
         spark.stop()
-        return dt, counts
+        return counts
 
-    lo, hi = 2, args.cores
-    times: dict[int, list[float]] = {lo: [], hi: []}
-    counts: dict = {}
-    for _ in range(2):
-        for cores in (lo, hi):
-            dt, counts = one_run(cores)
-            times[cores].append(dt)
-    sec_lo, sec_hi = min(times[lo]), min(times[hi])
-    speedup = round(sec_lo / sec_hi, 3)
+    scaling, counts = lohi(args, one_run, per_sec={"docs_per_sec_hi": n})
     print(json.dumps({
-        "docs": n, "gen_sec": gen_sec,
-        "cores_lo": lo, "cores_hi": hi,
-        "sec_lo": sec_lo, "sec_hi": sec_hi,
-        "times_lo": times[lo], "times_hi": times[hi],
-        "docs_per_sec_hi": round(n / sec_hi),
-        "speedup": speedup,
-        "efficiency": round(speedup / (hi / lo), 3),
-        "buckets": counts,
+        "docs": n, "gen_sec": gen_sec, **scaling, "buckets": counts,
     }))
 
 
+@leg("--corpus-docs",
+     "instead of the rollup soak, run the corpus-"
+     "hygiene stack (decontaminate, segment dedup, "
+     "packing, mixture sampling) over N docs")
 def _corpus_soak(args) -> None:
     """Corpus-hygiene stack (round-4 operators) at 10^6 docs: benchmark
     decontamination, segment dedup, sequence packing, mixture sampling.
@@ -482,29 +610,15 @@ def _corpus_soak(args) -> None:
     stray corpus-side shuffle or per-element re-eval would dominate."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_documents
     from grass_spark.operators.decontaminate import decontaminate
     from grass_spark.operators.pack import pack_sequences
     from grass_spark.operators.sampling import hash_sample, mixture_rates
     from grass_spark.operators.segdedup import dedup_segments, segments_by_words
-    from grass_spark.session import get_spark
 
     n = args.corpus_docs
-    docs_path = os.path.join(args.data, f"docs_{n}")
-    marker = docs_path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_docs_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(docs_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    docs_path, gen_sec = cached_docs(args, n, "soak_docs_gen")
 
-    spark = get_spark(
-        "soak_corpus", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_corpus", args.cores)
     docs = (
         spark.read.parquet(docs_path)
         .select(
@@ -591,6 +705,10 @@ def _corpus_soak(args) -> None:
     spark.stop()
 
 
+@leg("--corpus-full",
+     "instead of the rollup soak, run the FULL "
+     "prepare_corpus pipeline (all stages incl. "
+     "SemDeDup semantic dedup) over N docs")
 def _corpus_full_soak(args) -> None:
     """End-to-end prepare_corpus with EVERY stage enabled — redact ->
     quality/repetition -> exact -> MinHash near -> SemDeDup semantic
@@ -599,37 +717,18 @@ def _corpus_full_soak(args) -> None:
     number, per-stage survivor counts from the pipeline's own stats."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_documents, synth_embeddings
+    from grass_spark.datagen import synth_embeddings
     from grass_spark.operators.corpus import prepare_corpus
-    from grass_spark.session import get_spark
 
     n = args.corpus_full
-    docs_path = os.path.join(args.data, f"docs_{n}")
+    docs_path, gen_sec = cached_docs(args, n, "soak_docs_gen")
     emb_path = os.path.join(args.data, f"docembs_{n}")
-    gen_sec = 0.0
-    if not os.path.exists(docs_path + "_done"):
-        spark = get_spark("soak_docs_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(docs_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(docs_path + "_done", "w").write("ok")
-    if not os.path.exists(emb_path + "_done"):
-        spark = get_spark("soak_emb_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        (
-            synth_embeddings(spark, n_vecs=n)
-            .select(F.col("vec_id").alias("doc_id"), "embedding")
-            .write.mode("overwrite").parquet(emb_path)
-        )
-        gen_sec += round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(emb_path + "_done", "w").write("ok")
+    gen_sec += cached(emb_path, "soak_emb_gen", lambda spark: (
+        synth_embeddings(spark, n_vecs=n)
+        .select(F.col("vec_id").alias("doc_id"), "embedding")
+    ))
 
-    spark = get_spark(
-        "soak_corpus_full", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_corpus_full", args.cores)
     docs = (
         spark.read.parquet(docs_path)
         .repartition(args.cores * 4)
@@ -659,6 +758,9 @@ def _corpus_full_soak(args) -> None:
     spark.stop()
 
 
+@leg("--segdedup-hot",
+     "adversarial segment-dedup skew soak: ONE "
+     "boilerplate segment in ~30%% of N docs")
 def _segdedup_hot_soak(args) -> None:
     """Adversarial segment-dedup skew soak (round-4 verdict #1): ONE
     boilerplate segment planted in ~30% of N docs.  The min-struct
@@ -668,30 +770,15 @@ def _segdedup_hot_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.segdedup import dedup_segments, segments_by_words
-    from grass_spark.session import get_spark
 
     n = args.segdedup_hot
-    spark = get_spark(
-        "soak_segdedup", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_segdedup", args.cores)
     # 10-word unique body + the SAME 10-word boilerplate chunk on every
     # 3rd doc => exactly one k=10 segment shared corpus-wide
-    boiler = "shared boilerplate sentence repeated across the corpus again and again"
-    body = F.concat_ws(
-        " ",
-        *[F.concat(F.lit(f"w{j}u"), (F.xxhash64(F.col("doc_id"), F.lit(j)) % 99999).cast("string"))
-          for j in range(10)],
-    )
-    docs = (
-        spark.range(n).withColumnRenamed("id", "doc_id")
-        .repartition(args.cores * 4)
-        .withColumn(
-            "text",
-            F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit(boiler + " "), body))
-            .otherwise(body),
-        )
-        .localCheckpoint()
+    docs, hot = boiler_docs(
+        spark, n, args.cores,
+        "shared boilerplate sentence repeated across the corpus again and again",
+        words=10,
     )
     t0 = time.perf_counter()
     out = dedup_segments(segments_by_words(docs, "text", 10))
@@ -701,7 +788,6 @@ def _segdedup_hot_soak(args) -> None:
         F.sum("n_segments").alias("segs"),
     ).first()
     wall = round(time.perf_counter() - t0, 1)
-    hot = n // 3 + (1 if n % 3 else 0)
     print(json.dumps({
         "docs": n, "cores": args.cores, "hot_occurrences": hot,
         "segments": int(agg["segs"]), "kept": int(agg["kept"]),
@@ -711,6 +797,9 @@ def _segdedup_hot_soak(args) -> None:
     spark.stop()
 
 
+@leg("--pref-hot",
+     "adversarial preference-pair soak: N scored "
+     "completions, one prompt holds 30%% of them")
 def _pref_hot_soak(args) -> None:
     """Adversarial preference-election skew soak: ONE prompt holds 30%
     of N scored completions (a degenerate best-of-N sweep).  The
@@ -720,13 +809,9 @@ def _pref_hot_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.preference import preference_pairs
-    from grass_spark.session import get_spark
 
     n = args.pref_hot
-    spark = get_spark(
-        "soak_prefhot", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_prefhot", args.cores)
     # ~30% of completions land on prompt 0; the rest spread over n/10
     cold = 1 + F.abs(F.xxhash64(F.lit(3), "doc_id")) % F.lit(max(n // 10, 1))
     comp = (
@@ -758,6 +843,12 @@ def _pref_hot_soak(args) -> None:
     spark.stop()
 
 
+@leg("--knn-vecs",
+     "brute-knn plan-shape soak: N corpus vectors "
+     "x 2 queries, sharded vs bare-window top-k",
+     flag("--knn-dims", type=int, default=32,
+          help="vector dims for --knn-vecs (small dims "
+               "isolate the selection stage from scoring)"))
 def _knn_shape_soak(args) -> None:
     """Brute-force knn top-k plan-shape comparison: N corpus vectors x
     2 query vectors.  The pre-round-5 shape (bare partitionBy(q_id)
@@ -771,13 +862,9 @@ def _knn_shape_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.similarity import cosine_topk, dot, l2norm
-    from grass_spark.session import get_spark
 
     n, dims = args.knn_vecs, args.knn_dims
-    spark = get_spark(
-        "soak_knnshape", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_knnshape", args.cores)
     vec = F.transform(
         F.sequence(F.lit(1), F.lit(dims)),
         lambda j: F.sin(F.col("vec_id").cast("double") * 0.7 + j * 1.3),
@@ -831,6 +918,9 @@ def _knn_shape_soak(args) -> None:
     spark.stop()
 
 
+@leg("--span-hot",
+     "adversarial duplicate-span skew soak: ONE "
+     "boilerplate run in ~30%% of N docs")
 def _span_hot_soak(args) -> None:
     """Adversarial duplicate-span skew soak: ONE 12-word boilerplate
     run planted in ~30% of N docs (plus a per-doc unique 20-word body).
@@ -840,29 +930,14 @@ def _span_hot_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.spans import duplicate_spans
-    from grass_spark.session import get_spark
 
     n = args.span_hot
-    spark = get_spark(
-        "soak_spanhot", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
-    boiler = ("please subscribe to our weekly newsletter for updates "
-              "terms and conditions apply")
-    body = F.concat_ws(
-        " ",
-        *[F.concat(F.lit(f"w{j}u"), (F.xxhash64(F.col("doc_id"), F.lit(j)) % 99999).cast("string"))
-          for j in range(20)],
-    )
-    docs = (
-        spark.range(n).withColumnRenamed("id", "doc_id")
-        .repartition(args.cores * 4)
-        .withColumn(
-            "text",
-            F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit(boiler + " "), body))
-            .otherwise(body),
-        )
-        .localCheckpoint()
+    spark = session("soak_spanhot", args.cores)
+    docs, hot = boiler_docs(
+        spark, n, args.cores,
+        "please subscribe to our weekly newsletter for updates "
+        "terms and conditions apply",
+        words=20,
     )
     t0 = time.perf_counter()
     out = duplicate_spans(docs, n=8)
@@ -876,7 +951,7 @@ def _span_hot_soak(args) -> None:
     wall = round(time.perf_counter() - t0, 1)
     print(json.dumps({
         "docs": n, "cores": args.cores,
-        "hot_docs": n // 3 + (1 if n % 3 else 0),
+        "hot_docs": hot,
         "windows": int(agg["windows"]),
         "dup_windows": int(agg["dup_windows"]),
         "spans": int(agg["spans"]),
@@ -886,6 +961,20 @@ def _span_hot_soak(args) -> None:
     spark.stop()
 
 
+@leg("--cap-hot",
+     "adversarial per-source-cap skew soak: ONE "
+     "source holds ~30%% of N docs",
+     flag("--cap-naive", action="store_true",
+          help="cap-hot soak: time the naive single-window "
+               "plan instead (hot-source single-task "
+               "comparison leg)"),
+     flag("--cap-sources", type=int, default=5000,
+          help="cap-hot soak: tail-source cardinality. 5000 "
+               "makes EVERY source over-cap (worst case: all "
+               "rows take the salted windows); a large value "
+               "(e.g. N/50) keeps the tail under-cap so ~70%% "
+               "of rows take the zero-shuffle cold path "
+               "(realistic shape)"))
 def _cap_hot_soak(args) -> None:
     """Adversarial per-source-cap skew soak: ONE source holds ~30% of
     N docs (the hot-domain shape cap_per_group exists for).  The salted
@@ -894,13 +983,9 @@ def _cap_hot_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.caps import cap_per_group
-    from grass_spark.session import get_spark
 
     n = args.cap_hot
-    spark = get_spark(
-        "soak_caphot", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_caphot", args.cores)
     docs = (
         spark.range(n).withColumnRenamed("id", "doc_id")
         .repartition(args.cores * 4)
@@ -943,6 +1028,18 @@ def _cap_hot_soak(args) -> None:
     spark.stop()
 
 
+@leg("--delta-dedup",
+     "incremental dedup store soak: build on N, "
+     "ingest N/10, compare vs full recompute",
+     flag("--delta-frac", type=float, default=0.1,
+          help="delta-dedup soak: delta batch size as a "
+               "fraction of the base (0.1 mirrors a crawl "
+               "increment; >=0.5 for scaling runs where the "
+               "ingest wall must be variable-cost dominated)"),
+     flag("--skip-recompute", action="store_true",
+          help="delta-dedup soak: skip the from-scratch "
+               "near_dedup comparison leg (lo-cores scaling "
+               "runs only need build+ingest)"))
 def _delta_dedup_soak(args) -> None:
     """Incremental-store soak: build on N docs, ingest an N/10 delta,
     and time the delta ingest against the full near_dedup recompute it
@@ -953,14 +1050,10 @@ def _delta_dedup_soak(args) -> None:
     from grass_spark.datagen import synth_documents
     from grass_spark.operators.dedup import near_dedup
     from grass_spark.operators.dedup_store import DedupStore
-    from grass_spark.session import get_spark
 
     n = args.delta_dedup
     delta_n = int(n * args.delta_frac)
-    spark = get_spark(
-        "soak_delta_dedup", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_delta_dedup", args.cores)
     all_docs = synth_documents(spark, n_docs=n + delta_n).select(
         "doc_id", "text"
     )
@@ -999,6 +1092,12 @@ def _delta_dedup_soak(args) -> None:
     spark.stop()
 
 
+@leg("--pq-vecs",
+     "PQ soak: encode pass lo/hi + one Lloyd "
+     "training round over N vectors",
+     flag("--pq-methods", default="expr,arrow",
+          help="PQ soak: comma list of encode methods to time"),
+     lohi=True)
 def _pq_soak(args) -> None:
     """PQ at corpus scale: the encode pass (the 100-TB hot path — one
     scan-stage projection with m*k literal distance folds per row) at
@@ -1008,69 +1107,38 @@ def _pq_soak(args) -> None:
 
     from grass_spark.datagen import synth_embeddings
     from grass_spark.operators.pq import pq_codebook, pq_encode
-    from grass_spark.session import get_spark
 
     n = args.pq_vecs
     path = os.path.join(args.data, f"pqvecs_{n}")
-    marker = path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_pq_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_embeddings(spark, n_vecs=n).write.mode("overwrite").parquet(path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    gen_sec = cached(path, "soak_pq_gen",
+                     lambda spark: synth_embeddings(spark, n_vecs=n))
+    errs: dict[str, float] = {}
 
-    def one_run(cores: int, method: str) -> tuple[float, float]:
-        spark = get_spark(
-            "soak_pq", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock, method: str) -> None:
+        spark = session("soak_pq", cores, quiet=True)
         e = spark.read.parquet(path).select("vec_id", "embedding")
         e = e.repartition(cores * 4).localCheckpoint()
         cb = pq_codebook(e, 8, 16)
-        t0 = time.perf_counter()
-        row = pq_encode(e, cb, with_err=True, method=method).agg(
-            F.count("*"), F.avg("recon_err")
-        ).collect()[0]
-        dt = round(time.perf_counter() - t0, 1)
+        with clock(method):
+            row = pq_encode(e, cb, with_err=True, method=method).agg(
+                F.count("*"), F.avg("recon_err")
+            ).collect()[0]
         assert row[0] == n
         spark.stop()
-        return dt, float(row[1])
+        errs[method] = round(float(row[1]), 6)
 
-    lo, hi = 2, args.cores
-    times: dict[tuple, list[float]] = {}
-    errs: dict[str, float] = {}
     methods = tuple(args.pq_methods.split(","))
-    for _ in range(2):
-        for method in methods:
-            for cores in (lo, hi):
-                dt, err = one_run(cores, method)
-                times.setdefault((method, cores), []).append(dt)
-                errs[method] = round(err, 6)
-    arrow = {}
+    arrow, _ = lohi(
+        args, *[functools.partial(one_run, method=m) for m in methods],
+        per_sec={"vecs_per_sec_hi": n},
+    )
     for method in methods:
-        s_lo = min(times[(method, lo)])
-        s_hi = min(times[(method, hi)])
-        arrow[method] = {
-            "sec_lo": s_lo, "sec_hi": s_hi,
-            "times_lo": times[(method, lo)],
-            "times_hi": times[(method, hi)],
-            "vecs_per_sec_hi": round(n / s_hi),
-            "speedup": round(s_lo / s_hi, 3),
-            "efficiency": round(s_lo / s_hi / (hi / lo), 3),
-            "mean_recon_err": errs[method],
-        }
+        arrow[method]["mean_recon_err"] = errs[method]
     # one training round at hi cores (encode + mean-update shuffle)
     from grass_spark.operators.kmeans import pq_train
 
-    spark = get_spark(
-        "soak_pq_train", cores=hi,
-        shuffle_partitions=max(hi * 4, 32),
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    hi = args.cores
+    spark = session("soak_pq_train", hi, quiet=True)
     e = spark.read.parquet(path).select("vec_id", "embedding")
     e = e.repartition(hi * 4).localCheckpoint()
     t0 = time.perf_counter()
@@ -1080,14 +1148,18 @@ def _pq_soak(args) -> None:
     )
     train_sec = round(time.perf_counter() - t0, 1)
     spark.stop()
-    out = {"vecs": n, "gen_sec": gen_sec,
-           "cores_lo": lo, "cores_hi": hi,
-           "train_round_sec": train_sec,
-           "train_distortion": [round(h, 6) for h in hist]}
-    out.update(arrow)
-    print(json.dumps(out))
+    print(json.dumps({
+        "vecs": n, "gen_sec": gen_sec,
+        "train_round_sec": train_sec,
+        "train_distortion": [round(h, 6) for h in hist],
+        **arrow,
+    }))
 
 
+@leg("--textproj-docs",
+     "text-projection soak: line_filter + "
+     "subword_encode passes over N line-wrapped "
+     "docs, lo/hi", lohi=True)
 def _textproj_soak(args) -> None:
     """Scan-stage text projections at corpus scale: line_filter (HOF
     line predicates) and subword_encode (vocab-regex extract + id map)
@@ -1097,7 +1169,6 @@ def _textproj_soak(args) -> None:
     from grass_spark.datagen import synth_documents
     from grass_spark.operators.linefilter import LineRules, line_filter
     from grass_spark.operators.textstats import subword_encode
-    from grass_spark.session import get_spark
 
     # word-soup lines carry no terminal punctuation and the synthetic
     # vocab is digit-heavy ('w3183') — disable those two rules so lines
@@ -1108,70 +1179,43 @@ def _textproj_soak(args) -> None:
 
     n = args.textproj_docs
     path = os.path.join(args.data, f"linedocs_{n}")
-    marker = path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_lines_gen", cores=None,
-                          shuffle_partitions=64)
-        t0 = time.perf_counter()
+
+    def build(spark):
         # wrap the word soup into 7-word lines once, at generation time
         wrapped = F.regexp_replace(
             F.col("text"), r"((?:\S+ ){6}\S+) ", "$1\n"
         )
-        synth_documents(spark, n_docs=n).withColumn(
-            "text", wrapped
-        ).write.mode("overwrite").parquet(path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+        return synth_documents(spark, n_docs=n).withColumn("text", wrapped)
 
-    def one_run(cores: int) -> tuple[float, float, int, int]:
-        spark = get_spark(
-            "soak_lines", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    gen_sec = cached(path, "soak_lines_gen", build)
+
+    def one_run(cores: int, clock) -> tuple[int, int]:
+        spark = session("soak_lines", cores, quiet=True)
         d = spark.read.parquet(path).select("doc_id", "text")
         d = d.repartition(cores * 4).localCheckpoint()
-        t0 = time.perf_counter()
-        # aggregate over clean_text too so column pruning cannot skip
-        # the rebuild — this IS the op's output at scale
-        row = line_filter(d, rules).agg(
-            F.sum(F.col("keep").cast("long")),
-            F.sum(F.length("clean_text")),
-        ).collect()[0]
-        kept = int(row[0])
-        lf_dt = round(time.perf_counter() - t0, 1)
-        t0 = time.perf_counter()
-        toks = subword_encode(d).agg(F.sum("n_tokens")).collect()[0][0]
-        enc_dt = round(time.perf_counter() - t0, 1)
+        with clock("linefilter"):
+            # aggregate over clean_text too so column pruning cannot skip
+            # the rebuild — this IS the op's output at scale
+            row = line_filter(d, rules).agg(
+                F.sum(F.col("keep").cast("long")),
+                F.sum(F.length("clean_text")),
+            ).collect()[0]
+            kept = int(row[0])
+        with clock("subword"):
+            toks = subword_encode(d).agg(F.sum("n_tokens")).collect()[0][0]
         spark.stop()
-        return lf_dt, enc_dt, kept, int(toks)
+        return kept, int(toks)
 
-    lo, hi = 2, args.cores
-    lf_times: dict[int, list[float]] = {lo: [], hi: []}
-    enc_times: dict[int, list[float]] = {lo: [], hi: []}
-    kept = toks = 0
-    for _ in range(2):
-        for cores in (lo, hi):
-            lf_dt, enc_dt, kept, toks = one_run(cores)
-            lf_times[cores].append(lf_dt)
-            enc_times[cores].append(enc_dt)
-    out = {"docs": n, "gen_sec": gen_sec, "cores_lo": lo, "cores_hi": hi,
-           "kept_docs": kept, "sum_tokens": toks}
-    for name, times in (("linefilter", lf_times), ("subword", enc_times)):
-        sec_lo, sec_hi = min(times[lo]), min(times[hi])
-        speedup = round(sec_lo / sec_hi, 3)
-        out[name] = {
-            "sec_lo": sec_lo, "sec_hi": sec_hi,
-            "times_lo": times[lo], "times_hi": times[hi],
-            "docs_per_sec_hi": round(n / sec_hi),
-            "speedup": speedup,
-            "efficiency": round(speedup / (hi / lo), 3),
-        }
-    print(json.dumps(out))
+    scaling, (kept, toks) = lohi(args, one_run, per_sec={"docs_per_sec_hi": n})
+    print(json.dumps({
+        "docs": n, "gen_sec": gen_sec, "kept_docs": kept, "sum_tokens": toks,
+        **scaling,
+    }))
 
 
+@leg("--sft-turns",
+     "SFT soak: sft_examples + transcript_lint + "
+     "context_tail over N synthetic turns, lo/hi", lohi=True)
 def _sft_soak(args) -> None:
     """SFT assembly at transcript scale: sft_examples (per-conv render
     + loss-mask spans), transcript_lint, and context_tail timed as
@@ -1183,84 +1227,51 @@ def _sft_soak(args) -> None:
     from grass_spark.operators.sft import (
         context_tail, sft_examples, transcript_lint,
     )
-    from grass_spark.session import get_spark
 
     n = args.sft_turns
     n_convs = max(n // args.avg_turns, 1)
     path = os.path.join(args.data, f"sft_turns_{n}")
-    marker = path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_sft_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_transcripts(
-            spark, n_convs=n_convs, avg_turns=args.avg_turns, seed=7
-        ).write.mode("overwrite").parquet(path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    gen_sec = cached(path, "soak_sft_gen", lambda spark: synth_transcripts(
+        spark, n_convs=n_convs, avg_turns=args.avg_turns, seed=7
+    ))
 
-    def one_run(cores: int) -> tuple[dict[str, float], dict[str, int]]:
-        spark = get_spark(
-            "soak_sft", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock) -> dict[str, int]:
+        spark = session("soak_sft", cores, quiet=True)
         t = spark.read.parquet(path).select(
             "conv_id", "turn_idx", "role", "text", "ts"
         )
         t = t.repartition(cores * 4).localCheckpoint()
-        walls: dict[str, float] = {}
         stats: dict[str, int] = {}
-        t0 = time.perf_counter()
-        row = sft_examples(t).agg(
-            F.sum(F.length("text")), F.sum("n_mask_chars"),
-            F.count(F.lit(1)),
-        ).collect()[0]
-        walls["sft"] = round(time.perf_counter() - t0, 1)
+        with clock("sft"):
+            row = sft_examples(t).agg(
+                F.sum(F.length("text")), F.sum("n_mask_chars"),
+                F.count(F.lit(1)),
+            ).collect()[0]
         stats["rendered_chars"] = int(row[0])
         stats["mask_chars"] = int(row[1])
         stats["convs"] = int(row[2])
-        t0 = time.perf_counter()
-        row = transcript_lint(t).agg(
-            F.sum(F.col("keep").cast("long")), F.count(F.lit(1)),
-        ).collect()[0]
-        walls["lint"] = round(time.perf_counter() - t0, 1)
+        with clock("lint"):
+            row = transcript_lint(t).agg(
+                F.sum(F.col("keep").cast("long")), F.count(F.lit(1)),
+            ).collect()[0]
         stats["kept_convs"] = int(row[0])
-        t0 = time.perf_counter()
-        row = context_tail(t, 512).agg(
-            F.count(F.lit(1)), F.sum("n_tokens"),
-        ).collect()[0]
-        walls["tail"] = round(time.perf_counter() - t0, 1)
+        with clock("tail"):
+            row = context_tail(t, 512).agg(
+                F.count(F.lit(1)), F.sum("n_tokens"),
+            ).collect()[0]
         stats["tail_rows"] = int(row[0])
         spark.stop()
-        return walls, stats
+        return stats
 
-    lo, hi = 2, args.cores
-    times: dict[str, dict[int, list[float]]] = {
-        k: {lo: [], hi: []} for k in ("sft", "lint", "tail")
-    }
-    stats: dict[str, int] = {}
-    for _ in range(2):
-        for cores in (lo, hi):
-            walls, stats = one_run(cores)
-            for k, v in walls.items():
-                times[k][cores].append(v)
-    out: dict = {"turns": n, "convs": n_convs, "gen_sec": gen_sec,
-                 "cores_lo": lo, "cores_hi": hi, **stats}
-    for name, tt in times.items():
-        sec_lo, sec_hi = min(tt[lo]), min(tt[hi])
-        speedup = round(sec_lo / sec_hi, 3)
-        out[name] = {
-            "sec_lo": sec_lo, "sec_hi": sec_hi,
-            "times_lo": tt[lo], "times_hi": tt[hi],
-            "turns_per_sec_hi": round(n / sec_hi),
-            "speedup": speedup,
-            "efficiency": round(speedup / (hi / lo), 3),
-        }
-    print(json.dumps(out))
+    scaling, stats = lohi(args, one_run, per_sec={"turns_per_sec_hi": n})
+    print(json.dumps({
+        "turns": n, "convs": n_convs, "gen_sec": gen_sec, **stats, **scaling,
+    }))
 
 
+@leg("--classifier-docs",
+     "LR-trainer soak: stage features + 2 training "
+     "rounds over N labeled docs, lo/hi", lohi=True)
 def _classifier_soak(args) -> None:
     """Distributed LR training at corpus scale: the one-off feature
     staging (explode + groupBy(doc, bucket) + eager checkpoint) and the
@@ -1268,62 +1279,43 @@ def _classifier_soak(args) -> None:
     n_buckets collect), interleaved lo/hi, min-of-2."""
     from pyspark.sql import functions as F
 
-    from grass_spark.datagen import synth_documents
     from grass_spark.operators.classify import train_classifier
-    from grass_spark.session import get_spark
 
     n = args.classifier_docs
-    path = os.path.join(args.data, f"docs_{n}")
-    marker = path + "_done"
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_clf_gen", cores=None, shuffle_partitions=64)
-        t0 = time.perf_counter()
-        synth_documents(spark, n_docs=n).write.mode("overwrite").parquet(path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
+    path, gen_sec = cached_docs(args, n, "soak_clf_gen")
 
-    def one_run(cores: int) -> tuple[float, float]:
-        spark = get_spark(
-            "soak_clf", cores=cores,
-            shuffle_partitions=max(cores * 4, 32),
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+    def one_run(cores: int, clock) -> float:
+        spark = session("soak_clf", cores, quiet=True)
         d = spark.read.parquet(path).select(
             "doc_id",
             (F.col("doc_id") % 2).cast("int").alias("label"),
             "text",
         )
         d = d.repartition(cores * 4).localCheckpoint()
-        t0 = time.perf_counter()
-        _, hist = train_classifier(d, rounds=2, lr=8.0, n_buckets=4096,
-                                   hash="fast")
-        dt = round(time.perf_counter() - t0, 1)
+        with clock():
+            _, hist = train_classifier(d, rounds=2, lr=8.0, n_buckets=4096,
+                                       hash="fast")
         spark.stop()
-        return dt, hist[-1]
+        return hist[-1]
 
-    lo, hi = 2, args.cores
-    times: dict[int, list[float]] = {lo: [], hi: []}
-    loss = 0.0
-    for _ in range(2):
-        for cores in (lo, hi):
-            dt, loss = one_run(cores)
-            times[cores].append(dt)
-    sec_lo, sec_hi = min(times[lo]), min(times[hi])
-    speedup = round(sec_lo / sec_hi, 3)
+    scaling, loss = lohi(args, one_run,
+                         per_sec={"docs_per_round_sec_hi": 3 * n})
     print(json.dumps({
         "docs": n, "gen_sec": gen_sec, "rounds": 2, "n_buckets": 4096,
-        "cores_lo": lo, "cores_hi": hi,
-        "sec_lo": sec_lo, "sec_hi": sec_hi,
-        "times_lo": times[lo], "times_hi": times[hi],
-        "docs_per_round_sec_hi": round(n / (sec_hi / 3)),
-        "speedup": speedup,
-        "efficiency": round(speedup / (hi / lo), 3),
-        "final_loss": round(loss, 6),
+        **scaling, "final_loss": round(loss, 6),
     }))
 
 
+@leg("--funnel-events",
+     "event-analytics soak: windowed funnel + "
+     "retention over N events with a 10%%-hot bot "
+     "user, lo/hi",
+     flag("--funnel-op", choices=("both", "funnel", "retention"),
+          default="both",
+          help="which event-analytics op the soak times "
+               "(funnel is ~5x faster per event than "
+               "retention — size N per op for minutes-long "
+               "walls)"))
 def _funnel_soak(args) -> None:
     """Event-analytics soak: windowed funnel + retention cohorts over N
     synthetic events with an adversarial BOT user holding ~10% of all
@@ -1334,38 +1326,10 @@ def _funnel_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.funnel import event_funnel, retention_cohorts
-    from grass_spark.session import get_spark
 
     n = args.funnel_events
-    n_users = max(n // 2000, 10)
-    spark = get_spark(
-        "soak_funnel", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
-    h = F.abs(F.xxhash64(F.lit(11), "event_id"))
-    types = F.array(
-        F.lit("view"), F.lit("view"), F.lit("view"), F.lit("view"),
-        F.lit("click"), F.lit("click"), F.lit("signup"),
-        F.lit("purchase"), F.lit("error"), F.lit("error"),
-    )
-    ev = (
-        spark.range(n).withColumnRenamed("id", "event_id")
-        .repartition(args.cores * 4)
-        .select(
-            "event_id",
-            # bot user 0 holds ~10% of events; the rest spread evenly
-            F.when(F.col("event_id") % 10 == 0, F.lit(0).cast("bigint"))
-            .otherwise(1 + F.abs(F.xxhash64(F.lit(3), "event_id"))
-                       % F.lit(n_users)).alias("user_id"),
-            F.timestamp_seconds(
-                F.lit(1704067200) + (h % F.lit(90 * 86400))
-            ).alias("ts"),
-            F.element_at(types, (h % 10 + 1).cast("int"))
-            .alias("event_type"),
-            ((h % 10000) / F.lit(100.0)).alias("value"),
-        )
-        .localCheckpoint()
-    )
+    spark = session("soak_funnel", args.cores)
+    ev, n_users = hot_bot_events(spark, n, args.cores)
     out: dict = {"events": n, "users": n_users, "cores": args.cores}
     if args.funnel_op in ("both", "funnel"):
         t0 = time.perf_counter()
@@ -1396,6 +1360,15 @@ def _funnel_soak(args) -> None:
     spark.stop()
 
 
+@leg("--seq-events",
+     "sequence-operator soak: transition matrix / "
+     "rate anomalies / as-of attribution over N "
+     "events with a 10%%-hot bot user, lo/hi",
+     flag("--seq-op",
+          choices=("all", "transitions", "anomalies", "asof",
+                   "interevent", "resample", "occupancy"),
+          default="all",
+          help="which sequence op the --seq-events soak times"))
 def _seq_soak(args) -> None:
     """Sequence-operator soak: transition matrix / rate anomalies /
     as-of attribution over N synthetic events with the same adversarial
@@ -1410,42 +1383,15 @@ def _seq_soak(args) -> None:
         event_transitions,
         rate_anomalies,
     )
-    from grass_spark.session import get_spark
 
     n = args.seq_events
-    n_users = max(n // 2000, 10)
     # Window-sort partitions must stay cache-resident: at 32 partitions
     # (750k rows each for 24M events) the 8-core leg measured 51.6 s vs
     # 24.8 s at 128 (190k rows) — concurrent out-of-cache sorts are
     # memory-bandwidth-bound and do not scale with cores.  Production
     # AQE sizes this automatically; the harness sizes by volume.
-    spark = get_spark(
-        "soak_seq", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, min(1024, n // 200_000)),
-    )
-    h = F.abs(F.xxhash64(F.lit(11), "event_id"))
-    types = F.array(
-        F.lit("view"), F.lit("view"), F.lit("view"), F.lit("view"),
-        F.lit("click"), F.lit("click"), F.lit("signup"),
-        F.lit("purchase"), F.lit("error"), F.lit("error"),
-    )
-    ev = (
-        spark.range(n).withColumnRenamed("id", "event_id")
-        .repartition(args.cores * 4)
-        .select(
-            "event_id",
-            F.when(F.col("event_id") % 10 == 0, F.lit(0).cast("bigint"))
-            .otherwise(1 + F.abs(F.xxhash64(F.lit(3), "event_id"))
-                       % F.lit(n_users)).alias("user_id"),
-            F.timestamp_seconds(
-                F.lit(1704067200) + (h % F.lit(90 * 86400))
-            ).alias("ts"),
-            F.element_at(types, (h % 10 + 1).cast("int"))
-            .alias("event_type"),
-            ((h % 10000) / F.lit(100.0)).alias("value"),
-        )
-        .localCheckpoint()
-    )
+    spark = session("soak_seq", args.cores, min(1024, n // 200_000))
+    ev, n_users = hot_bot_events(spark, n, args.cores)
     out: dict = {"events": n, "users": n_users, "cores": args.cores}
     if args.seq_op in ("all", "transitions"):
         t0 = time.perf_counter()
@@ -1544,6 +1490,14 @@ def _seq_soak(args) -> None:
     spark.stop()
 
 
+@leg("--engagement-events",
+     "run the engagement-analytics soak over N "
+     "synthetic events (rolling actives / RFM / "
+     "CUSUM / correlations) and exit",
+     flag("--engagement-op",
+          choices=("all", "actives", "rfm", "cusum", "corr"),
+          default="all",
+          help="which op the --engagement-events soak times"))
 def _engagement_soak(args) -> None:
     """Engagement-analytics soak: rolling actives / RFM / CUSUM /
     type correlations over N synthetic events with the 10%-hot bot
@@ -1561,37 +1515,10 @@ def _engagement_soak(args) -> None:
         rolling_active_users,
         type_correlations,
     )
-    from grass_spark.session import get_spark
 
     n = args.engagement_events
-    n_users = max(n // 2000, 10)
-    spark = get_spark(
-        "soak_engagement", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, min(1024, n // 200_000)),
-    )
-    h = F.abs(F.xxhash64(F.lit(11), "event_id"))
-    types = F.array(
-        F.lit("view"), F.lit("view"), F.lit("view"), F.lit("view"),
-        F.lit("click"), F.lit("click"), F.lit("signup"),
-        F.lit("purchase"), F.lit("error"), F.lit("error"),
-    )
-    ev = (
-        spark.range(n).withColumnRenamed("id", "event_id")
-        .repartition(args.cores * 4)
-        .select(
-            "event_id",
-            F.when(F.col("event_id") % 10 == 0, F.lit(0).cast("bigint"))
-            .otherwise(1 + F.abs(F.xxhash64(F.lit(3), "event_id"))
-                       % F.lit(n_users)).alias("user_id"),
-            F.timestamp_seconds(
-                F.lit(1704067200) + (h % F.lit(90 * 86400))
-            ).alias("ts"),
-            F.element_at(types, (h % 10 + 1).cast("int"))
-            .alias("event_type"),
-            ((h % 10000) / F.lit(100.0)).alias("value"),
-        )
-        .localCheckpoint()
-    )
+    spark = session("soak_engagement", args.cores, min(1024, n // 200_000))
+    ev, n_users = hot_bot_events(spark, n, args.cores)
     out: dict = {"events": n, "users": n_users, "cores": args.cores}
     if args.engagement_op in ("all", "actives"):
         t0 = time.perf_counter()
@@ -1642,6 +1569,10 @@ def _engagement_soak(args) -> None:
     spark.stop()
 
 
+@leg("--graph-members",
+     "co-occurrence graph soak: edges + triangle "
+     "census over N membership rows with planted "
+     "over-cap mega-groups, lo/hi")
 def _graph_soak(args) -> None:
     """Co-occurrence graph soak: bipartite membership -> edges ->
     triangle census over N membership rows, with 3 planted mega-groups
@@ -1651,7 +1582,6 @@ def _graph_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.graph import cooccurrence_edges, triangle_stats
-    from grass_spark.session import get_spark
 
     n = args.graph_members
     n_groups = max(n // 6, 1)
@@ -1665,10 +1595,7 @@ def _graph_soak(args) -> None:
     # the cores*4 default and report throughput (the wedge join is
     # memory-bandwidth-bound on this box — lo/hi reads ~0.6, same
     # class as rate_anomalies' scan walls).
-    spark = get_spark(
-        "soak_graph", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, min(512, n // 200_000)),
-    )
+    spark = session("soak_graph", args.cores, min(512, n // 200_000))
     h = F.abs(F.xxhash64(F.lit(17), "id"))
     base = (
         spark.range(n)
@@ -1702,6 +1629,11 @@ def _graph_soak(args) -> None:
     spark.stop()
 
 
+@leg("--rank-rows",
+     "census-rank soak over continuous doubles "
+     "(corpus-sized census): spearman / mann-"
+     "whitney / ks via the bucketed prefix-sum "
+     "path, lo/hi")
 def _rank_soak(args) -> None:
     """Census-rank soak over CONTINUOUS doubles — the census is
     corpus-sized (every value distinct), so this exercises the
@@ -1712,13 +1644,9 @@ def _rank_soak(args) -> None:
 
     from grass_spark.operators.divergence import ks_test
     from grass_spark.operators.stats import mann_whitney, spearman_corr
-    from grass_spark.session import get_spark
 
     n = args.rank_rows
-    spark = get_spark(
-        "soak_rank", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, min(1024, n // 200_000)),
-    )
+    spark = session("soak_rank", args.cores, min(1024, n // 200_000))
     u = (F.abs(F.xxhash64(F.lit(29), "id")) % F.lit(2**40)).cast(
         "double"
     ) / F.lit(float(2**40))
@@ -1754,6 +1682,10 @@ def _rank_soak(args) -> None:
     spark.stop()
 
 
+@leg("--skewjoin-rows",
+     "skew-join soak: fact N rows (one key = 30%%) "
+     "vs 5M-key dim — plain join (AQE on/off) vs "
+     "skew_join, identical-result assert")
 def _skewjoin_soak(args) -> None:
     """Generic skew-join soak: fact N rows with ONE key carrying 30%,
     dim too large to auto-broadcast.  Times the plain shuffle join
@@ -1762,15 +1694,10 @@ def _skewjoin_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.skewjoin import skew_join
-    from grass_spark.session import get_spark
 
     n = args.skewjoin_rows
     n_keys = 5_000_000
-    spark = get_spark(
-        "soak_skewjoin", cores=args.cores,
-        shuffle_partitions=args.cores * 4,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = session("soak_skewjoin", args.cores, 0, quiet=True)
     hot = F.abs(F.xxhash64(F.lit(7), "id")) % 10 < 3  # 30% hot
     fact = (
         spark.range(n)
@@ -1816,6 +1743,9 @@ def _skewjoin_soak(args) -> None:
     spark.stop()
 
 
+@leg("--boot-rows",
+     "Poisson-bootstrap soak: N rows x 64 "
+     "replicates of md5 Poisson weights, lo/hi")
 def _boot_soak(args) -> None:
     """Poisson-bootstrap soak: N rows x 64 replicates of md5-derived
     Poisson(1) weights — a pure map-side explode+census; the shuffle
@@ -1823,13 +1753,9 @@ def _boot_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.inference import poisson_bootstrap
-    from grass_spark.session import get_spark
 
     n = args.boot_rows
-    spark = get_spark(
-        "soak_boot", cores=args.cores, shuffle_partitions=args.cores * 4,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = session("soak_boot", args.cores, 0, quiet=True)
     base = (
         spark.range(n)
         .repartition(args.cores * 4)
@@ -1853,6 +1779,9 @@ def _boot_soak(args) -> None:
     spark.stop()
 
 
+@leg("--setsim-docs",
+     "exact set-similarity join soak over N docs "
+     "with planted near-dup clusters, lo/hi")
 def _setsim_soak(args) -> None:
     """Exact prefix-filtered set-similarity self-join over N synthetic
     docs with planted near-dup clusters (3-word shingle sets, Jaccard
@@ -1866,13 +1795,9 @@ def _setsim_soak(args) -> None:
     from grass_spark.datagen import synth_documents
     from grass_spark.operators.dedup import shingles_of_words
     from grass_spark.operators.setsim import setsim_pairs
-    from grass_spark.session import get_spark
 
     n = args.setsim_docs
-    spark = get_spark(
-        "soak_setsim", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, min(512, n // 100_000)),
-    )
+    spark = session("soak_setsim", args.cores, min(512, n // 100_000))
     docs = synth_documents(
         spark, n_docs=n, boiler_every=n
     ).repartition(args.cores * 4).localCheckpoint()
@@ -1907,6 +1832,9 @@ def _setsim_soak(args) -> None:
     spark.stop()
 
 
+@leg("--fuzzy-names",
+     "blocked fuzzy-linkage soak over N serial "
+     "names (blocks of 100, lev<=1), lo/hi")
 def _fuzzy_soak(args) -> None:
     """Blocked fuzzy linkage over N synthetic names: 9-digit serials
     blocked on all-but-the-last-two digits (blocks of <= 100), exact
@@ -1915,13 +1843,9 @@ def _fuzzy_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.linkage import blocked_fuzzy_pairs
-    from grass_spark.session import get_spark
 
     n = args.fuzzy_names
-    spark = get_spark(
-        "soak_fuzzy", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, min(512, n // 100_000)),
-    )
+    spark = session("soak_fuzzy", args.cores, min(512, n // 100_000))
     names = (
         spark.range(n).repartition(args.cores * 4)
         .select(
@@ -1943,6 +1867,9 @@ def _fuzzy_soak(args) -> None:
     spark.stop()
 
 
+@leg("--sweep-intervals",
+     "interval-concurrency sweep soak over N "
+     "intervals (census + calendar window), lo/hi")
 def _sweep_soak(args) -> None:
     """Interval-concurrency sweep over N intervals spread across a
     2-year calendar: the corpus-sized stage is one map-side-combinable
@@ -1950,13 +1877,9 @@ def _sweep_soak(args) -> None:
     from pyspark.sql import functions as F
 
     from grass_spark.operators.sweep import concurrency_sweep
-    from grass_spark.session import get_spark
 
     n = args.sweep_intervals
-    spark = get_spark(
-        "soak_sweep", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-    )
+    spark = session("soak_sweep", args.cores)
     h = F.abs(F.xxhash64(F.lit(5), "id"))
     iv = (
         spark.range(n).repartition(args.cores * 4)
@@ -1981,349 +1904,38 @@ def _sweep_soak(args) -> None:
     spark.stop()
 
 
-def _parse_buckets(s: str):
-    if "=" in s:
-        return {k: int(v) for k, v in (p.split("=") for p in s.split(","))}
-    return int(s)
-
-
-def main() -> None:
+# -------------------------------------------------------------------- main
+def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--turns", type=int, default=100_000_000)
     ap.add_argument("--avg-turns", type=int, default=500)
     ap.add_argument("--cores", type=int, default=8)
-    ap.add_argument("--layout", choices=("plain", "bucketed"), default="bucketed")
-    ap.add_argument("--buckets", type=_parse_buckets, default=256,
-                    help="int or per-tier spec 't1m=256,t1h=64,t1d=16'")
-    ap.add_argument("--compress", action="store_true")
-    ap.add_argument("--sketches", action="store_true",
-                    help="carry KLL/HLL sketches through the tiers and "
-                         "measure the approx-holistic read path (day "
-                         "quantiles from stored sketches) against the "
-                         "exact raw re-scan it replaces")
     ap.add_argument("--data", default="/tmp/grass_soak")
-    ap.add_argument("--dedup-docs", type=int, default=0,
-                    help="instead of the rollup soak, run the dedup "
-                         "stack (LSH caps + CC rounds) over N synthetic "
-                         "documents with known duplicate structure")
-    ap.add_argument("--semdedup-vecs", type=int, default=0,
-                    help="instead of the rollup soak, run semantic "
-                         "dedup over N planted-duplicate embeddings "
-                         "with lo/hi-core scaling evidence")
-    ap.add_argument("--semdecon-vecs", type=int, default=0,
-                    help="run the semantic-decontamination soak at N "
-                         "corpus vectors instead of the rollup soak")
-    ap.add_argument("--bench-vecs", type=int, default=200,
-                    help="broadcast benchmark size for --semdecon-vecs")
-    ap.add_argument("--drift-docs", type=int, default=0,
-                    help="run the corpus-drift (KL/JS) soak at N docs "
-                         "instead of the rollup soak")
-    ap.add_argument("--dsir-docs", type=int, default=0,
-                    help="run the DSIR selection soak at N raw docs")
-    ap.add_argument("--ppl-docs", type=int, default=0,
-                    help="run the CCNet perplexity-bucket soak at N docs")
-    ap.add_argument("--corpus-docs", type=int, default=0,
-                    help="instead of the rollup soak, run the corpus-"
-                         "hygiene stack (decontaminate, segment dedup, "
-                         "packing, mixture sampling) over N docs")
-    ap.add_argument("--corpus-full", type=int, default=0,
-                    help="instead of the rollup soak, run the FULL "
-                         "prepare_corpus pipeline (all stages incl. "
-                         "SemDeDup semantic dedup) over N docs")
-    ap.add_argument("--segdedup-hot", type=int, default=0,
-                    help="adversarial segment-dedup skew soak: ONE "
-                         "boilerplate segment in ~30%% of N docs")
-    ap.add_argument("--pref-hot", type=int, default=0,
-                    help="adversarial preference-pair soak: N scored "
-                         "completions, one prompt holds 30%% of them")
-    ap.add_argument("--knn-vecs", type=int, default=0,
-                    help="brute-knn plan-shape soak: N corpus vectors "
-                         "x 2 queries, sharded vs bare-window top-k")
-    ap.add_argument("--knn-dims", type=int, default=32,
-                    help="vector dims for --knn-vecs (small dims "
-                         "isolate the selection stage from scoring)")
-    ap.add_argument("--span-hot", type=int, default=0,
-                    help="adversarial duplicate-span skew soak: ONE "
-                         "boilerplate run in ~30%% of N docs")
-    ap.add_argument("--delta-dedup", type=int, default=0,
-                    help="incremental dedup store soak: build on N, "
-                         "ingest N/10, compare vs full recompute")
-    ap.add_argument("--delta-frac", type=float, default=0.1,
-                    help="delta-dedup soak: delta batch size as a "
-                         "fraction of the base (0.1 mirrors a crawl "
-                         "increment; >=0.5 for scaling runs where the "
-                         "ingest wall must be variable-cost dominated)")
-    ap.add_argument("--skip-recompute", action="store_true",
-                    help="delta-dedup soak: skip the from-scratch "
-                         "near_dedup comparison leg (lo-cores scaling "
-                         "runs only need build+ingest)")
-    ap.add_argument("--cap-hot", type=int, default=0,
-                    help="adversarial per-source-cap skew soak: ONE "
-                         "source holds ~30%% of N docs")
-    ap.add_argument("--cap-naive", action="store_true",
-                    help="cap-hot soak: time the naive single-window "
-                         "plan instead (hot-source single-task "
-                         "comparison leg)")
-    ap.add_argument("--cap-sources", type=int, default=5000,
-                    help="cap-hot soak: tail-source cardinality. 5000 "
-                         "makes EVERY source over-cap (worst case: all "
-                         "rows take the salted windows); a large value "
-                         "(e.g. N/50) keeps the tail under-cap so ~70%% "
-                         "of rows take the zero-shuffle cold path "
-                         "(realistic shape)")
-    ap.add_argument("--classifier-docs", type=int, default=0,
-                    help="LR-trainer soak: stage features + 2 training "
-                         "rounds over N labeled docs, lo/hi")
-    ap.add_argument("--pq-methods", default="expr,arrow",
-                    help="PQ soak: comma list of encode methods to time")
-    ap.add_argument("--pq-vecs", type=int, default=0,
-                    help="PQ soak: encode pass lo/hi + one Lloyd "
-                         "training round over N vectors")
-    ap.add_argument("--sft-turns", type=int, default=0,
-                    help="SFT soak: sft_examples + transcript_lint + "
-                         "context_tail over N synthetic turns, lo/hi")
-    ap.add_argument("--textproj-docs", type=int, default=0,
-                    help="text-projection soak: line_filter + "
-                         "subword_encode passes over N line-wrapped "
-                         "docs, lo/hi")
-    ap.add_argument("--funnel-events", type=int, default=0,
-                    help="event-analytics soak: windowed funnel + "
-                         "retention over N events with a 10%%-hot bot "
-                         "user, lo/hi")
-    ap.add_argument("--funnel-op", choices=("both", "funnel", "retention"),
-                    default="both",
-                    help="which event-analytics op the soak times "
-                         "(funnel is ~5x faster per event than "
-                         "retention — size N per op for minutes-long "
-                         "walls)")
-    ap.add_argument("--engagement-events", type=int, default=0,
-                    help="run the engagement-analytics soak over N "
-                         "synthetic events (rolling actives / RFM / "
-                         "CUSUM / correlations) and exit")
-    ap.add_argument("--engagement-op",
-                    choices=("all", "actives", "rfm", "cusum", "corr"),
-                    default="all",
-                    help="which op the --engagement-events soak times")
-    ap.add_argument("--bm25-docs", type=int, default=0,
-                    help="BM25 retrieval soak: score 8 probe queries "
-                         "over N synthetic docs (one tokenize scan, "
-                         "two censuses, sharded top-k), lo/hi")
-    ap.add_argument("--seq-events", type=int, default=0,
-                    help="sequence-operator soak: transition matrix / "
-                         "rate anomalies / as-of attribution over N "
-                         "events with a 10%%-hot bot user, lo/hi")
-    ap.add_argument("--seq-op",
-                    choices=("all", "transitions", "anomalies", "asof",
-                             "interevent", "resample", "occupancy"),
-                    default="all",
-                    help="which sequence op the --seq-events soak times")
-    ap.add_argument("--graph-members", type=int, default=0,
-                    help="co-occurrence graph soak: edges + triangle "
-                         "census over N membership rows with planted "
-                         "over-cap mega-groups, lo/hi")
-    ap.add_argument("--rank-rows", type=int, default=0,
-                    help="census-rank soak over continuous doubles "
-                         "(corpus-sized census): spearman / mann-"
-                         "whitney / ks via the bucketed prefix-sum "
-                         "path, lo/hi")
-    ap.add_argument("--skewjoin-rows", type=int, default=0,
-                    help="skew-join soak: fact N rows (one key = 30%%) "
-                         "vs 5M-key dim — plain join (AQE on/off) vs "
-                         "skew_join, identical-result assert")
-    ap.add_argument("--boot-rows", type=int, default=0,
-                    help="Poisson-bootstrap soak: N rows x 64 "
-                         "replicates of md5 Poisson weights, lo/hi")
-    ap.add_argument("--setsim-docs", type=int, default=0,
-                    help="exact set-similarity join soak over N docs "
-                         "with planted near-dup clusters, lo/hi")
-    ap.add_argument("--fuzzy-names", type=int, default=0,
-                    help="blocked fuzzy-linkage soak over N serial "
-                         "names (blocks of 100, lev<=1), lo/hi")
-    ap.add_argument("--sweep-intervals", type=int, default=0,
-                    help="interval-concurrency sweep soak over N "
-                         "intervals (census + calendar window), lo/hi")
-    args = ap.parse_args()
+    select = ap.add_mutually_exclusive_group()
+    for lg in LEGS:
+        if lg.selector:
+            select.add_argument(lg.selector, type=int, default=0, help=lg.help)
+        for names, kwargs in lg.flags:
+            ap.add_argument(*names, **kwargs)
+    return ap
 
-    if args.setsim_docs:
-        _setsim_soak(args)
-        return
-    if args.fuzzy_names:
-        _fuzzy_soak(args)
-        return
-    if args.sweep_intervals:
-        _sweep_soak(args)
-        return
-    if args.skewjoin_rows:
-        _skewjoin_soak(args)
-        return
-    if args.boot_rows:
-        _boot_soak(args)
-        return
-    if args.graph_members:
-        _graph_soak(args)
-        return
-    if args.rank_rows:
-        _rank_soak(args)
-        return
-    if args.engagement_events:
-        _engagement_soak(args)
-        return
-    if args.bm25_docs:
-        _bm25_soak(args)
-        return
-    if args.seq_events:
-        _seq_soak(args)
-        return
-    if args.funnel_events:
-        _funnel_soak(args)
-        return
-    if args.classifier_docs:
-        _classifier_soak(args)
-        return
-    if args.pq_vecs:
-        _pq_soak(args)
-        return
-    if args.sft_turns:
-        _sft_soak(args)
-        return
-    if args.textproj_docs:
-        _textproj_soak(args)
-        return
-    if args.corpus_full:
-        _corpus_full_soak(args)
-        return
-    if args.dedup_docs:
-        _dedup_soak(args)
-        return
-    if args.corpus_docs:
-        _corpus_soak(args)
-        return
-    if args.semdedup_vecs:
-        _semdedup_soak(args)
-        return
-    if args.semdecon_vecs:
-        _semdecon_soak(args)
-        return
-    if args.drift_docs:
-        _drift_soak(args)
-        return
-    if args.dsir_docs:
-        _dsir_soak(args)
-        return
-    if args.ppl_docs:
-        _ppl_soak(args)
-        return
-    if args.segdedup_hot:
-        _segdedup_hot_soak(args)
-        return
-    if args.span_hot:
-        _span_hot_soak(args)
-        return
-    if args.pref_hot:
-        _pref_hot_soak(args)
-        return
-    if args.knn_vecs:
-        _knn_shape_soak(args)
-        return
-    if args.delta_dedup:
-        _delta_dedup_soak(args)
-        return
-    if args.cap_hot:
-        _cap_hot_soak(args)
-        return
 
-    from grass_spark.datagen import synth_transcripts
-    from grass_spark.operators.rollup import RollupPipeline
-    from grass_spark.session import get_spark
+def parse_args(argv: list[str] | None = None) -> tuple[Leg, argparse.Namespace]:
+    """Parse the command line once; return the selected leg (the rollup
+    leg when no selector flag is given) and the parsed args.  Two
+    selector flags, or ``--cores`` <= LO_CORES on a lo/hi leg, exit 2."""
+    ap = build_parser()
+    args = ap.parse_args(argv)
+    chosen = [lg for lg in LEGS if lg.selector and getattr(args, lg.dest)]
+    lg = chosen[0] if chosen else next(lg for lg in LEGS if lg.selector is None)
+    if lg.lohi and args.cores <= LO_CORES:
+        ap.error(f"{lg.selector} times lo={LO_CORES} cores against "
+                 f"hi=--cores; --cores must be > {LO_CORES}")
+    return lg, args
 
-    n_convs = args.turns // args.avg_turns
-    raw_path = os.path.join(args.data, f"raw_{n_convs}_{args.avg_turns}")
-    marker = raw_path + "_done"
 
-    gen_sec = 0.0
-    if not os.path.exists(marker):
-        spark = get_spark("soak_gen", cores=None, shuffle_partitions=256)
-        t0 = time.perf_counter()
-        df = synth_transcripts(
-            spark, n_convs=n_convs, avg_turns=args.avg_turns, seed=42,
-            partitions=256,
-        )
-        df.write.mode("overwrite").parquet(raw_path)
-        gen_sec = round(time.perf_counter() - t0, 1)
-        spark.stop()
-        open(marker, "w").write("ok")
-
-    tiers_dir = os.path.join(
-        args.data,
-        f"tiers_{args.layout}{'_c' if args.compress else ''}"
-        f"{'_sk' if args.sketches else ''}",
-    )
-    shutil.rmtree(tiers_dir, ignore_errors=True)
-
-    spark = get_spark(
-        "soak_pipeline", cores=args.cores,
-        shuffle_partitions=max(args.cores * 4, 32),
-        extra_conf={"spark.sql.warehouse.dir": os.path.join(args.data, "wh")},
-    )
-    raw = spark.read.parquet(raw_path)
-    turns = raw.count()
-    pipe = RollupPipeline(
-        tiers_dir, layout=args.layout, buckets=args.buckets,
-        compress=args.compress, sketches=args.sketches,
-    )
-    t0 = time.perf_counter()
-    results = pipe.run(raw, input_fingerprint="soak")
-    pipeline_sec = round(time.perf_counter() - t0, 1)
-
-    sketch_read = None
-    if args.sketches:
-        from pyspark.sql import functions as F
-
-        def _noop(df):
-            df.write.format("noop").mode("overwrite").save()
-
-        # the read the sketch path buys: day-level holistic stats from
-        # the STORED day-tier sketches (no raw scan) ...
-        t0 = time.perf_counter()
-        _noop(pipe.read_tier_approx(spark, "t1d", {"median": 0.5, "perc90": 0.9}))
-        approx_sec = round(time.perf_counter() - t0, 2)
-        # ... vs the exact raw re-scan it replaces
-        t0 = time.perf_counter()
-        _noop(
-            raw.withColumn("value", F.length("text").cast("double"))
-            .groupBy("conv_id", F.date_trunc("day", "ts").alias("d"))
-            .agg(
-                F.expr("percentile(value, array(0.5D, 0.9D))").alias("q"),
-                F.count_distinct("text").alias("nd"),
-            )
-        )
-        exact_sec = round(time.perf_counter() - t0, 2)
-        sketch_read = {
-            "approx_day_stats_sec": approx_sec,
-            "exact_raw_rescan_sec": exact_sec,
-            "read_speedup": round(exact_sec / max(approx_sec, 1e-9), 2),
-        }
-
-    out = {
-        "turns": int(turns),
-        "n_convs": n_convs,
-        "cores": args.cores,
-        "layout": args.layout,
-        "buckets": args.buckets,
-        "compress": bool(args.compress),
-        "gen_sec": gen_sec,
-        "pipeline_sec": pipeline_sec,
-        "turns_per_sec": round(turns / pipeline_sec),
-        "tiers": [
-            {"tier": r.name, "rows": r.rows_out, "days": len(r.days_written)}
-            for r in results
-        ],
-    }
-    if sketch_read:
-        out["sketches"] = True
-        out["sketch_read"] = sketch_read
-    spark.stop()
-    print(json.dumps(out))
+def main(argv: list[str] | None = None) -> None:
+    lg, args = parse_args(argv)
+    lg.fn(args)
 
 
 if __name__ == "__main__":

@@ -15,7 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from grass_spark.datagen import synth_transcripts
-from grass_spark.operators.bucketed import read_bucketed, write_bucketed
+from grass_spark.operators.bucketed import write_bucketed
 from grass_spark.operators.rollup import rollup_from_raw, rollup_from_tier
 
 ORIGIN = dt.datetime(2024, 1, 1)
@@ -119,7 +119,7 @@ def test_sort_columns_filtered_to_schema(spark, bucketed_raw):
     base = bucketed_raw["base"]
     tier = rollup_from_raw(bucketed_raw["table"], "1 day", ORIGIN, ["conv_id"])
     t = write_bucketed(tier, "t_day_b", buckets=4, path=str(base / "day_b"))
-    assert read_bucketed(spark, "t_day_b").count() == tier.count()
+    assert spark.table("t_day_b").count() == tier.count()
     spark.sql("DROP TABLE IF EXISTS t_day_b")
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from grass_spark.manifest import CheckpointManifest, PartitionEntry, TierRecord
 
 
@@ -105,3 +107,26 @@ def test_metrics_returns_copies(tmp_path):
     m.record_many([PartitionEntry(tier="t1m", part="d1", rows_out=1)])
     m.metrics()[0]["rows_out"] = 99
     assert m.metrics()[0]["rows_out"] == 1
+
+
+def test_layout_pin_write_crash_leaves_store_reopenable(tmp_path, monkeypatch):
+    """A crash inside the first ``_layout.json`` write must not leave a
+    truncated pin: the pin goes through the same tmp + ``os.replace``
+    step as the manifest, so the next open sees no pin and re-pins."""
+    from grass_spark.operators.rollup import RollupPipeline
+
+    base = str(tmp_path / "store")
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj, **kw)[:5])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            RollupPipeline(base)
+
+    pipe = RollupPipeline(base)
+    assert pipe.layout == "plain"
+    with open(os.path.join(base, "_layout.json")) as f:
+        assert json.load(f) == {"layout": "plain"}
