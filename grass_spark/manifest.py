@@ -74,8 +74,15 @@ class CheckpointManifest:
         """Partitions already completed for ``tier``.  If a fingerprint
         is given, entries computed from a *different* input snapshot do
         not count as done (the input changed -> recompute)."""
+        return set(self.finished_map(tier, input_fingerprint))
+
+    def finished_map(
+        self, tier: str, input_fingerprint: str | None = None,
+    ) -> dict[str, float]:
+        """part -> ``finished_at`` for the partitions :meth:`done_parts`
+        lists, so a tier's partition can be ordered against its source's."""
         return {
-            e["part"]
+            e["part"]: e["finished_at"]
             for e in self._data["partitions"]
             if e["tier"] == tier
             and e["status"] == "ok"

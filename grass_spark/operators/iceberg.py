@@ -57,11 +57,11 @@ def create_tier_table(
     layout.
 
     ``conv_buckets`` composes day pruning WITH conversation
-    co-location.  This is the composition plain parquet cannot deliver
-    incrementally: OSS Spark's ``insertInto`` rejects ``bucketBy``, so
-    a bucketed parquet table cannot take dynamic per-day overwrites —
-    Iceberg's ``bucket()`` partition transform has no such limit
-    (``overwritePartitions`` works unchanged), and with
+    co-location — the Iceberg form of the bucketed parquet tier, which
+    takes dynamic per-day overwrites through ``insertInto`` into its
+    ``CLUSTERED BY`` table.  Iceberg's ``bucket()`` partition transform
+    takes them through ``overwritePartitions`` unchanged, committed
+    atomically across days, and with
     ``spark.sql.sources.v2.bucketing.enabled`` (storage-partitioned
     joins, Spark 3.3+) scans over the bucket transform expose the same
     shuffle-free grouping ``operators/bucketed.py`` proves on

@@ -58,7 +58,6 @@ from grass_spark.manifest import (
     TierRecord,
     write_json_atomic,
 )
-from grass_spark.operators.bucketed import write_bucketed
 
 #: integer metric columns carried by every tier, in column order
 TIER_METRICS = ("turn_cnt", *[f"n_{r}" for r in ROLES], "tool_calls",
@@ -66,14 +65,6 @@ TIER_METRICS = ("turn_cnt", *[f"n_{r}" for r in ROLES], "tool_calls",
 
 #: tier name -> granularity, in cascade order
 DEFAULT_TIERS = (("t1m", "1 minute"), ("t1h", "1 hour"), ("t1d", "1 day"))
-
-#: auto-layout density threshold: raw rows per (day, tier-0 bucket)
-#: below which the bucketed publish premium (measured 1.4-2.1x on
-#: day-sparse shapes, BASELINE.md "Layout write-cost comparison") is not
-#: repaid — the adversarial 10^8-turn shape sits at ~220 rows/bucket-day
-#: (plain wins), the dense bench shape at ~6k (bucketed wins); 4096
-#: splits the measured configs
-MIN_BUCKET_DAY_ROWS = 4096
 
 
 def _role_count(role: str):
@@ -216,10 +207,8 @@ class RollupPipeline:
         buckets: int | dict[str, int] = 64,
         sketches: bool = False,
     ):
-        if layout not in ("plain", "bucketed", "auto"):
-            raise ValueError(
-                f"layout must be 'plain', 'bucketed' or 'auto', got {layout!r}"
-            )
+        if layout not in ("plain", "bucketed"):
+            raise ValueError(f"layout must be 'plain' or 'bucketed', got {layout!r}")
         self.base_dir = base_dir
         self.tiers = tiers
         self.keys = ["conv_id"] if keys is None else list(keys)
@@ -265,19 +254,6 @@ class RollupPipeline:
             os.path.isdir(os.path.join(self.base_dir, name))
             for name, _ in self.tiers
         )
-        if self.layout == "auto":
-            if os.path.exists(pin_path):
-                # an existing store's layout is a fact, not a choice —
-                # adopt the pin (re-deciding would mix layouts)
-                with open(pin_path) as f:
-                    prior = json.load(f)
-                self.layout = prior["layout"]
-                if "buckets" in prior:
-                    self.buckets = prior["buckets"]
-                return
-            if not has_tier_data:
-                return  # defer: run() resolves from measured day density
-            self.layout = "plain"  # legacy pre-pin files are plain
         pin = {"layout": self.layout}
         if self.layout == "bucketed":
             pin["buckets"] = self.buckets
@@ -309,28 +285,6 @@ class RollupPipeline:
             )
         write_json_atomic(pin_path, pin)
 
-    def _resolve_auto_layout(self, day_counts: dict[str, int]) -> None:
-        """Pick plain vs bucketed from MEASURED day density (the rule
-        BASELINE.md's write-cost matrix derives): the bucketed publish
-        pays a 1.4-2.1x write premium when (day, bucket) files are tiny
-        — day-sparse shapes route to plain; dense conversation-keyed
-        days repay the premium with 0-Exchange reads.  The decision is
-        pinned (a store never mixes layouts) and recorded in the
-        manifest with its evidence."""
-        vals = sorted(day_counts.values())
-        median_day_rows = vals[len(vals) // 2]
-        nb = self._buckets_for(self.tiers[0][0])
-        dense = median_day_rows >= MIN_BUCKET_DAY_ROWS * nb
-        self.layout = "bucketed" if dense else "plain"
-        self._check_layout_pin()
-        self.manifest.set_meta("layout_decision", {
-            "layout": self.layout,
-            "median_day_rows": int(median_day_rows),
-            "n_days": len(vals),
-            "buckets_t0": nb,
-            "threshold_rows_per_bucket_day": MIN_BUCKET_DAY_ROWS,
-        })
-
     def _buckets_for(self, name: str) -> int:
         if isinstance(self.buckets, dict):
             try:
@@ -347,24 +301,41 @@ class RollupPipeline:
         h = hashlib.md5(os.path.abspath(self.base_dir).encode()).hexdigest()[:8]
         return f"rollup_{h}_{name}"
 
-    def _attach_bucketed(self, spark: SparkSession, name: str) -> str:
-        """Ensure the catalog entry for an on-disk bucketed tier exists
-        (the in-memory catalog is session-scoped; tier FILES survive a
-        restart, the table metadata does not).  Idempotent."""
+    def _attach_bucketed(
+        self, spark: SparkSession, name: str, schema=None,
+    ) -> str:
+        """Ensure the catalog entry for a bucketed tier exists (the
+        in-memory catalog is session-scoped; tier FILES survive a
+        restart, the table metadata does not).  Its columns come from the
+        day directories on disk, or, for a tier with none yet, from
+        ``schema`` (the frame about to be written).  An entry whose day
+        directories are gone (the store was deleted) is dropped and
+        re-created, so a store rebuilt at the same ``base_dir`` never
+        reads through a stale entry.  Idempotent."""
         table = self._table_name(name)
-        if not spark.catalog.tableExists(table):
-            path = self.tier_path(name)
-            schema = spark.read.parquet(path).drop("d").schema
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            ck = ", ".join(f"`{k}`" for k in self.keys)
-            spark.sql(
-                f"CREATE TABLE {table} ({cols}, d string) USING PARQUET "
-                f"PARTITIONED BY (d) CLUSTERED BY ({ck}) "
-                f"SORTED BY ({ck}, `bucket_start`) INTO {self._buckets_for(name)} BUCKETS "
-                f"LOCATION '{path}'"
-            )
+        path = self.tier_path(name)
+        on_disk = os.path.isdir(path) and any(
+            e.startswith("d=") for e in os.listdir(path)
+        )
+        if spark.catalog.tableExists(table):
+            if on_disk:
+                return table
+            spark.sql(f"DROP TABLE {table}")
+        if on_disk or schema is None:
+            schema = spark.read.parquet(path).schema
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in schema.fields if f.name != "d"
+        )
+        ck = ", ".join(f"`{k}`" for k in self.keys)
+        os.makedirs(path, exist_ok=True)  # a missing location warns on every scan
+        spark.sql(
+            f"CREATE TABLE {table} ({cols}, d string) USING PARQUET "
+            f"PARTITIONED BY (d) CLUSTERED BY ({ck}) "
+            f"SORTED BY ({ck}, `bucket_start`) INTO {self._buckets_for(name)} BUCKETS "
+            f"LOCATION '{path}'"
+        )
+        if on_disk:
             spark.catalog.recoverPartitions(table)
         return table
 
@@ -482,11 +453,7 @@ class RollupPipeline:
         raw_day_counts = {r["d"]: int(r["n"]) for r in days}
         t0 = min(r["t0"] for r in days)
 
-        if self.layout == "auto":
-            self._resolve_auto_layout(raw_day_counts)
-
         results: list[TierResult] = []
-        lower_days: set[str] | None = None  # days (re)written in the lower tier
         for i, (name, gran) in enumerate(self.tiers):
             origin = adjust_datetime_to_granularity(t0, gran)
             src = "raw" if i == 0 else self.tiers[i - 1][0]
@@ -503,12 +470,17 @@ class RollupPipeline:
                     d for d, n in recorded.items()
                     if raw_day_counts.get(d) == n
                 }
-            elif resume and incremental:
-                done_now = self.manifest.done_parts(name, None)
             elif resume:
-                done_now = self.manifest.done_parts(name, input_fingerprint or None)
-            if resume and lower_days is not None:
-                done_now -= lower_days
+                fp = None if incremental else (input_fingerprint or None)
+                # an upper-tier day is done only if it was recorded after
+                # the lower tier's same day: a run cut between two tiers
+                # (or between a tier's commit and its manifest entry)
+                # leaves the lower day newer, and the day is redone
+                below = self.manifest.finished_map(src) if i else {}
+                done_now = {
+                    d for d, t in self.manifest.finished_map(name, fp).items()
+                    if t > below.get(d, 0.0)
+                }
             if i == 0:
                 src = raw
                 if done_now:
@@ -529,7 +501,7 @@ class RollupPipeline:
             res = self._write_tier(
                 spark, tiered, name, gran,
                 input_fingerprint=input_fingerprint,
-                done=done_now if resume else set(),
+                done=done_now,
                 rows_in_map=raw_day_counts if i == 0 else None,
                 n_days=len(raw_day_counts),
                 record=record,
@@ -549,7 +521,6 @@ class RollupPipeline:
                         "command": rec["command"] + f" | blocks(ratio={codec['ratio']})",
                     }),
                 )
-            lower_days = set(res.days_written)
         return results
 
     # ------------------------------------------------------------------
@@ -561,19 +532,15 @@ class RollupPipeline:
         bucketBy(buckets, keys) layout — day pruning AND shuffle-free
         per-conversation plans from the SAME table.
 
-        OSS Spark's ``insertInto`` rejects ``bucketBy`` (PLANS.md
-        "Bucketed tier storage"), so incremental day overwrite cannot go
-        through the writer.  Instead changed days are written to a
-        STAGING table with the identical bucket spec and their day
-        directories are swapped into the main table's location, then the
-        catalog is refreshed — the parquet-sandbox analog of Iceberg's
-        ``overwritePartitions`` commit (operators/iceberg.py holds the
-        production mapping).  Bucket file names carry the bucket id, so
-        a moved file keeps its bucket assignment.
+        The tier's catalog table declares the bucket spec, so an
+        ``insertInto(overwrite=True)`` under dynamic partition overwrite
+        replaces exactly the days it writes, hashes each row into its
+        bucket file and registers new days — the same commit the plain
+        layout uses (only the writer's ``.bucketBy()`` is unsupported by
+        ``insertInto``, not a bucketed target table).  It is the
+        parquet-sandbox analog of Iceberg's ``overwritePartitions``
+        (operators/iceberg.py holds the production mapping).
         """
-        import shutil
-
-        path = self.tier_path(name)
         # Route rows by (day, writer-bucket-id): a (day, bucket) group
         # never splits across tasks (F.hash IS the writer's murmur3
         # bucket hash), so each task writes one file per group it holds
@@ -596,50 +563,9 @@ class RollupPipeline:
         cap = max(4096, 64 * par)
         n_tasks = min(n_days * nb, cap) if n_days else nb
         out = tiered.repartition(n_tasks, F.col("d"), bucket_id)
-        # a fresh tier is written in place; changed days of an existing
-        # one go to the staging table and are swapped in below
-        fresh = not os.path.isdir(path)
-        stg_path, stg_table = path + "_stg", self._table_name(name) + "_stg"
-        if not fresh:
-            shutil.rmtree(stg_path, ignore_errors=True)
-        write_bucketed(
-            out, self._table_name(name) if fresh else stg_table,
-            buckets=nb, key=self.keys, sort=(*self.keys, "bucket_start"),
-            partition_by=("d",), path=path if fresh else stg_path,
-        )
-        if fresh:
-            return
-        staged = [
-            e for e in os.listdir(stg_path) if e.startswith("d=")
-        ] if os.path.isdir(stg_path) else []
-        # Crash-consistent swap: old day -> hidden aside dir (leading
-        # dot: invisible to Spark's file listing / partition discovery),
-        # staged day in, THEN delete the aside.  A crash at any point
-        # leaves either the old day, the aside (restored below), or the
-        # new day — never a half-swapped directory a reader could see.
-        # Leftover asides from a prior crash: restore when the original
-        # day dir is missing (crash fell between aside and move-in —
-        # the restore stands even if this run doesn't re-stage that
-        # day), else the move-in completed and the aside is garbage.
-        for e in os.listdir(path):
-            if e.startswith(".d=") and e.endswith(".old"):
-                orig = os.path.join(path, e[1:-len(".old")])
-                if not os.path.isdir(orig):
-                    os.rename(os.path.join(path, e), orig)
-                else:
-                    shutil.rmtree(os.path.join(path, e), ignore_errors=True)
-        for part in staged:
-            dst = os.path.join(path, part)
-            aside = os.path.join(path, f".{part}.old")
-            if os.path.isdir(dst):
-                os.rename(dst, aside)
-            shutil.move(os.path.join(stg_path, part), dst)
-            shutil.rmtree(aside, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {stg_table}")
-        shutil.rmtree(stg_path, ignore_errors=True)
-        table = self._attach_bucketed(spark, name)
-        spark.sql(f"REFRESH TABLE {table}")
-        spark.catalog.recoverPartitions(table)
+        table = self._attach_bucketed(spark, name, out.schema)
+        # insertInto matches columns by POSITION: select the table's order
+        out.select(*spark.table(table).columns).write.insertInto(table, overwrite=True)
 
     # ------------------------------------------------------------------
     def _write_tier(

@@ -3,7 +3,7 @@
 Runs the FULL PERSISTED pipeline — not the in-memory bench cascade —
 over ~10^8 synthesized turns at a fixed parallelism, to surface the
 behaviors 30-second runs cannot: block-store month-group memory, the
-bucketed staging-swap publish at thousands of day×bucket files, spill
+bucketed insertInto publish at thousands of day×bucket files, spill
 under real write pressure, and manifest bookkeeping at ~10^2 days ×
 10^2 buckets.
 

@@ -89,8 +89,8 @@ def test_snapshot_id_advances(spark, tier_df):
 
 def test_composed_day_and_conv_bucket_transform(spark, tier_df):
     """days(bucket_start) + bucket(8, conv_id) in one partition spec —
-    the composition plain parquet cannot take incrementally (insertInto
-    rejects bucketBy); dynamic overwritePartitions must still work."""
+    the Iceberg form of the bucketed parquet tier; dynamic
+    overwritePartitions must still work."""
     _skip_unless_available(spark)
     create_tier_table(
         spark, "local.db.t1h_pb", tier_df, conv_buckets=8,

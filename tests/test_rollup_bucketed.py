@@ -3,25 +3,33 @@ composed partitionBy(d) + bucketBy(N, conv_id) layout (round-2 VERDICT
 item #1) — day pruning for resume AND shuffle-free per-conversation
 plans from the same pipeline-written tables.
 
-Incremental day overwrite cannot go through the writer (OSS Spark's
-insertInto rejects bucketBy), so changed days are staged into a twin
-bucketed table and their day directories swapped — the parquet analog of
-Iceberg overwritePartitions.  These tests pin: result parity with the
-plain layout, both resume modes, the 0-Exchange plan contract on
-PIPELINE-written (not hand-written) tiers, cross-session catalog
-re-attach, and the bucket-count mismatch guard.
+A tier is published with one ``insertInto(overwrite=True)`` into its
+``CLUSTERED BY`` catalog table under dynamic partition overwrite — the
+same Spark commit as the plain layout, which replaces exactly the days
+it writes.  These tests pin: result parity with the plain layout, both
+resume modes, the 0-Exchange plan contract on PIPELINE-written (not
+hand-written) tiers, cross-session catalog re-attach, a store rebuilt
+at the same base_dir, the bucket-count mismatch guard, the jobs one run
+launches, and — over both layouts — that a run cut by a failed write
+task, by a crash between Spark's commit and the manifest entry, or
+between two tiers is reconciled by the next run.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from grass_spark.datagen import synth_transcripts
+from grass_spark.manifest import CheckpointManifest
 from grass_spark.operators.rollup import RollupPipeline, rollup_from_tier
 from grass_spark.functions.granularity import adjust_datetime_to_granularity
+
+from test_rollup_run import BASE_TURNS, NEW_DAY_TURNS, _raw as _turns
 
 
 def _raw(spark, n_convs=30, avg_turns=25):
@@ -102,7 +110,7 @@ def test_bucketed_incremental_append_and_backfill(spark, tmp_path):
         == full.count()
     )
 
-    # backfill an existing day: exactly that day re-swapped
+    # backfill an existing day: exactly that day rewritten
     target_day = sorted(orig_days)[0]
     extra = full.filter(F.date_format("ts", "yyyy-MM-dd") == target_day).limit(5)
     fuller = full.unionByName(extra)
@@ -212,143 +220,6 @@ def test_bucketed_file_count_is_buckets_per_day(spark, tmp_path):
         assert len(files) <= 4, f"{part}: {len(files)} files"
 
 
-# ---------------------------------------------------------------- crash swap
-def _days_of(raw):
-    return sorted(
-        str(r["d"]) for r in raw.select(
-            F.date_format("ts", "yyyy-MM-dd").alias("d")).distinct().collect()
-    )
-
-
-def _backfill(raw, day, n=5):
-    extra = raw.filter(F.date_format("ts", "yyyy-MM-dd") == day).limit(n)
-    return raw.unionByName(extra)
-
-
-def test_swap_crash_between_aside_and_movein_recovers(spark, tmp_path, monkeypatch):
-    """Inject a crash AFTER the old day is moved aside but BEFORE the
-    staged day moves in (the round-3 VERDICT swap-window nit).  Readers
-    must never see a half-swapped partition, and a resume run must
-    restore the day."""
-    import shutil
-
-    raw = _raw(spark)
-    base = str(tmp_path / "tiers")
-    RollupPipeline(base, layout="bucketed", buckets=4).run(raw, incremental=True)
-    day = _days_of(raw)[0]
-    fuller = _backfill(raw, day).cache()
-
-    real_move = shutil.move
-
-    def crashing_move(src, dst):
-        raise RuntimeError("injected crash between aside and move-in")
-
-    monkeypatch.setattr(shutil, "move", crashing_move)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        RollupPipeline(base, layout="bucketed", buckets=4).run(
-            fuller, incremental=True
-        )
-    monkeypatch.setattr(shutil, "move", real_move)
-
-    pipe = RollupPipeline(base, layout="bucketed", buckets=4)
-    root = pipe.tier_path("t1m")
-    # old day preserved in the hidden aside; no visible half-swapped dir
-    assert os.path.isdir(os.path.join(root, f".d={day}.old"))
-    assert not os.path.isdir(os.path.join(root, f"d={day}"))
-    visible = spark.read.parquet(root).select(
-        F.col("d").cast("string")).distinct().collect()
-    days_seen = {r["d"] for r in visible}
-    assert day not in days_seen and not any(d.endswith(".old") for d in days_seen)
-
-    # resume restores the day and the cascade reconciles end-to-end
-    RollupPipeline(base, layout="bucketed", buckets=4).run(
-        fuller, incremental=True
-    )
-    assert (
-        pipe.read_tier(spark, "t1d").agg(F.sum("turn_cnt")).collect()[0][0]
-        == fuller.count()
-    )
-    assert not any(e.endswith(".old") for e in os.listdir(root))
-    fuller.unpersist()
-
-
-def test_swap_crash_after_movein_keeps_new_day(spark, tmp_path, monkeypatch):
-    """Crash AFTER the staged day moved in but BEFORE the aside is
-    deleted: readers see exactly the new day once; the leftover aside is
-    garbage-collected by the next run's sweep."""
-    import shutil
-
-    raw = _raw(spark)
-    base = str(tmp_path / "tiers")
-    RollupPipeline(base, layout="bucketed", buckets=4).run(raw, incremental=True)
-    day = _days_of(raw)[0]
-    fuller = _backfill(raw, day).cache()
-
-    real_rmtree = shutil.rmtree
-
-    def crashing_rmtree(p, *a, **kw):
-        if str(p).endswith(".old"):
-            raise RuntimeError("injected crash before aside delete")
-        return real_rmtree(p, *a, **kw)
-
-    monkeypatch.setattr(shutil, "rmtree", crashing_rmtree)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        RollupPipeline(base, layout="bucketed", buckets=4).run(
-            fuller, incremental=True
-        )
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-
-    pipe = RollupPipeline(base, layout="bucketed", buckets=4)
-    root = pipe.tier_path("t1m")
-    # new day is visible exactly once (no duplication from the aside)
-    day_rows = spark.read.parquet(root).filter(
-        F.col("d").cast("string") == day
-    )
-    expect = fuller.filter(F.date_format("ts", "yyyy-MM-dd") == day).count()
-    assert day_rows.agg(F.sum("turn_cnt")).collect()[0][0] == expect
-    # recovery run reconciles and sweeps the aside
-    RollupPipeline(base, layout="bucketed", buckets=4).run(
-        fuller, incremental=True
-    )
-    assert not any(e.endswith(".old") for e in os.listdir(root))
-    assert (
-        pipe.read_tier(spark, "t1d").agg(F.sum("turn_cnt")).collect()[0][0]
-        == fuller.count()
-    )
-    fuller.unpersist()
-
-
-def test_swap_sweep_restores_orphaned_aside(spark, tmp_path):
-    """An aside whose original day dir is MISSING (crash between aside
-    and move-in) is RESTORED by the next swap's sweep, not deleted —
-    old data survives even if that day isn't re-staged."""
-    import shutil
-
-    raw = _raw(spark)
-    base = str(tmp_path / "tiers")
-    RollupPipeline(base, layout="bucketed", buckets=4).run(raw, incremental=True)
-    pipe = RollupPipeline(base, layout="bucketed", buckets=4)
-    root = pipe.tier_path("t1m")
-    days = _days_of(raw)
-    victim, other = days[0], days[1]
-    before = spark.read.parquet(root).filter(
-        F.col("d").cast("string") == victim).agg(
-        F.sum("turn_cnt")).collect()[0][0]
-    # simulate the crash window by hand on `victim`
-    os.rename(os.path.join(root, f"d={victim}"),
-              os.path.join(root, f".d={victim}.old"))
-    # trigger a swap that stages a DIFFERENT day only
-    fuller = _backfill(raw, other)
-    RollupPipeline(base, layout="bucketed", buckets=4).run(
-        fuller, incremental=True
-    )
-    after = spark.read.parquet(root).filter(
-        F.col("d").cast("string") == victim).agg(
-        F.sum("turn_cnt")).collect()[0][0]
-    assert after == before
-    assert not os.path.isdir(os.path.join(root, f".d={victim}.old"))
-
-
 def test_layout_pin_repins_when_store_empty(spark, tmp_path):
     """A pin written by a constructed-but-never-run pipeline (ADVICE
     rollup.py:204) must not permanently lock an empty store."""
@@ -373,3 +244,189 @@ def test_read_tier_schema_identical_across_layouts(spark, tmp_path):
         a, b = plain.read_tier(spark, name), buck.read_tier(spark, name)
         assert dict(a.dtypes) == dict(b.dtypes), name
         assert dict(a.dtypes)["d"] == "string", name
+
+
+def test_store_deleted_and_rebuilt_in_one_session(spark, tmp_path):
+    """The tier tables' catalog entries outlive a deleted store.  A
+    rebuild at the same base_dir in the same session, here without the
+    sketch columns the deleted store carried, must publish and read the
+    new files through new entries, not the deleted store's."""
+    base = str(tmp_path / "tiers")
+    RollupPipeline(base, layout="bucketed", buckets=4, sketches=True).run(
+        _turns(spark, BASE_TURNS)
+    )
+    shutil.rmtree(base)
+    pipe = RollupPipeline(base, layout="bucketed", buckets=4)
+    pipe.run(_turns(spark, NEW_DAY_TURNS))
+    for name in ("t1m", "t1h", "t1d"):
+        tier = pipe.read_tier(spark, name)
+        assert "len_kll" not in tier.columns, name
+        assert {r["d"] for r in tier.select("d").distinct().collect()} == {"2024-03-06"}
+        assert tier.agg(F.sum("turn_cnt")).collect()[0][0] == len(NEW_DAY_TURNS)
+
+
+#: 40 consecutive days with one turn per day in each of two
+#: conversations, and 5 more days appended to them
+SPAN_TURNS = [
+    (conv, (dt.datetime(2024, 1, 1, 12) + dt.timedelta(days=i)).isoformat(" "))
+    for i in range(40) for conv in ("a", "b")
+]
+SPAN_APPEND = [
+    ("a", (dt.datetime(2024, 2, 10, 12) + dt.timedelta(days=i)).isoformat(" "))
+    for i in range(5)
+]
+#: Spark jobs of a fresh bucketed run over SPAN_TURNS, and of the
+#: incremental run that appends SPAN_APPEND: the fused raw pre-scan (2
+#: under AQE), then per tier the aggregate's shuffle, the pre-write
+#: repartition's shuffle and the insert (the append's upper tiers
+#: launch 2 each).  No job lists the 40-odd day directories.
+BUCKETED_JOB_BUDGET = {"fresh": 11, "append": 9}
+
+
+def _jobs(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, f"bucketed RollupPipeline.run {group}")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bucketed_run_job_budget(spark, tmp_path):
+    base = str(tmp_path / "tiers")
+    raw = _turns(spark, SPAN_TURNS)
+    full = _turns(spark, SPAN_TURNS + SPAN_APPEND)
+    jobs = {
+        "fresh": _jobs(spark, "bucketed-fresh", lambda: RollupPipeline(
+            base, layout="bucketed", buckets=2).run(raw, incremental=True)),
+        "append": _jobs(spark, "bucketed-append", lambda: RollupPipeline(
+            base, layout="bucketed", buckets=2).run(full, incremental=True)),
+    }
+    assert all(jobs[k] <= BUCKETED_JOB_BUDGET[k] for k in jobs), (
+        f"{jobs} jobs, budget {BUCKETED_JOB_BUDGET}"
+    )
+    t1d = RollupPipeline(base, layout="bucketed", buckets=2).read_tier(spark, "t1d")
+    assert t1d.agg(F.sum("turn_cnt")).collect()[0][0] == len(SPAN_TURNS + SPAN_APPEND)
+
+
+# ------------------------------------------------------- crash and resume
+#: turns backfilled into two of BASE_TURNS' days
+BACKFILL = [("a", "2024-03-01 00:00:30"), ("b", "2024-03-04 05:00:02")]
+BACKFILLED_DAYS = ["2024-03-01", "2024-03-04"]
+LAYOUTS = pytest.mark.parametrize(
+    "layout", [{}, {"layout": "bucketed", "buckets": 4}], ids=["plain", "bucketed"]
+)
+
+
+def _tiers(spark, pipe) -> dict[str, list]:
+    """Every tier's rows, in a fixed order."""
+    out = {}
+    for name, _ in pipe.tiers:
+        tier = pipe.read_tier(spark, name)
+        cols = sorted(tier.columns)
+        out[name] = sorted((tuple(r) for r in tier.select(*cols).collect()), key=repr)
+    return out
+
+
+@pytest.fixture(scope="module")
+def backfilled_fresh(spark, tmp_path_factory):
+    """Every tier of a fresh build over the backfilled turns."""
+    pipe = RollupPipeline(str(tmp_path_factory.mktemp("fresh") / "tiers"))
+    pipe.run(_turns(spark, BASE_TURNS + BACKFILL))
+    return _tiers(spark, pipe)
+
+
+def _build_then_crash_backfill(spark, base, layout, monkeypatch, owner, attr, crash):
+    """Build ``base`` incrementally over BASE_TURNS, then run the
+    backfill with ``owner.attr`` wrapped by ``crash`` and expect it to
+    fail.  Returns every tier as it stood before the backfill."""
+    RollupPipeline(base, **layout).run(_turns(spark, BASE_TURNS), incremental=True)
+    before = _tiers(spark, RollupPipeline(base, **layout))
+    monkeypatch.setattr(owner, attr, crash(getattr(owner, attr)))
+    with pytest.raises(Exception, match="injected"):
+        RollupPipeline(base, **layout).run(
+            _turns(spark, BASE_TURNS + BACKFILL), incremental=True
+        )
+    monkeypatch.undo()
+    return before
+
+
+def _assert_rerun_matches_fresh(spark, base, layout, fresh):
+    results = RollupPipeline(base, **layout).run(
+        _turns(spark, BASE_TURNS + BACKFILL), incremental=True
+    )
+    assert {r.name: r.days_written for r in results} == {
+        "t1m": [], "t1h": BACKFILLED_DAYS, "t1d": BACKFILLED_DAYS,
+    }
+    assert _tiers(spark, RollupPipeline(base, **layout)) == fresh
+
+
+@LAYOUTS
+def test_resume_after_crash_between_tiers_matches_fresh_build(
+    spark, tmp_path, monkeypatch, layout, backfilled_fresh,
+):
+    """The backfill run dies after t1m is published, before t1h is
+    written.  t1h's and t1d's entries for the backfilled days are older
+    than t1m's, so the rerun must redo those days there, not keep the
+    stale rows as done."""
+    def crash(write_tier):
+        def crashing(self, spark, tiered, name, *a, **kw):
+            if name == "t1h":
+                raise RuntimeError("injected crash before the t1h write")
+            return write_tier(self, spark, tiered, name, *a, **kw)
+        return crashing
+
+    base = str(tmp_path / "tiers")
+    _build_then_crash_backfill(
+        spark, base, layout, monkeypatch, RollupPipeline, "_write_tier", crash
+    )
+    _assert_rerun_matches_fresh(spark, base, layout, backfilled_fresh)
+
+
+@LAYOUTS
+def test_failed_write_task_keeps_published_days(
+    spark, tmp_path, monkeypatch, layout, backfilled_fresh,
+):
+    """A task of t1h's write fails (on one of the two days it rewrites)
+    and Spark aborts the job: every day t1h and t1d had published stays
+    readable and unchanged, and the rerun matches a fresh build."""
+    def crash(write_tier):
+        def failing_task(self, spark, tiered, name, *a, **kw):
+            if name == "t1h":
+                on_day = F.date_format("bucket_start", "yyyy-MM-dd") == BACKFILLED_DAYS[1]
+                tiered = tiered.withColumn("turn_cnt", F.when(
+                    on_day, F.raise_error(F.lit("injected task failure"))
+                ).otherwise(F.col("turn_cnt")))
+            return write_tier(self, spark, tiered, name, *a, **kw)
+        return failing_task
+
+    base = str(tmp_path / "tiers")
+    before = _build_then_crash_backfill(
+        spark, base, layout, monkeypatch, RollupPipeline, "_write_tier", crash
+    )
+    after = _tiers(spark, RollupPipeline(base, **layout))
+    assert (after["t1h"], after["t1d"]) == (before["t1h"], before["t1d"])
+    _assert_rerun_matches_fresh(spark, base, layout, backfilled_fresh)
+
+
+@LAYOUTS
+def test_crash_between_commit_and_manifest_is_reconciled(
+    spark, tmp_path, monkeypatch, layout, backfilled_fresh,
+):
+    """Spark commits t1h's rewritten days, then the run dies before
+    their manifest entries are saved.  The rerun sees t1h's entries
+    older than t1m's and redoes those days in t1h and t1d."""
+    def crash(record_many):
+        def crashing(self, entries, tiers=None):
+            if tiers and "t1h" in tiers:
+                raise RuntimeError("injected crash after the t1h commit")
+            return record_many(self, entries, tiers)
+        return crashing
+
+    base = str(tmp_path / "tiers")
+    _build_then_crash_backfill(
+        spark, base, layout, monkeypatch, CheckpointManifest, "record_many", crash
+    )
+    _assert_rerun_matches_fresh(spark, base, layout, backfilled_fresh)

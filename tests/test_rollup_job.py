@@ -32,7 +32,7 @@ def test_parse_buckets_int_and_per_tier_spec():
 
 @pytest.mark.parametrize("argv", [
     ["--output", "x", "--bucketed", "4"],  # legacy copy flag is gone
-    ["--output", "x", "--layout", "auto"],  # auto is a library choice only
+    ["--output", "x", "--layout", "auto"],  # no "auto" layout
     ["--synth", "10"],  # --output is required
 ])
 def test_cli_rejects_unknown_or_missing_options(monkeypatch, capsys, argv):
