@@ -935,40 +935,6 @@ class TemporalAlgebra:
     def _as_col(s: _Scalar) -> Column:
         return s.col
 
-    def _policy_extent(self, a_df: DataFrame, policy: str):
-        """(new_time, new_end, keep_pair) under an extent policy.
-
-        Mirrors ``temporal_extent.py``: ``u`` (union) and ``i``
-        (intersect) return None — drop the pair — when the extents are
-        strictly before/after each other; ``d`` (disjoint union) always
-        spans min(start)…max(end) (``temporal_extent.py:210-258``,
-        ``:399-436``).  ``i`` with an instant operand yields the
-        instant (``temporal_extent.py:119-146``)."""
-        a_t, a_e = F.col("__time"), self._end_of(a_df)
-        b_t, b_e = F.col("__b_time"), F.col("__b_end")
-        a_hi = F.coalesce(a_e, a_t)
-        b_hi = F.coalesce(b_e, b_t)
-        disjoint = (a_hi < b_t) | (b_hi < a_t)
-        keep = F.lit(True)
-        if policy == "l":
-            t, e = a_t, a_e
-        elif policy == "r":
-            t, e = b_t, b_e
-        elif policy in ("u", "d"):
-            t = F.least(a_t, b_t)
-            e = F.greatest(a_hi, b_hi)
-            if policy == "u":
-                keep = ~disjoint
-        else:  # "i"
-            t = F.when(a_e.isNull(), a_t).when(b_e.isNull(), b_t).otherwise(
-                F.greatest(a_t, b_t)
-            )
-            e = F.when(a_e.isNull() | b_e.isNull(), F.lit(None).cast("timestamp")).otherwise(
-                F.least(a_hi, b_hi)
-            )
-            keep = ~disjoint
-        return t, e, keep
-
     def _relation_join(self, a, b, fn, relations, policy):
         """Arithmetic across datasets related by arbitrary Allen
         relations (``A {+,during,u} B`` — temporal_raster_base_algebra

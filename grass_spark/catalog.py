@@ -35,7 +35,7 @@ from grass_spark.functions.granularity import (
     granularity_seconds,
     parse_granularity,
 )
-from grass_spark.manifest import CheckpointManifest, PartitionEntry, TierRecord
+from grass_spark.manifest import CheckpointManifest, TierRecord
 
 
 @dataclass
@@ -430,7 +430,7 @@ def group_maps(
 
 
 class TierCatalog:
-    """Directory-backed tier registry (t.create / t.remove / open)."""
+    """Directory-backed tier registry (t.create / t.info / open)."""
 
     def __init__(self, base_dir: str):
         self.base_dir = base_dir
@@ -463,83 +463,6 @@ class TierCatalog:
             self.read(spark, name).withColumnRenamed("bucket_start", "start_time"),
             name, **kw,
         )
-
-
-def copy_tier(catalog: TierCatalog, src: str, dst: str) -> None:
-    """``t.copy``: duplicate a tier — data directory plus catalog row
-    and completed-partition lineage (the reference copies the dataset
-    row + map register, ``temporal/t.copy``)."""
-    import shutil
-
-    tiers = catalog.manifest.tiers()
-    if src not in tiers:
-        raise KeyError(f"unknown tier {src!r}")
-    if os.path.exists(catalog.path(src)):
-        shutil.copytree(catalog.path(src), catalog.path(dst), dirs_exist_ok=True)
-    catalog.manifest.register_tier(dst, TierRecord(**tiers[src]))
-    copied = [
-        PartitionEntry(**{**e, "tier": dst})
-        for e in catalog.manifest.metrics(src)
-    ]
-    if copied:
-        catalog.manifest.record_many(copied)
-
-
-def rename_tier(catalog: TierCatalog, src: str, dst: str) -> None:
-    """``t.rename``: move the data directory and rewrite the catalog
-    row + partition lineage under the new name."""
-    tiers = catalog.manifest.tiers()
-    if src not in tiers:
-        raise KeyError(f"unknown tier {src!r}")
-    if os.path.exists(catalog.path(src)):
-        os.replace(catalog.path(src), catalog.path(dst))
-    catalog.manifest.register_tier(dst, TierRecord(**tiers.pop(src)))
-    del catalog.manifest._data["tiers"][src]
-    for e in catalog.manifest._data["partitions"]:
-        if e["tier"] == src:
-            e["tier"] = dst
-    catalog.manifest._save()
-
-
-def support_tier(catalog: TierCatalog, name: str, **updates) -> None:
-    """``t.support``: update a tier's metadata fields (granularity /
-    source / aggregation / command) in place — the reference's metadata
-    update path (``temporal/t.support``)."""
-    tiers = catalog.manifest.tiers()
-    if name not in tiers:
-        raise KeyError(f"unknown tier {name!r}")
-    rec = {**tiers[name]}
-    unknown = set(updates) - set(rec)
-    if unknown:
-        raise KeyError(f"unknown tier metadata fields {sorted(unknown)}")
-    rec.update(updates)
-    catalog.manifest.register_tier(name, TierRecord(**rec))
-
-
-def unregister_partitions(catalog: TierCatalog, name: str, parts: list[str]) -> None:
-    """``t.unregister``: detach partitions from a tier's register
-    WITHOUT deleting their data (the reference unregisters maps from a
-    dataset but keeps the rasters) — the next resumable run sees them
-    as missing and recomputes/overwrites."""
-    wanted = set(parts)
-    catalog.manifest._data["partitions"] = [
-        e for e in catalog.manifest._data["partitions"]
-        if not (e["tier"] == name and e["part"] in wanted)
-    ]
-    catalog.manifest._save()
-
-
-def remove_tier(catalog: TierCatalog, name: str) -> None:
-    """``t.remove``: drop a tier's data + manifest partitions (the
-    catalog row stays as history, like the reference keeps command
-    history)."""
-    import shutil
-
-    shutil.rmtree(catalog.path(name), ignore_errors=True)
-    catalog.manifest._data["partitions"] = [
-        e for e in catalog.manifest._data["partitions"] if e["tier"] != name
-    ]
-    catalog.manifest._save()
 
 
 def export_dataset(

@@ -31,8 +31,9 @@ the values of all blocks concatenated, plus one length per block
 (``lengths``).  Diffs, XORs and cumulative sums reset at block starts,
 and the encoders return all blobs as one byte buffer plus Arrow-style
 ``offsets`` (blob ``i`` is ``data[offsets[i]:offsets[i + 1]]``).  The
-per-block ``encode_*``/``decode_*`` functions are the one-segment case,
-so a blob is the same bytes whichever way it was made.
+per-block ``encode_ints``/``encode_timestamps`` and their decoders are
+the one-segment case, so a blob is the same bytes whichever way it was
+made.
 """
 
 from __future__ import annotations
@@ -270,15 +271,6 @@ def decode_timestamps(buf: bytes) -> np.ndarray:
     return decode_timestamps_segments(*_one(buf))[0]
 
 
-def encode_floats(vals: np.ndarray) -> bytes:
-    """XOR-encode float64 values (prefix XOR vs previous value)."""
-    return encode_floats_segments(vals, [len(vals)])[0].tobytes()
-
-
-def decode_floats(buf: bytes) -> np.ndarray:
-    return decode_floats_segments(*_one(buf))[0]
-
-
 def encode_ints(vals: np.ndarray) -> bytes:
     """Delta encode int64 metric values."""
     return encode_ints_segments(vals, [len(vals)])[0].tobytes()
@@ -288,10 +280,3 @@ def decode_ints(buf: bytes) -> np.ndarray:
     return decode_ints_segments(*_one(buf))[0]
 
 
-def encode_validity(mask: np.ndarray) -> bytes:
-    """Validity bitmap (True = present)."""
-    return encode_validity_segments(mask, [len(mask)])[0].tobytes()
-
-
-def decode_validity(buf: bytes, n: int) -> np.ndarray:
-    return decode_validity_segments(*_one(buf), [n])

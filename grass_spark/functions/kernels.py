@@ -131,84 +131,6 @@ INT_OUTPUT = {"count", "min_raster", "max_raster", "diversity", "approx_diversit
 NEEDS_INDEX = {"min_raster", "max_raster", "slope", "offset", "detcoeff", "tvalue"}
 
 
-#: user-registered kernels (register_kernel) — the Spark analog of the
-#: reference's stat_func plug-in ABI (include/grass/stats.h,
-#: raster/r.series/main.c:34-39: `stat_func(DCELL *result, DCELL
-#: *values, int n, closure)`).  Kept separate from KERNELS so parity
-#: sweeps stay exact-builtin-only.
-CUSTOM_KERNELS: dict[str, object] = {}
-
-#: custom kernels backed by a GROUPED_AGG pandas UDF.  Spark cannot mix
-#: these with JVM aggregates in ONE agg() ([INVALID_PANDAS_UDF_PLACEMENT]);
-#: operators/aggregate.py auto-splits a mixed method list into a second
-#: co-keyed aggregation and joins.
-PANDAS_KERNELS: set[str] = set()
-
-
-def register_kernel(
-    name: str,
-    sql_builder=None,
-    *,
-    pandas_fn=None,
-    spark=None,
-    returns: str = "double",
-    int_output: bool = False,
-    needs_index: bool = False,
-    overwrite: bool = False,
-) -> None:
-    """Register a user kernel; it then flows through ``kernel_sql`` /
-    ``agg_exprs`` and every aggregation pipeline (t.rast.aggregate,
-    series, tiers) exactly like a built-in.
-
-    Two flavors, mirroring the reference's plug-in ABI at the two
-    speeds Spark offers:
-
-    * ``sql_builder``: ``callable(value_sql, idx_sql) -> sql`` — a JVM
-      aggregate expression (whole-stage codegen, partial aggregation;
-      always prefer this when the statistic is expressible);
-    * ``pandas_fn``: ``callable(pd.Series) -> scalar`` — the literal
-      ``stat_func`` analog (the group's values in, one number out),
-      wrapped as an Arrow-batched GROUPED_AGG ``pandas_udf`` and
-      registered in ``spark``'s SQL function registry (requires the
-      ``spark`` session; no per-row Python — batches cross via Arrow).
-
-    ``int_output`` / ``needs_index`` update the same contract sets the
-    built-ins use.
-    """
-    if (sql_builder is None) == (pandas_fn is None):
-        raise ValueError("pass exactly one of sql_builder / pandas_fn")
-    if not overwrite and (
-        name in KERNELS or name in APPROX_KERNELS or name in CUSTOM_KERNELS
-    ):
-        raise ValueError(f"kernel {name!r} already registered")
-    PANDAS_KERNELS.discard(name)  # overwrite may change the flavor
-    if pandas_fn is not None:
-        if spark is None:
-            raise ValueError("pandas_fn kernels need the spark session")
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-        # force GROUPED_AGG explicitly — inference from the user fn's
-        # type hints would demand a fully-annotated signature
-        spark.udf.register(
-            name, pandas_udf(pandas_fn, returns, PandasUDFType.GROUPED_AGG)
-        )
-        sql_builder = lambda v, i: f"{name}({v})"  # noqa: E731
-        PANDAS_KERNELS.add(name)
-    CUSTOM_KERNELS[name] = sql_builder
-    if int_output:
-        INT_OUTPUT.add(name)
-    if needs_index:
-        NEEDS_INDEX.add(name)
-
-
-def unregister_kernel(name: str) -> None:
-    """Remove a user kernel (built-ins cannot be removed)."""
-    CUSTOM_KERNELS.pop(name, None)
-    PANDAS_KERNELS.discard(name)
-    INT_OUTPUT.discard(name)
-    NEEDS_INDEX.discard(name)
-
-
 def kernel_sql(method: str, value_col: str, idx_col: str | None = None, q: float | None = None) -> str:
     """Return the SQL aggregate expression for ``method``.
 
@@ -223,30 +145,15 @@ def kernel_sql(method: str, value_col: str, idx_col: str | None = None, q: float
         if q is None:
             raise ValueError("method 'approx_quantile' needs q")
         return f"approx_percentile({value_col}, {float(q)!r}D, {APPROX_ACCURACY})"
-    builder = (
-        KERNELS.get(method)
-        or APPROX_KERNELS.get(method)
-        or CUSTOM_KERNELS.get(method)
-    )
+    builder = KERNELS.get(method) or APPROX_KERNELS.get(method)
     if builder is None:
         raise ValueError(
             f"unknown kernel {method!r}; known: "
-            f"{sorted(KERNELS) + sorted(APPROX_KERNELS) + sorted(CUSTOM_KERNELS)}"
+            f"{sorted(KERNELS) + sorted(APPROX_KERNELS)}"
         )
     if method in NEEDS_INDEX and idx_col is None:
         raise ValueError(f"kernel {method!r} needs an input-position index column")
     return builder(value_col, idx_col)  # type: ignore[operator]
-
-
-def kernel_expr(
-    method: str,
-    value_col: str,
-    idx_col: str | None = None,
-    q: float | None = None,
-    alias: str | None = None,
-) -> Column:
-    col = F.expr(kernel_sql(method, value_col, idx_col, q))
-    return col.alias(alias or method)
 
 
 def agg_exprs(

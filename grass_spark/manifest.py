@@ -70,17 +70,14 @@ class CheckpointManifest:
         return dict(self._data["tiers"])
 
     # -- partition entries --------------------------------------------
-    def done_parts(self, tier: str, input_fingerprint: str | None = None) -> set[str]:
-        """Partitions already completed for ``tier``.  If a fingerprint
-        is given, entries computed from a *different* input snapshot do
-        not count as done (the input changed -> recompute)."""
-        return set(self.finished_map(tier, input_fingerprint))
-
     def finished_map(
         self, tier: str, input_fingerprint: str | None = None,
     ) -> dict[str, float]:
-        """part -> ``finished_at`` for the partitions :meth:`done_parts`
-        lists, so a tier's partition can be ordered against its source's."""
+        """part -> ``finished_at`` for the partitions already completed
+        for ``tier``.  If a fingerprint is given, entries computed from a
+        *different* input snapshot do not count as done (the input
+        changed -> recompute).  The times let a tier's partition be
+        ordered against its source's."""
         return {
             e["part"]: e["finished_at"]
             for e in self._data["partitions"]
@@ -118,14 +115,6 @@ class CheckpointManifest:
             for e in self._data["partitions"]
             if e["tier"] == tier and e["status"] == "ok"
         }
-
-    # -- free-form metadata (layout decisions, run config) -------------
-    def set_meta(self, key: str, value) -> None:
-        self._data.setdefault("meta", {})[key] = value
-        self._save()
-
-    def get_meta(self, key: str, default=None):
-        return self._data.get("meta", {}).get(key, default)
 
     def metrics(self, tier: str | None = None) -> list[dict]:
         return [

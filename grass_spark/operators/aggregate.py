@@ -21,7 +21,7 @@ of the reference collapses to a pure *projection* —
   refined with the exact Allen predicates.  Still no join: granules are
   arithmetic, not a table.
 
-The general irregular-granule case (``t.rast.aggregate.ds``) lives in
+Sampling against the irregular granules of another dataset lives in
 :mod:`grass_spark.operators.sample` as a broadcast range join.
 """
 
@@ -122,47 +122,18 @@ def aggregate(
             .drop("_gidx")
         )
 
-    # Spark cannot mix GROUPED_AGG pandas UDFs with JVM aggregates in
-    # one agg() (INVALID_PANDAS_UDF_PLACEMENT) — split a mixed method
-    # list: pandas kernels aggregate in a second pass over the same
-    # bucketed frame and join back on the group keys (both sides hash
-    # on identical keys, so the join adds no extra corpus shuffle).
-    from grass_spark.functions.kernels import PANDAS_KERNELS
-
-    jvm_methods = [m for m in methods if m not in PANDAS_KERNELS]
-    pd_methods = [m for m in methods if m in PANDAS_KERNELS]
-
     aggs = agg_exprs(
-        jvm_methods, value_col, idx_col=idx_col, quantile=quantile,
+        methods, value_col, idx_col=idx_col, quantile=quantile,
         propagate_null=propagate_null,
     )
     n_nonnull = F.count(F.col(value_col)).alias("_n_nonnull")
     out = bucketed.groupBy(*keys, "bucket_start").agg(*aggs, n_nonnull)
-    if pd_methods:
-        if propagate_null:
-            # the -n CASE wrapper mixes a JVM count() into the pandas
-            # aggregate expression — the same placement Spark forbids
-            raise ValueError(
-                "propagate_null is not supported with pandas kernels "
-                f"({pd_methods}); filter NULL groups beforehand"
-            )
-        pd_aggs = agg_exprs(
-            pd_methods, value_col, idx_col=idx_col, quantile=quantile,
-        )
-        out = out.join(
-            bucketed.groupBy(*keys, "bucket_start").agg(*pd_aggs),
-            [*keys, "bucket_start"],
-        )
     if not register_null:
         # NULL-only granules are dropped (aggregation.py:201-206)
         out = out.filter(F.col("_n_nonnull") > 0)
-    out = out.drop("_n_nonnull").withColumn(
+    return out.drop("_n_nonnull").withColumn(
         "bucket_end", bucket_end_col(F.col("bucket_start"), granularity)
     )
-    # restore the caller's method column order
-    meta = [c for c in out.columns if c not in methods]
-    return out.select(*[c for c in meta if c != "bucket_end"],
-                      *methods, "bucket_end")
 
 
 def series(
@@ -184,20 +155,8 @@ def series(
     keys = ["conv_id"] if keys is None else list(keys)
     if where:
         df = df.filter(F.expr(where))
-    # same pandas-kernel auto-split as aggregate(): the extent min/max
-    # are JVM aggregates, so pandas kernels must live in their own
-    # co-keyed agg (see aggregate()'s placement note)
-    from grass_spark.functions.kernels import PANDAS_KERNELS
-
-    jvm_methods = [m for m in methods if m not in PANDAS_KERNELS]
-    pd_methods = [m for m in methods if m in PANDAS_KERNELS]
-    if pd_methods and propagate_null:
-        raise ValueError(
-            "propagate_null is not supported with pandas kernels "
-            f"({pd_methods}); filter NULL groups beforehand"
-        )
     aggs = agg_exprs(
-        jvm_methods, value_col, idx_col=idx_col, quantile=quantile,
+        methods, value_col, idx_col=idx_col, quantile=quantile,
         propagate_null=propagate_null,
     )
     extent_end = (
@@ -205,24 +164,11 @@ def series(
         if end_col
         else F.max(F.col(ts_col))
     )
-    out = df.groupBy(*keys).agg(
+    return df.groupBy(*keys).agg(
         *aggs,
         F.min(ts_col).alias("series_start"),
         extent_end.alias("series_end"),
     )
-    if pd_methods:
-        out = out.join(
-            df.groupBy(*keys).agg(
-                *agg_exprs(pd_methods, value_col, idx_col=idx_col,
-                           quantile=quantile)
-            ),
-            keys,
-        )
-        meta = [c for c in out.columns if c not in methods]
-        out = out.select(*[c for c in meta
-                           if c not in ("series_start", "series_end")],
-                         *methods, "series_start", "series_end")
-    return out
 
 
 def aggregate_relative(

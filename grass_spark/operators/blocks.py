@@ -39,8 +39,8 @@ _NULL_TS = np.iinfo(np.int64).min
 
 
 def report_columns() -> list[Column]:
-    """The codec metrics over block rows, as aggregate columns: used by
-    :func:`compression_report` and observed on the rollup's block write."""
+    """The codec metrics over block rows, as aggregate columns, observed
+    on the rollup's block write."""
     return [
         F.count(F.lit(1)).alias("n_blocks"),
         F.sum("n").alias("n_points"),
@@ -48,11 +48,6 @@ def report_columns() -> list[Column]:
         F.sum("comp_bytes").alias("comp_bytes"),
         F.round(F.sum("raw_bytes") / F.sum("comp_bytes"), 3).alias("ratio"),
     ]
-
-
-def compression_report(blocks: DataFrame) -> DataFrame:
-    """Aggregate codec metrics (lineage for the manifest)."""
-    return blocks.agg(*report_columns())
 
 
 def _binary_type(df: DataFrame) -> pa.DataType:

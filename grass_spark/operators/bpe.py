@@ -75,8 +75,7 @@ def learn_bpe(
     in merge order.  Stops early when no pair reaches ``min_pair_freq``.
 
     The returned list is the model — feed ``"".join`` of each pair into
-    a tokenizer vocab (e.g. textstats greedy counting) or replay the
-    merges exactly with :func:`apply_bpe`.
+    a tokenizer vocab (e.g. textstats greedy counting).
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
@@ -112,36 +111,3 @@ def learn_bpe(
     return merges
 
 
-def apply_bpe(
-    df: DataFrame,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    *,
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Tokenize ``text_col`` with a learned merge list: per word, split
-    to characters and replay every merge in order (exact training
-    semantics, not greedy-longest).  Adds ``out_col`` (array<string>)
-    and ``n_bpe_tokens``.  Pure scan-stage HOFs — zero shuffle."""
-    words = F.regexp_extract_all(
-        F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
-    )
-    toks = F.transform(words, lambda w: F.split(w, ""))
-
-    # loop variables bind via an OUTER closure, never `lambda syms,
-    # a=a`: a 2-parameter transform lambda receives the ARRAY INDEX as
-    # its second argument (CLAUDE.md; pinned by the _sig_df._slot test)
-    def _apply_one(t, a: str, b: str):
-        return F.transform(
-            t,
-            lambda syms: F.aggregate(
-                syms, F.array().cast("array<string>"), _merge_fold(a, b)
-            ),
-        )
-
-    for m in merges:
-        toks = _apply_one(toks, m[0], m[1])
-    flat = F.flatten(toks)
-    return df.withColumn(out_col, flat).withColumn(
-        "n_bpe_tokens", F.size(flat).cast("long")
-    )

@@ -164,15 +164,3 @@ def top_per_group(
     return cold.select(*out_cols).unionByName(kept_hot.select(*out_cols))
 
 
-def group_histogram(
-    df: DataFrame,
-    *,
-    group_col: str = "source",
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Per-group doc (and optional token) totals — the audit companion
-    to :func:`cap_per_group` (one map-side-combined groupBy)."""
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if weight_col is not None:
-        aggs.append(F.sum(F.col(weight_col)).cast("bigint").alias("tokens"))
-    return df.groupBy(group_col).agg(*aggs)

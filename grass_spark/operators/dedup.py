@@ -6,8 +6,8 @@ zero Python in the hot path):
 * exact      — content-hash groupBy;
 * minhash    — word-shingle MinHash signatures + banded LSH candidate
                pairs (the classic Broder / LSH construction);
-* simhash    — Charikar 64-bit fingerprints + banded candidate pairs
-               filtered by Hamming distance (``bit_count(a XOR b)``);
+* simhash    — Charikar 64-bit fingerprints (majority vote of
+               shingle-hash bits);
 * ngram_jaccard — exact Jaccard on shingle sets for candidate
                verification (or small corpora).
 
@@ -83,12 +83,6 @@ def with_shingles(
     return spread(df).withColumn(
         "_words", F.split(normalize_text(F.col(text_col)), " ")
     ).withColumn(out, shingles_of_words(F.col("_words"), n)).drop("_words")
-
-
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Column-in/column-out shingles (kept for expression contexts;
-    prefer :func:`with_shingles` in pipelines — see its perf note)."""
-    return shingles_of_words(F.split(normalize_text(c), " "), n)
 
 
 def minhash_signatures(
@@ -323,49 +317,6 @@ def simhash(
         term = F.shiftleft(bit, b)
         fp = term if fp is None else fp.bitwiseOR(term)
     return agg.select(id_col, fp.alias("simhash"))
-
-
-def simhash_candidates(
-    fingerprints: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket_size: int | None = 5000,
-) -> DataFrame:
-    """Pairs within ``max_hamming`` bits: band the 64-bit fingerprint
-    into ``bands`` chunks (pigeonhole: any pair within max_hamming <
-    bands shares at least one exact band), equi-join per band, verify
-    with bit_count(xor).  Buckets over ``max_bucket_size`` are dropped
-    before the join (see :func:`_cap_buckets`)."""
-    width = 64 // bands
-    mask = (1 << width) - 1
-    fp = fingerprints.select(id_col, "simhash")
-    band_vals = F.array(*[
-        F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask))
-        for b in range(bands)
-    ])
-    banded = fp.select(
-        id_col, "simhash",
-        F.posexplode(band_vals).alias("band_idx", "band_val"),
-    )
-    banded = _cap_buckets(banded, ["band_idx", "band_val"], max_bucket_size)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("fp_a"),
-        "band_idx", "band_val",
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("fp_b"),
-        "band_idx", "band_val",
-    )
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        a.join(b, on=["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 def dedup_clusters(

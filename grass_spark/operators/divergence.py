@@ -2,9 +2,9 @@
 corpus snapshots (old crawl vs new crawl, or mixture A vs mixture B).
 
 The QC gate a mixture pipeline runs when a new ingest lands: has the
-token distribution shifted, and which words drive the shift?  Computes
-smoothed KL(P‖Q), Jensen-Shannon divergence, and vocabulary overlap,
-plus the top word-level JS contributors.
+token distribution shifted?  Computes smoothed KL(P‖Q), Jensen-Shannon
+divergence and vocabulary overlap, plus PSI drift and the two-sample
+KS test over numeric columns.
 
 Scale shape: each corpus is scanned ONCE (the same map-side-combinable
 word-frequency groupBy as BPE/TF-IDF); everything after runs on the
@@ -12,13 +12,13 @@ two vocabulary-sized frames (full-outer join on word, scalar aggs).
 At 100 TB the cost is two corpus scans — the diagnostics are free.
 
 Cross-engine parity: probabilities derive from exact integer counts;
-log terms round only at the FINAL aggregate (6 dp), and word-level
-contributions round per word — same convention as every oracle here.
+log terms round only at the FINAL aggregate (6 dp) — same convention
+as every oracle here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grass_spark.operators.bpe import word_frequencies
@@ -88,50 +88,6 @@ def corpus_divergence(
         "kl_ab",
         "js",
     )
-
-
-def divergence_contributors(
-    a: DataFrame,
-    b: DataFrame,
-    *,
-    text_col: str = "text",
-    smoothing: float = 0.5,
-    top_k: int = 20,
-) -> DataFrame:
-    """Top-``top_k`` words by JS contribution — WHICH words drive the
-    drift.  (word, fa, fb, js_term, rank); ties break word-asc."""
-    wa = word_frequencies(a, text_col=text_col).withColumnRenamed(
-        "freq", "fa"
-    )
-    wb = word_frequencies(b, text_col=text_col).withColumnRenamed(
-        "freq", "fb"
-    )
-    j = wa.join(wb, "word", "full_outer").select(
-        "word",
-        F.coalesce("fa", F.lit(0)).alias("fa"),
-        F.coalesce("fb", F.lit(0)).alias("fb"),
-    )
-    tot = j.agg(
-        F.sum("fa").alias("na"),
-        F.sum("fb").alias("nb"),
-        F.count(F.lit(1)).alias("v"),
-    )
-    s = float(smoothing)
-    jj = j.crossJoin(F.broadcast(tot))
-    p = (F.col("fa") + s) / (F.col("na") + s * F.col("v"))
-    q = (F.col("fb") + s) / (F.col("nb") + s * F.col("v"))
-    m = (p + q) / 2.0
-    scored = jj.select(
-        "word", "fa", "fb",
-        F.round(
-            0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m), 6
-        ).alias("js_term"),
-    )
-    # TakeOrderedAndProject (orderBy+limit), NOT a global row_number
-    # window — no single-task vocab sort; rank the k survivors after
-    top = scored.orderBy(F.desc("js_term"), F.asc("word")).limit(top_k)
-    w = Window.orderBy(F.desc("js_term"), F.asc("word"))
-    return top.withColumn("rank", F.row_number().over(w))
 
 
 def psi_bins(

@@ -27,10 +27,10 @@ ties break to the smallest centroid ordinal via struct min.
 from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grass_spark.functions.litexpr import darr, sq_dist_sql
+from grass_spark.functions.litexpr import sq_dist_sql
 
 #: rows per numpy block in the Arrow encode path — bounds the
 #: (block, k, subdim) distance temporaries (the semdecon
@@ -196,46 +196,6 @@ def _pq_encode_arrow(
     if with_err:
         res = res.withColumn("recon_err", F.col("_enc.recon_err"))
     return res.drop("_enc")
-
-
-def pq_adc(
-    df: DataFrame,
-    codebook: list[list[list[float]]],
-    query: list[float],
-    *,
-    codes_col: str = "codes",
-    out: str = "adc",
-) -> Column | DataFrame:
-    """Adds ``adc``: the asymmetric-distance approximation of
-    ||query - x||^2 — ``sum_j T[j][codes_j]`` where ``T[j][c]`` is the
-    (6-dp-rounded) squared distance from the query's subspace ``j`` to
-    centroid ``c``.  The table is m*k plan literals; scoring touches
-    only the code column (the PQ scan shape: no float vectors read)."""
-    m = len(codebook)
-    k = len(codebook[0])
-    sub = len(codebook[0][0])
-    if len(query) != m * sub:
-        raise ValueError(f"query dims {len(query)} != {m * sub}")
-    table = [
-        [
-            round(
-                sum(
-                    (float(query[j * sub + t]) - float(codebook[j][c][t]))
-                    ** 2
-                    for t in range(sub)
-                ),
-                6,
-            )
-            for c in range(k)
-        ]
-        for j in range(m)
-    ]
-    adc_sql = " + ".join(
-        f"element_at({darr(table[j])}, "
-        f"element_at(`{codes_col}`, {j + 1}) + 1)"
-        for j in range(m)
-    )
-    return df.withColumn(out, F.expr(f"round({adc_sql}, 6)"))
 
 
 def ivf_pq_topk(

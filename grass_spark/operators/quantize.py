@@ -82,28 +82,3 @@ def quantize_embeddings(
     )
 
 
-def dequantize(qvec, scale):
-    """Column expr: rebuild the double vector from (qvec, scale).
-
-    Capture-safe by the same argument-array trick: callers pass the
-    ``scale`` COLUMN; it broadcasts via ``array_repeat``, and the
-    zip_with lambda touches only its parameters.
-    """
-    sarr = F.array_repeat(scale, F.size(qvec))
-    return F.zip_with(qvec, sarr, lambda qi, s: qi.cast("double") * s)
-
-
-def dequantize_embeddings(
-    qdf: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    qvec_col: str = "qvec",
-    scale_col: str = "scale",
-    out_col: str = "embedding",
-) -> DataFrame:
-    """(id, embedding) doubles rebuilt from a quantized table — feeds
-    straight back into the similarity operators (cosine_topk / ivf)."""
-    return qdf.select(
-        id_col,
-        dequantize(F.col(qvec_col), F.col(scale_col)).alias(out_col),
-    )

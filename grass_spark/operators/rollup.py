@@ -243,10 +243,12 @@ class RollupPipeline:
 
     # -------------------------------------------------- bucketed layout
     def _check_layout_pin(self) -> None:
-        """Pin (layout, buckets) on first use.  Files written with a
-        different bucket count hash rows into DIFFERENT buckets — a
-        mismatched re-open would silently produce wrong shuffle-free
-        results, so it's a hard error, not a warning."""
+        """Pin (layout, buckets, sketches) on first use.  Files written
+        with a different bucket count hash rows into DIFFERENT buckets —
+        a mismatched re-open would silently produce wrong shuffle-free
+        results; a ``sketches`` flip would mix day files with and
+        without the sketch columns (and the bucketed publish would drop
+        them).  So a mismatch is a hard error, not a warning."""
         import json
 
         pin_path = os.path.join(self.base_dir, "_layout.json")
@@ -257,33 +259,55 @@ class RollupPipeline:
         pin = {"layout": self.layout}
         if self.layout == "bucketed":
             pin["buckets"] = self.buckets
+        pin["sketches"] = self.sketches
+        stored = None
         if os.path.exists(pin_path):
             with open(pin_path) as f:
-                prior = json.load(f)
-            if prior == pin:
-                return
-            if not has_tier_data:
-                # a pin with no tier files behind it (constructed-but-
-                # never-run pipeline, or a first run that crashed before
-                # any write) constrains nothing — re-pin
-                write_json_atomic(pin_path, pin)
-                return
-            raise ValueError(
-                f"tier store at {self.base_dir} was written with "
-                f"{prior}; re-open with the same layout/buckets "
-                f"(got {pin}) or use a fresh base_dir"
-            )
-        # no pin: a pre-pin store (tier dirs already on disk) can only
-        # be the plain layout — adopting a 'bucketed' claim for files
-        # that were never bucket-hashed would plan shuffle-free over
-        # mis-clustered data (silently wrong results)
-        if has_tier_data and self.layout == "bucketed":
+                stored = json.load(f)
+        elif has_tier_data and self.layout == "bucketed":
+            # no pin: a pre-pin store (tier dirs already on disk) can
+            # only be the plain layout — adopting a 'bucketed' claim for
+            # files that were never bucket-hashed would plan
+            # shuffle-free over mis-clustered data (silently wrong)
             raise ValueError(
                 f"tier store at {self.base_dir} predates the layout pin "
                 "and its files are not bucketed; re-open with "
                 "layout='plain' or publish into a fresh base_dir"
             )
+        elif has_tier_data:
+            stored = {"layout": "plain"}
+        prior = dict(stored or {})
+        if has_tier_data and "sketches" not in prior:
+            # pinned before `sketches` was: the first tier's files say
+            # (no file yet: nothing to contradict)
+            found = self._tier_has_sketches(self.tiers[0][0])
+            prior["sketches"] = self.sketches if found is None else found
+        if prior == pin:
+            if stored != pin:
+                write_json_atomic(pin_path, pin)
+            return
+        if has_tier_data:
+            raise ValueError(
+                f"tier store at {self.base_dir} was written with "
+                f"{prior}; re-open with the same layout/buckets/sketches "
+                f"(got {pin}) or use a fresh base_dir"
+            )
+        # a pin with no tier files behind it (constructed-but-never-run
+        # pipeline, or a first run that crashed before any write)
+        # constrains nothing — re-pin
         write_json_atomic(pin_path, pin)
+
+    def _tier_has_sketches(self, name: str) -> bool | None:
+        """Whether ``name``'s day files carry the sketch columns, from
+        one parquet footer (no Spark job); None if it has no file."""
+        import pyarrow.parquet as pq
+
+        for root, dirs, files in os.walk(self.tier_path(name)):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            for f in sorted(files):
+                if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                    return "len_kll" in pq.read_schema(os.path.join(root, f)).names
+        return None
 
     def _buckets_for(self, name: str) -> int:
         if isinstance(self.buckets, dict):

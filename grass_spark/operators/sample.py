@@ -1,10 +1,9 @@
 """Topology-driven sampling & aggregation over irregular granules.
 
 The general case the bucket-projection fast path can't handle: granules
-come from *another dataset* (``t.rast.aggregate.ds``,
-``temporal/t.rast.aggregate.ds/t.rast.aggregate.ds.py:146-170``) or the
-caller wants arbitrary Allen relations (``t.sample`` /
-``sample_by_dataset``, ``abstract_space_time_dataset.py:627-850``).
+come from *another dataset* and the caller wants arbitrary Allen
+relations (``t.sample`` / ``sample_by_dataset``,
+``abstract_space_time_dataset.py:627-850``).
 
 The reference builds an R*-tree over one side and probes the other
 (``spatio_temporal_relationships.py:496-587``).  Spark-first: the
@@ -27,7 +26,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from grass_spark.functions import relations as rel
-from grass_spark.functions.kernels import agg_exprs
 
 #: resample relation priority — abstract_space_time_dataset.py:1380
 RESAMPLE_PRIORITY = ("equal", "during", "overlaps", "overlapped", "contains")
@@ -99,44 +97,6 @@ def sample_by_dataset(
         )
     return (
         maps.join(g, on=cond, how="inner")
-        .withColumnRenamed("_g_start", "granule_start")
-        .withColumnRenamed("_g_end", "granule_end")
-    )
-
-
-def aggregate_by_dataset(
-    maps: DataFrame,
-    granules: DataFrame,
-    methods: list[str],
-    *,
-    keys: list[str] | None = None,
-    value_col: str = "value",
-    idx_col: str | None = None,
-    sampling: list[str] | None = None,
-    map_start: str = "ts",
-    map_end: str | None = None,
-    granule_start: str = "bucket_start",
-    granule_end: str = "bucket_end",
-    quantile: float | None = None,
-) -> DataFrame:
-    """``t.rast.aggregate.ds``: r.series kernels per granule of another
-    dataset.  Default sampling = contains (granule contains map), like
-    ``t.rast.aggregate.ds.py`` option default."""
-    keys = ["conv_id"] if keys is None else list(keys)
-    sampling = ["contains"] if sampling is None else list(sampling)
-    g = _granule_side(granules, granule_start, granule_end)
-    a_e = F.col(map_end) if map_end else F.lit(None).cast("timestamp")
-    # sampling names granule-relative relations (granule CONTAINS map):
-    # granule is A in the predicate, map is B; builder-widened lists
-    # (starts/finishes fold into during, started/finished into contains)
-    cond = rel.topo_any(
-        sampling, F.col("_g_start"), F.col("_g_end"), F.col(map_start), a_e
-    )
-    joined = maps.join(g, on=cond, how="inner")
-    aggs = agg_exprs(methods, value_col, idx_col=idx_col, quantile=quantile)
-    return (
-        joined.groupBy(*keys, "_g_start", "_g_end")
-        .agg(*aggs)
         .withColumnRenamed("_g_start", "granule_start")
         .withColumnRenamed("_g_end", "granule_end")
     )

@@ -7,9 +7,9 @@ into segments, keeps only the corpus-wide FIRST occurrence of each
 distinct normalized segment (ordered by (doc id, position) — fully
 deterministic), and reconstructs the cleaned text.
 
-Segmenters: ``by_separator(regex)`` (paragraphs / lines) for real
-corpora, ``by_words(k)`` (fixed k-word chunks) for unstructured
-streams.  Both are JVM expressions.
+The segmenter is :func:`segments_by_words` (fixed k-word chunks, a JVM
+expression); :func:`dedup_segments` takes ``(id, seg_idx, seg)`` rows
+from any segmenter.
 
 Scale shape (100 TB corpus): segmenting is an index-explode (the words
 array is materialized by the Generate row, NOT re-split per segment —
@@ -31,19 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grass_spark.operators.dedup import normalize_text
-
-
-def segments_by_separator(df: DataFrame, text_col: str, sep: str) -> DataFrame:
-    """Explode ``text_col`` into (seg_idx, seg) rows split on a regex
-    separator; each segment is whitespace-normalized, empties dropped."""
-    return (
-        df.select(
-            "*",
-            F.posexplode(F.split(F.col(text_col), sep)).alias("seg_idx", "seg"),
-        )
-        .withColumn("seg", normalize_text(F.col("seg")))
-        .filter(F.col("seg") != "")
-    )
 
 
 def segments_by_words(df: DataFrame, text_col: str, k: int) -> DataFrame:

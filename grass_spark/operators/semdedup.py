@@ -24,9 +24,9 @@ Spark shapes (100 TB story):
 
 Centroids here are *seeded* deterministically (the ``k`` smallest ids)
 rather than k-means-trained so the whole pipeline is reproducible in
-any engine — the DuckDB oracle replays it bit-for-bit.  For a trained
-quantizer plug :func:`grass_spark.operators.similarity.train_ivf_centroids`
-output into :func:`assign_clusters` via ``centroids=``.
+any engine — the DuckDB oracle replays it bit-for-bit.  A trained
+quantizer's centroids enter :func:`assign_clusters` via ``centroids=``
+(see :func:`centroid_frame`).
 
 Reference analog: the reference's sampling/topology machinery has no
 embedding ops; this is part of the training-data wave the engine adds
@@ -83,10 +83,9 @@ _SCORE_BLOCK_ROWS = 2048
 
 
 def centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
-    """Bridge a trained quantizer (e.g.
-    :func:`grass_spark.operators.similarity.train_ivf_centroids`'s
-    ``list[list[float]]``) into the (c_id, ce) frame
-    :func:`assign_clusters` consumes; ``c_id`` is the list index."""
+    """Bridge a trained quantizer's ``list[list[float]]`` centroids
+    into the (c_id, ce) frame :func:`assign_clusters` consumes;
+    ``c_id`` is the list index."""
     return spark.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
         "c_id long, ce array<double>",

@@ -4,22 +4,17 @@
   set, cross join, JVM-side dot product (``zip_with`` + ``aggregate``
   higher-order functions — no UDF), window rank.  The baseline: exact,
   one pass over the corpus, scales linearly with |corpus|x|queries|.
-* :func:`hyperplane_lsh_buckets` / :func:`lsh_topk` — the scale path:
-  random-hyperplane (SRP) buckets; candidates = same bucket in any of
-  ``n_tables`` tables, then exact cosine only on candidates.  Planes
-  are deterministic (seeded numpy) and shipped as literal arrays, so
-  bucketing is a pure column expression.
-* :func:`embedding_neardup` — near-duplicate pairs (cosine >= threshold)
-  via the LSH buckets, the embedding leg of the dedup suite.
+* :func:`hard_negatives` / :func:`mrl_rerank` — negative mining and
+  the truncated-then-exact re-rank cascade on the same sharded top-k.
+* :func:`_cell_of` / :func:`_top_cells` — the IVF cell assignment and
+  probe expressions :func:`grass_spark.operators.pq.ivf_pq_topk` runs.
 
-At 100 TB the corpus never collects: bucketing is map-side, the only
-shuffles are the bucket equi-join and the final top-k window, and the
-broadcast side is just the query batch / plane matrix.
+At 100 TB the corpus never collects: the broadcast side is just the
+query batch, and top-k is a two-stage sharded selection.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -124,9 +119,7 @@ def hard_negatives(
     Scale shape: query side broadcast (the query set is the small side
     by contract), label exclusion is a scan-stage predicate BEFORE any
     ranking work, and top-k runs the two-stage sharded selection
-    (:func:`_topk_per_query`) — no per-query single-task window.  For
-    corpora past brute-force reach, mine within IVF probe cells first
-    (:func:`ivf_topk`) and re-rank exactly.
+    (:func:`_topk_per_query`) — no per-query single-task window.
     """
     q_id_col = q_id_col or id_col
     q_vec_col = q_vec_col or vec_col
@@ -242,152 +235,9 @@ def mrl_rerank(
     )
 
 
-def _planes(dims: int, n_planes: int, seed: int) -> list[list[float]]:
-    rng = np.random.default_rng(seed)
-    return rng.normal(size=(n_planes, dims)).tolist()
-
-
-def hyperplane_lsh_buckets(
-    df: DataFrame,
-    dims: int,
-    *,
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 3,
-    seed: int = 1234,
-) -> DataFrame:
-    """Add (table_idx, bucket) — sign pattern of ``n_planes`` random
-    hyperplanes per table.  Output has one row per (input row, table)."""
-    out = None
-    e = _as_double(vec_col)
-    for t in range(n_tables):
-        planes = _planes(dims, n_planes, seed + t)
-        bucket = F.lit(0).cast("long")
-        for p, plane in enumerate(planes):
-            lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-            bit = (dot(e, lit_plane) > 0).cast("long")
-            bucket = bucket.bitwiseOR(F.shiftleft(bit, p))
-        part = df.withColumn("table_idx", F.lit(t)).withColumn("bucket", bucket)
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dims: int,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 3,
-    seed: int = 1234,
-) -> DataFrame:
-    """Approximate top-k: exact cosine over same-bucket candidates only."""
-    cb = hyperplane_lsh_buckets(
-        corpus, dims, vec_col=vec_col, n_planes=n_planes, n_tables=n_tables, seed=seed
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("_e"),
-        "table_idx", "bucket",
-    )
-    qb = hyperplane_lsh_buckets(
-        queries, dims, vec_col=vec_col, n_planes=n_planes, n_tables=n_tables, seed=seed
-    ).select(
-        F.col(id_col).alias("q_id"),
-        _as_double(vec_col).alias("_qe"),
-        "table_idx", "bucket",
-    )
-    cand = (
-        F.broadcast(qb).join(cb, on=["table_idx", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select("q_id", "_qe", "neighbor_id", "_e")
-        .distinct()
-    )
-    sim = dot("_qe", "_e") / (l2norm("_qe") * l2norm("_e"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.select("q_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def embedding_neardup(
-    df: DataFrame,
-    dims: int,
-    threshold: float = 0.95,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 14,
-    n_tables: int = 4,
-    seed: int = 99,
-) -> DataFrame:
-    """Near-duplicate pairs (cosine >= threshold) via SRP-LSH buckets."""
-    b = hyperplane_lsh_buckets(
-        df, dims, vec_col=vec_col, n_planes=n_planes, n_tables=n_tables, seed=seed
-    ).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("e"),
-        "table_idx", "bucket",
-    )
-    a = b.select(
-        F.col("id").alias("id_a"), F.col("e").alias("e_a"), "table_idx", "bucket"
-    )
-    c = b.select(
-        F.col("id").alias("id_b"), F.col("e").alias("e_b"), "table_idx", "bucket"
-    )
-    pairs = (
-        a.join(c, on=["table_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "e_a", "e_b")
-        .distinct()
-    )
-    sim = dot("e_a", "e_b") / (l2norm("e_a") * l2norm("e_b"))
-    return pairs.select("id_a", "id_b", sim.alias("cosine")).filter(
-        F.col("cosine") >= threshold
-    )
-
-
 # ---------------------------------------------------------------------
-# IVF (inverted-file) ANN — coarse k-means quantizer + cell probe
+# IVF (inverted-file) cell assignment and probe, used by pq.ivf_pq_topk
 # ---------------------------------------------------------------------
-
-
-def train_ivf_centroids(
-    df: DataFrame,
-    dims: int,
-    n_centroids: int = 16,
-    *,
-    vec_col: str = "embedding",
-    sample: int = 2048,
-    iters: int = 10,
-    seed: int = 7,
-) -> list[list[float]]:
-    """Train the coarse quantizer: numpy k-means on a driver-side
-    sample (the sample is tiny and bounded; the corpus never collects).
-    Deterministic for a given seed — the sample is the ``sample``
-    smallest rows by ``xxhash64(vector, seed)``, which is invariant
-    under partition layout (a bare ``limit()`` is not: it takes
-    whichever rows arrive first)."""
-    rows = (
-        df.select(vec_col)
-        .orderBy(F.xxhash64(F.col(vec_col), F.lit(seed)))
-        .limit(sample)
-        .collect()
-    )
-    x = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    cents = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(iters):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(cents)):
-            m = assign == c
-            if m.any():
-                cents[c] = x[m].mean(axis=0)
-    return cents.tolist()
 
 
 def _cell_scored_sql(vec: str, centroids: list[list[float]],
@@ -425,36 +275,3 @@ def _top_cells(vec: str, centroids: list[list[float]],
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 3,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF search: corpus rows live in their nearest-centroid cell
-    (equi-join key — one shuffle on a small int); each query probes its
-    ``nprobe`` best cells and ranks exact cosine within candidates."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_e")
-    ).withColumn("cell", _cell_of("_e", centroids))
-    q = queries.select(
-        F.col(id_col).alias("q_id"), _as_double(vec_col).alias("_qe")
-    ).withColumn(
-        "cell", F.explode(_top_cells("_qe", centroids, nprobe))
-    )
-    cand = (
-        F.broadcast(q).join(c, on="cell")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-    )
-    sim = dot("_qe", "_e") / (l2norm("_qe") * l2norm("_e"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.select("q_id", "neighbor_id", sim.alias("cosine"))
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )

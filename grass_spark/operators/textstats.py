@@ -1,97 +1,18 @@
 """Text analysis operators for training-data pipelines.
 
-Language-ID (stopword n-gram heuristic), quality scoring
-(length/punct/stopword ratios), token counting (whitespace + a BPE-ish
-regex), and rolling-hash document fingerprinting — all pure column
-expressions (regexp/split/higher-order functions), fully codegen'd;
-nothing leaves the JVM.
+Greedy subword tokenization and token counting, text normalization,
+compression ratio, readability and lexical diversity — pure column
+expressions (regexp/split/higher-order functions) wherever Spark has
+them.
 """
 
 from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grass_spark.operators.parallel import spread
-
-STOPWORDS = {
-    "en": ("the", "and", "of", "to", "in", "is", "that", "for"),
-    "fr": ("le", "la", "et", "les", "des", "un", "une", "est"),
-    "de": ("der", "und", "die", "das", "ist", "ein", "nicht", "mit"),
-    "es": ("el", "la", "de", "que", "los", "es", "una", "por"),
-}
-
-BPE_ISH = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
-
-
-def _hits(padded: Column, word: str) -> Column:
-    needle = f" {word} "
-    return (
-        (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(""))))
-        / len(needle)
-    ).cast("long")
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    return {
-        lang: sum((_hits(padded, w) for w in words), F.lit(0).cast("long"))
-        for lang, words in STOPWORDS.items()
-    }
-
-
-def lang_id(df: DataFrame, *, text_col: str = "text") -> DataFrame:
-    """Adds ``lang_guess`` + per-language hit counts."""
-    scores = lang_scores(F.col(text_col))
-    out = df
-    for lang, col in scores.items():
-        out = out.withColumn(f"{lang}_hits", col)
-    best = F.lit("unknown")
-    # reversed so earlier languages win ties (deterministic order)
-    for lang in reversed(list(STOPWORDS)):
-        cond = F.col(f"{lang}_hits") > 0
-        for other in STOPWORDS:
-            if other != lang:
-                cond = cond & (F.col(f"{lang}_hits") >= F.col(f"{other}_hits"))
-        best = F.when(cond, F.lit(lang)).otherwise(best)
-    return out.withColumn("lang_guess", best)
-
-
-def quality_scores(df: DataFrame, *, text_col: str = "text") -> DataFrame:
-    """Heuristic quality features: token counts, ratios, mean word len."""
-    t = F.col(text_col)
-    toks = F.split(F.trim(t), r"\s+")
-    n_tokens = F.size(toks).cast("long")
-    n_chars = F.length(t).cast("long")
-    n_alpha = F.length(F.regexp_replace(t, "[^a-zA-Z]", ""))
-    n_digit = F.length(F.regexp_replace(t, "[^0-9]", ""))
-    n_punct = F.length(F.regexp_replace(t, "[^.,!?;:]", ""))
-    n_space = F.length(F.regexp_replace(t, r"[^\s]", ""))
-    en_words = STOPWORDS["en"]
-    padded = F.concat(F.lit(" "), F.lower(t), F.lit(" "))
-    stop_hits = sum((_hits(padded, w) for w in en_words), F.lit(0).cast("long"))
-    return (
-        df.withColumn("n_chars", n_chars)
-        .withColumn("n_tokens", n_tokens)
-        .withColumn("mean_token_len", (n_chars - n_space) / n_tokens)
-        .withColumn("alpha_ratio", n_alpha / n_chars)
-        .withColumn("digit_ratio", n_digit / n_chars)
-        .withColumn("punct_ratio", n_punct / n_chars)
-        .withColumn("stopword_ratio", stop_hits / n_tokens)
-    )
-
-
-def token_counts(df: DataFrame, *, text_col: str = "text") -> DataFrame:
-    """Whitespace tokens + BPE-ish regex tokens."""
-    t = F.col(text_col)
-    return df.withColumn(
-        "n_ws_tokens", F.size(F.split(F.trim(t), r"\s+")).cast("long")
-    ).withColumn(
-        "n_bpe_tokens",
-        F.size(F.regexp_extract_all(t, F.lit(BPE_ISH), F.lit(0))).cast("long"),
-    )
-
 
 # Deterministic built-in subword vocabulary for the greedy tokenizer:
 # frequent English function words + productive affixes/fragments.  Small
@@ -198,40 +119,6 @@ def subword_encode(
         staged.withColumn(out, ids)
         .withColumn("n_tokens", F.size(F.col(out)).cast("long"))
         .drop("_pieces")
-    )
-
-
-def fingerprints(df: DataFrame, *, text_col: str = "text") -> DataFrame:
-    """Two fingerprints: md5 of normalized text (exact-dup key) and a
-    rolling 64-bit content hash over word 4-gram windows (xxhash64 of
-    each window, XOR-combined — order-sensitive, shift-tolerant).
-
-    ``_norm``/``_words`` are materialized as columns first: a lambda
-    that references a complex expression as a free variable re-evaluates
-    it per element (10x slowdown measured on the dedup shingle path).
-    """
-    t = F.col(text_col)
-    staged = df.withColumn(
-        "_norm", F.regexp_replace(F.lower(F.trim(t)), r"\s+", " ")
-    ).withColumn("_words", F.split(F.col("_norm"), " "))
-    words = F.col("_words")
-    k = F.greatest(F.size(words) - 3, F.lit(1))
-    # zip_with fold of shifted slices — see shingles_of_words for why a
-    # free-variable element_at lambda is 20x slower
-    joined = F.slice(words, 1, k)
-    for j in range(1, 4):
-        joined = F.zip_with(
-            joined, F.slice(words, j + 1, k),
-            lambda x, y: F.concat_ws(" ", x, y),
-        )
-    windows = F.transform(joined, lambda s: F.xxhash64(s))
-    rolling = F.aggregate(
-        windows, F.lit(0).cast("long"), lambda acc, h: acc.bitwiseXOR(h)
-    )
-    return (
-        staged.withColumn("fingerprint_md5", F.md5(F.col("_norm")))
-        .withColumn("fingerprint_rolling", rolling)
-        .drop("_norm", "_words")
     )
 
 

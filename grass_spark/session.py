@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
+
 
 def get_spark(
     app_name: str = "grass_spark",
@@ -53,4 +55,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # WindowExec warns on every window without PARTITION BY; the plan
+    # sweep (tests/test_plan_contracts.py) bans the unbounded ones by
+    # reading plans, so the warning is noise that buries the log tail
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

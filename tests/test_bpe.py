@@ -2,7 +2,7 @@
 
 import pytest
 
-from grass_spark.operators.bpe import apply_bpe, learn_bpe, word_frequencies
+from grass_spark.operators.bpe import learn_bpe, word_frequencies
 
 
 @pytest.fixture(scope="module")
@@ -29,18 +29,6 @@ def test_learn_bpe_reference_progression(sennrich):
     assert [n for _, _, n in merges] == [9, 9, 7, 7, 6, 6]
 
 
-def test_apply_replays_training_segmentation(sennrich):
-    merges = learn_bpe(sennrich, 6)
-    row = apply_bpe(sennrich, merges).first()
-    toks = row["bpe_tokens"]
-    # "low" is one token; "newest" is n + ewest; "widest" is w i d est
-    assert toks[:5] == ["low"] * 5
-    assert toks[5:9] == ["low", "e", "r", "low"]  # lower = low + e + r
-    i = toks.index("n")
-    assert toks[i : i + 2] == ["n", "ewest"]
-    assert row["n_bpe_tokens"] == len(toks)
-
-
 def test_early_stop_and_validation(spark, sennrich):
     # min_pair_freq high enough: only the freq-9 merges survive
     merges = learn_bpe(sennrich, 50, min_pair_freq=8)
@@ -49,10 +37,3 @@ def test_early_stop_and_validation(spark, sennrich):
         learn_bpe(sennrich, 0)
 
 
-def test_apply_plan_is_shuffle_free(sennrich):
-    merges = [("e", "s"), ("es", "t")]
-    plan = (
-        apply_bpe(sennrich, merges)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from grass_spark.operators.caps import cap_per_group, group_histogram
+from grass_spark.operators.caps import cap_per_group
 from grass_spark.operators.quality import (
     QualityRules,
     quality_filter,
@@ -91,13 +91,6 @@ def test_cap_validation(spark):
         cap_per_group(df, 0)
     with pytest.raises(ValueError):
         cap_per_group(df, 5, salts=0)
-
-
-def test_group_histogram(spark):
-    df = _docs(spark, n=100).withColumn("n_tok", F.lit(3))
-    h = {r.source: (r.n_docs, r.tokens) for r in
-         group_histogram(df, weight_col="n_tok").collect()}
-    assert h["hot.example"] == (50, 150)
 
 
 # ---------------------------------------------------------------------

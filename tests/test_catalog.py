@@ -256,40 +256,6 @@ def test_group_maps(spark):
     assert out == {"g1": "a,b", "g2": "c"}
 
 
-def test_copy_rename_support_unregister(spark, tmp_path):
-    """t.copy / t.rename / t.support / t.unregister manifest ops."""
-    from grass_spark.catalog import (
-        copy_tier, rename_tier, support_tier, unregister_partitions)
-    from grass_spark.manifest import PartitionEntry
-
-    cat = TierCatalog(str(tmp_path))
-    cat.create("t1h", "1 hour", aggregation=["sum", "count"], command="v1")
-    cat.manifest.record_many([
-        PartitionEntry(tier="t1h", part="2024-01-01", rows_out=5),
-        PartitionEntry(tier="t1h", part="2024-01-02", rows_out=7),
-    ])
-
-    copy_tier(cat, "t1h", "t1h_copy")
-    assert "t1h_copy" in cat.tiers()
-    assert cat.manifest.done_parts("t1h_copy") == {"2024-01-01", "2024-01-02"}
-
-    rename_tier(cat, "t1h_copy", "t1h_v2")
-    assert "t1h_copy" not in cat.tiers() and "t1h_v2" in cat.tiers()
-    assert cat.manifest.done_parts("t1h_copy") == set()
-    assert cat.manifest.done_parts("t1h_v2") == {"2024-01-01", "2024-01-02"}
-
-    support_tier(cat, "t1h", command="v2", granularity="1 hour")
-    assert cat.tiers()["t1h"]["command"] == "v2"
-    with pytest.raises(KeyError):
-        support_tier(cat, "t1h", bogus_field=1)
-
-    unregister_partitions(cat, "t1h", ["2024-01-01"])
-    assert cat.manifest.done_parts("t1h") == {"2024-01-02"}
-    # reopened manifest sees the same state (persisted)
-    cat2 = TierCatalog(str(tmp_path))
-    assert cat2.manifest.done_parts("t1h") == {"2024-01-02"}
-
-
 def test_register_increment_partitioned_by_dataset(spark):
     """keys= partitions the increment numbering per dataset — each
     dataset restarts at `start`, and the window sort distributes."""

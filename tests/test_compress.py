@@ -10,14 +10,25 @@ from grass_spark.datagen import synth_transcripts
 from grass_spark.functions import compress as C
 from grass_spark.operators.blocks import (
     compress_blocks,
-    compression_report,
     decompress_blocks,
+    report_columns,
 )
 from grass_spark.operators.rollup import rollup_from_raw
 from grass_spark.functions.granularity import adjust_datetime_to_granularity
 
 
 # ---------------- numpy codec ----------------
+
+
+def _blob(encode_segments, vals) -> bytes:
+    """The blob a segmented kernel makes for a one-segment batch."""
+    data, offsets = encode_segments(vals, [len(vals)])
+    return data[offsets[0]:offsets[1]].tobytes()
+
+
+def _floats(blob: bytes) -> np.ndarray:
+    data = np.frombuffer(blob, dtype=np.uint8)
+    return C.decode_floats_segments(data, np.array([0, len(data)]))[0]
 
 
 def test_ts_roundtrip_regular():
@@ -45,13 +56,13 @@ def test_float_roundtrip_bitexact():
     v[17] = np.nan
     v[100] = np.inf
     v[101] = -0.0
-    out = C.decode_floats(C.encode_floats(v))
+    out = _floats(_blob(C.encode_floats_segments, v))
     assert np.array_equal(v.view(np.uint64), out.view(np.uint64))  # bit-exact incl NaN
 
 
 def test_float_constant_compresses():
     v = np.full(5000, 123.456)
-    blob = C.encode_floats(v)
+    blob = _blob(C.encode_floats_segments, v)
     assert len(blob) < 2500  # vs 40000 raw
 
 
@@ -67,17 +78,18 @@ def test_empty_and_single():
     assert len(C.decode_timestamps(C.encode_timestamps(np.array([], dtype=np.int64)))) == 0
     one = np.array([1_700_000_000_000_000], dtype=np.int64)
     assert np.array_equal(C.decode_timestamps(C.encode_timestamps(one)), one)
-    assert C.decode_floats(C.encode_floats(np.array([3.14])))[0] == 3.14
+    assert _floats(_blob(C.encode_floats_segments, np.array([3.14])))[0] == 3.14
 
 
 def test_validity_bitmap():
     m = np.array([True, False, True, True, False])
-    assert np.array_equal(C.decode_validity(C.encode_validity(m), 5), m)
+    data, offsets = C.encode_validity_segments(m, [5])
+    assert np.array_equal(C.decode_validity_segments(data, offsets, [5]), m)
 
 
 def test_bad_header_rejected():
     with pytest.raises(ValueError):
-        C.decode_floats(b"\x00" * 16)
+        _floats(b"\x00" * 16)
 
 
 # ---------------- Spark block operator ----------------
@@ -124,7 +136,7 @@ def test_block_compression_ratio(spark, tier):
         tier, ts_col="bucket_start",
         float_cols=["len_avg"], int_cols=["turn_cnt", "len_sum"],
     )
-    rep = compression_report(blocks).collect()[0]
+    rep = blocks.agg(*report_columns()).collect()[0]
     assert rep["n_points"] == tier.count()
     assert rep["ratio"] > 2.0, f"weak compression: {rep['ratio']}"
 
@@ -221,8 +233,9 @@ def role_tier(spark):
 
 @pytest.mark.parametrize("batch_rows", [7, None], ids=["batch7", "default"])
 def test_blocks_equal_per_group_codec(spark, role_tier, batch_rows):
-    """Each blob equals the per-block codec of its (keys, block) group,
-    whether a batch holds many blocks or a block spans many batches."""
+    """Each blob equals the segmented kernel run on its (keys, block)
+    group alone, whether a batch holds many blocks or a block spans many
+    batches."""
     keys = ["conv_id", "role"]
     ints = ["turn_cnt", "len_sum", "len_max"]
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -259,14 +272,19 @@ def test_blocks_equal_per_group_codec(spark, role_tier, batch_rows):
         x = [r["len_avg"] for r in g]
         valid = np.array([v is not None for v in x])
         assert b["n"] == len(g)
-        assert b["ts_blob"] == C.encode_timestamps(ts)
-        assert b["len_avg_blob"] == C.encode_floats(
-            np.array([np.nan if v is None else v for v in x], dtype=np.float64)
+        assert b["ts_blob"] == _blob(C.encode_timestamps_segments, ts)
+        assert b["len_avg_blob"] == _blob(
+            C.encode_floats_segments,
+            np.array([np.nan if v is None else v for v in x], dtype=np.float64),
         )
-        assert b["len_avg_valid"] == C.encode_validity(valid)
+        assert b["len_avg_valid"] == _blob(C.encode_validity_segments, valid)
         for m in ints:
-            assert b[f"{m}_blob"] == C.encode_ints(np.array([r[m] for r in g], dtype=np.int64))
-            assert b[f"{m}_valid"] == C.encode_validity(np.ones(len(g), dtype=bool))
+            assert b[f"{m}_blob"] == _blob(
+                C.encode_ints_segments, np.array([r[m] for r in g], dtype=np.int64)
+            )
+            assert b[f"{m}_valid"] == _blob(
+                C.encode_validity_segments, np.ones(len(g), dtype=bool)
+            )
     # bit-exact round trip, NaN and NULL kept apart
     def key(r):
         x = r["len_avg"]

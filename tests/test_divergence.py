@@ -6,7 +6,6 @@ import pytest
 
 from grass_spark.operators.divergence import (
     corpus_divergence,
-    divergence_contributors,
 )
 
 
@@ -48,19 +47,3 @@ def test_identical_corpora_zero_divergence(spark):
     assert r["vocab_overlap"] == 1.0
 
 
-def test_contributors_ranked(ab):
-    a, b = ab
-    rows = divergence_contributors(a, b, top_k=2).collect()
-    assert [r["rank"] for r in rows] == [1, 2]
-    # x and y are the drivers (3 vs 1 both ways); w/z (1 vs 0) are less
-    assert {r["word"] for r in rows} == {"x", "y"}
-    assert rows[0]["js_term"] >= rows[1]["js_term"]
-
-
-def test_contributors_plan_no_global_window_sort(ab):
-    a, b = ab
-    plan = (
-        divergence_contributors(a, b, top_k=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan

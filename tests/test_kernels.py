@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from grass_oracle import ORACLE, quantile as oracle_quantile
-from grass_spark.functions.kernels import KERNELS, NEEDS_INDEX, kernel_expr
+from grass_spark.functions.kernels import KERNELS, agg_exprs
 
 NAN = float("nan")
 
@@ -32,7 +32,7 @@ VECTORS = {
 def _spark_kernel(spark, values, method):
     rows = [(i, None if (isinstance(v, float) and math.isnan(v)) else v) for i, v in enumerate(values)]
     df = spark.createDataFrame(rows, "idx int, v double")
-    out = df.agg(kernel_expr(method, "v", idx_col="idx")).collect()[0][0]
+    out = df.agg(*agg_exprs([method], "v", idx_col="idx")).collect()[0][0]
     return out
 
 
@@ -54,10 +54,7 @@ def test_kernel_matches_oracle(spark, vec_name, method):
 def test_all_null_vector(spark):
     df = spark.createDataFrame([(0, None), (1, None)], "idx int, v double")
     row = df.agg(
-        kernel_expr("average", "v"),
-        kernel_expr("count", "v"),
-        kernel_expr("diversity", "v"),
-        kernel_expr("min_raster", "v", idx_col="idx"),
+        *agg_exprs(["average", "count", "diversity", "min_raster"], "v", idx_col="idx"),
     ).collect()[0]
     assert row["average"] is None
     assert row["count"] == 0

@@ -68,10 +68,10 @@ def test_done_parts_respects_fingerprint_and_status(tmp_path):
                        status="failed"),
         PartitionEntry(tier="t1h", part="d1", input_fingerprint="f1"),
     ])
-    assert m.done_parts("t1m") == {"d1", "d2"}
-    assert m.done_parts("t1m", input_fingerprint="f1") == {"d1"}
-    assert m.done_parts("t1m", input_fingerprint="f9") == set()
-    assert m.done_parts("t1d") == set()
+    assert set(m.finished_map("t1m")) == {"d1", "d2"}
+    assert set(m.finished_map("t1m", input_fingerprint="f1")) == {"d1"}
+    assert m.finished_map("t1m", input_fingerprint="f9") == {}
+    assert m.finished_map("t1d") == {}
 
 
 def test_rows_in_map_skips_failed_entries(tmp_path):
@@ -89,17 +89,14 @@ def test_save_is_atomic_and_reopen_round_trips(tmp_path):
     m = CheckpointManifest(path)
     m.register_tier("t1h", TierRecord(granularity="1 hour", source="t1m",
                                       aggregation=["sum"], command="c"))
-    m.set_meta("layout_decision", {"layout": "plain", "n_days": 2})
     m.record_many([PartitionEntry(tier="t1h", part="d1", rows_out=4)])
     assert not os.path.exists(path + ".tmp")
     with open(path) as f:
         on_disk = json.load(f)
-    assert set(on_disk) == {"tiers", "partitions", "meta"}
+    assert set(on_disk) == {"tiers", "partitions"}
     again = CheckpointManifest(path)
     assert again.tiers() == m.tiers()
     assert again.metrics() == m.metrics()
-    assert again.get_meta("layout_decision") == {"layout": "plain", "n_days": 2}
-    assert again.get_meta("missing", "dflt") == "dflt"
 
 
 def test_metrics_returns_copies(tmp_path):
@@ -129,4 +126,4 @@ def test_layout_pin_write_crash_leaves_store_reopenable(tmp_path, monkeypatch):
     pipe = RollupPipeline(base)
     assert pipe.layout == "plain"
     with open(os.path.join(base, "_layout.json")) as f:
-        assert json.load(f) == {"layout": "plain"}
+        assert json.load(f) == {"layout": "plain", "sketches": False}

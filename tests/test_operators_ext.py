@@ -4,13 +4,9 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
 from grass_spark.functions.granularity import granule_series
 from grass_spark.operators.accumulate import accdetect, accumulate
-from grass_spark.operators.aggregate import aggregate
 from grass_spark.operators.sample import (
-    aggregate_by_dataset,
     resample_by_granularity,
     sample_by_dataset,
     topology_census,
@@ -24,26 +20,6 @@ def _granules_df(spark, start, end, gran):
 
 
 # ---------------- sample ----------------
-
-
-def test_aggregate_by_dataset_matches_regular_aggregate(spark):
-    rows = [
-        ("c", datetime(2001, 1, 15), 100.0),
-        ("c", datetime(2001, 1, 20), 200.0),
-        ("c", datetime(2001, 2, 10), 300.0),
-        ("c", datetime(2001, 3, 1), 400.0),
-    ]
-    df = spark.createDataFrame(rows, ["conv_id", "ts", "value"])
-    gr = _granules_df(spark, datetime(2001, 1, 1), datetime(2001, 4, 1), "1 month")
-    via_ds = aggregate_by_dataset(
-        df, gr, ["sum", "count"], keys=["conv_id"], value_col="value"
-    ).select("conv_id", F.col("granule_start").alias("bucket_start"), "sum", "count")
-    via_reg = aggregate(
-        df, "1 month", ["sum", "count"], keys=["conv_id"], value_col="value",
-        origin=datetime(2001, 1, 1),
-    ).select("conv_id", "bucket_start", "sum", "count")
-    assert via_ds.exceptAll(via_reg).count() == 0
-    assert via_reg.exceptAll(via_ds).count() == 0
 
 
 def test_sample_by_dataset_point_maps_use_start(spark):

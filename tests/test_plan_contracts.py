@@ -178,3 +178,14 @@ def test_no_unbounded_single_partition_windows(spark):
                         "unbounded child"
                     )
     assert not failures, "\n".join(failures)
+
+
+def test_get_spark_quiets_window_exec_warnings(spark):
+    """The sweep above bans unbounded single-partition windows by
+    reading plans, so get_spark lowers WindowExec's per-query "No
+    Partition Defined" warning to ERROR: it only buried the log tail."""
+    from grass_spark.session import WINDOW_EXEC_LOGGER
+
+    jvm = spark.sparkContext._jvm
+    logger = jvm.org.apache.logging.log4j.LogManager.getLogger(WINDOW_EXEC_LOGGER)
+    assert logger.getLevel().toString() == "ERROR"

@@ -2,13 +2,11 @@
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from grass_spark.operators.pq import pq_adc, pq_codebook, pq_encode
+from grass_spark.operators.pq import pq_codebook, pq_encode
 
 
 def _vecs(spark, n=120, dims=16, seed=7):
@@ -52,56 +50,11 @@ def test_recon_err_zero_for_seeds_positive_for_rest(spark):
     assert all(errs[i] > 0 for i in range(8, 120))
 
 
-def test_adc_equals_table_lookup_reference(spark):
-    rows, df = _vecs(spark)
-    m, k, sub = 4, 8, 4
-    cb = pq_codebook(df, m, k)
-    query = rows[3][1]
-    out = pq_adc(pq_encode(df, cb), cb, query)
-    got = {r.vec_id: r.adc for r in out.collect()}
-    cbn = np.array(cb)
-    q = np.array(query).reshape(m, sub)
-    table = np.round(((cbn - q[:, None, :]) ** 2).sum(axis=2), 6)
-    codes = {r.vec_id: r.codes for r in pq_encode(df, cb).collect()}
-    for vid, _ in rows:
-        want = round(float(sum(table[j][codes[vid][j]] for j in range(m))), 6)
-        assert math.isclose(got[vid], want, abs_tol=1e-9), vid
-
-
-def test_adc_topk_recall_vs_exact(spark):
-    """On clustered data (vectors = center + small noise, the shape PQ
-    exists for) top-10-by-ADC recovers most of the exact top-10; on
-    PURE random gaussians seeded-PQ recall is inherently poor — a data
-    property, same as the SRP-LSH finding, so the test plants
-    structure.  The query's own seed vector is exact rank 1 (ADC 0)."""
-    rng = np.random.default_rng(3)
-    centers = rng.normal(size=(8, 16)) * 3.0
-    rows = [
-        (i, [float(x) for x in centers[i % 8] + rng.normal(size=16) * 0.1])
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cb = pq_codebook(df, 4, 8)
-    query = rows[5][1]  # a seed vector: its codes reproduce it exactly
-    scored = pq_adc(pq_encode(df, cb), cb, query)
-    # PQ is a CANDIDATE GENERATOR: same-cluster members share codes, so
-    # within-cluster order is lost — the contract is that an ADC
-    # shortlist + exact re-rank recovers the true neighbours.
-    cands = [r.vec_id for r in
-             scored.orderBy("adc", "vec_id").limit(30).collect()]
-    qn = np.array(query)
-    exact = sorted(rows, key=lambda r: float(((np.array(r[1]) - qn) ** 2).sum()))
-    exact_ids = [r[0] for r in exact[:10]]
-    assert set(exact_ids) <= set(cands)  # shortlist covers the truth
-    # every shortlisted vector is from the query's own cluster
-    assert all(v % 8 == 5 for v in cands[:25])
-
-
 def test_plan_scan_stage_and_guards(spark):
     rows, df = _vecs(spark)
     cb = pq_codebook(df, 4, 8)
     plan = (
-        pq_adc(pq_encode(df, cb, with_err=True), cb, rows[0][1])
+        pq_encode(df, cb, with_err=True)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan and "Python" not in plan
@@ -109,8 +62,6 @@ def test_plan_scan_stage_and_guards(spark):
         pq_codebook(df, 5, 8)
     with pytest.raises(ValueError, match="need >= "):
         pq_codebook(df.limit(3), 4, 8)
-    with pytest.raises(ValueError, match="query dims"):
-        pq_adc(pq_encode(df, cb), cb, [0.0] * 7)
 
 
 def test_literal_budget_guard(spark):

@@ -50,7 +50,8 @@ def test_ts_codec_roundtrip_any_deltas(deltas):
 @settings(max_examples=60, deadline=None)
 def test_float_codec_bitexact_any_values(vals):
     v = np.array(vals, dtype=np.float64)
-    out = C.decode_floats(C.encode_floats(v))
+    data, offsets = C.encode_floats_segments(v, [len(v)])
+    out = C.decode_floats_segments(data, offsets)[0]
     assert np.array_equal(v.view(np.uint64), out.view(np.uint64))
 
 

@@ -9,7 +9,7 @@ same Spark commit as the plain layout, which replaces exactly the days
 it writes.  These tests pin: result parity with the plain layout, both
 resume modes, the 0-Exchange plan contract on PIPELINE-written (not
 hand-written) tiers, cross-session catalog re-attach, a store rebuilt
-at the same base_dir, the bucket-count mismatch guard, the jobs one run
+at the same base_dir, the bucket-count and sketches pins, the jobs one run
 launches, and — over both layouts — that a run cut by a failed write
 task, by a crash between Spark's commit and the manifest entry, or
 between two tiers is reconciled by the next run.
@@ -18,6 +18,7 @@ between two tiers is reconciled by the next run.
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import shutil
 
@@ -38,6 +39,11 @@ def _raw(spark, n_convs=30, avg_turns=25):
 
 def _n_exchanges(df) -> int:
     return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+
+LAYOUTS = pytest.mark.parametrize(
+    "layout", [{}, {"layout": "bucketed", "buckets": 4}], ids=["plain", "bucketed"]
+)
 
 
 def test_bucketed_matches_plain(spark, tmp_path):
@@ -175,6 +181,47 @@ def test_layout_pin_rejects_mismatch(spark, tmp_path):
         RollupPipeline(base, layout="bucketed", buckets=16)
     with pytest.raises(ValueError, match="layout"):
         RollupPipeline(base, layout="plain")
+
+
+@LAYOUTS
+def test_layout_pin_rejects_sketches_flip(spark, tmp_path, layout):
+    """A store built without sketches refuses a sketches=True re-open:
+    appending a day would mix day files with and without the sketch
+    columns (plain), or drop them on publish (bucketed)."""
+    base = str(tmp_path / "tiers")
+    RollupPipeline(base, **layout).run(_turns(spark, BASE_TURNS))
+    with pytest.raises(ValueError, match="sketches"):
+        RollupPipeline(base, sketches=True, **layout)
+
+
+@LAYOUTS
+def test_pin_without_sketches_key_reads_it_from_the_store(spark, tmp_path, layout):
+    """A pin written before ``sketches`` was pinned has no such key: the
+    store re-opens with its own options (sketches or not, read from a
+    t1m footer), resumes, appends, and refuses the other setting."""
+    for sketches in (False, True):
+        base = str(tmp_path / f"sk{sketches}")
+        RollupPipeline(base, sketches=sketches, **layout).run(_turns(spark, BASE_TURNS))
+        pin_path = os.path.join(base, "_layout.json")
+        with open(pin_path) as f:
+            pin = json.load(f)
+        del pin["sketches"]
+        with open(pin_path, "w") as f:
+            json.dump(pin, f)
+        with pytest.raises(ValueError, match="sketches"):
+            RollupPipeline(base, sketches=not sketches, **layout)
+        pipe = RollupPipeline(base, sketches=sketches, **layout)
+        with open(pin_path) as f:
+            assert json.load(f)["sketches"] is sketches
+        if sketches:
+            done = pipe.run(_turns(spark, BASE_TURNS))
+            assert all(r.days_written == [] for r in done)
+        else:
+            pipe.run(_turns(spark, BASE_TURNS + NEW_DAY_TURNS), incremental=True)
+            t1d = pipe.read_tier(spark, "t1d")
+            assert t1d.agg(F.sum("turn_cnt")).collect()[0][0] == len(
+                BASE_TURNS + NEW_DAY_TURNS
+            )
 
 
 def test_per_tier_bucket_counts(spark, tmp_path):
@@ -315,9 +362,6 @@ def test_bucketed_run_job_budget(spark, tmp_path):
 #: turns backfilled into two of BASE_TURNS' days
 BACKFILL = [("a", "2024-03-01 00:00:30"), ("b", "2024-03-04 05:00:02")]
 BACKFILLED_DAYS = ["2024-03-01", "2024-03-04"]
-LAYOUTS = pytest.mark.parametrize(
-    "layout", [{}, {"layout": "bucketed", "buckets": 4}], ids=["plain", "bucketed"]
-)
 
 
 def _tiers(spark, pipe) -> dict[str, list]:

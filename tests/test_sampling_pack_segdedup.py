@@ -8,17 +8,27 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from grass_spark.operators.dedup import normalize_text
 from grass_spark.operators.pack import pack_sequences
 from grass_spark.operators.sampling import (
     hash_sample,
     mixture_rates,
     uniform_hash,
 )
-from grass_spark.operators.segdedup import (
-    dedup_segments,
-    segments_by_separator,
-    segments_by_words,
-)
+from grass_spark.operators.segdedup import dedup_segments, segments_by_words
+
+
+def segments_by_separator(df, text_col, sep):
+    """(seg_idx, seg) rows split on a regex separator, whitespace-
+    normalized, empties dropped: a second segmenter, so the segment
+    operators are exercised on paragraph input too."""
+    return (
+        df.select(
+            "*", F.posexplode(F.split(F.col(text_col), sep)).alias("seg_idx", "seg"),
+        )
+        .withColumn("seg", normalize_text(F.col("seg")))
+        .filter(F.col("seg") != "")
+    )
 
 # ---------------- sampling ----------------
 

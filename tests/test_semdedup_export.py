@@ -361,17 +361,16 @@ def test_semantic_dedup_auto_resolves_both_stages(spark):
 
 
 def test_semantic_dedup_with_trained_ivf_centroids(spark):
-    """The documented plug-in path: train_ivf_centroids output bridged
-    via centroid_frame drives the same pipeline — planted dups still
-    collapse, at k-means-quality clusters instead of seeded ones."""
+    """Caller-trained centroids bridged via centroid_frame drive the
+    same pipeline — planted dups still collapse, at k-means-quality
+    clusters instead of seeded ones."""
     from grass_spark.datagen import synth_embeddings
+    from grass_spark.operators.kmeans import lloyd_refine
     from grass_spark.operators.semdedup import centroid_frame
-    from grass_spark.operators.similarity import train_ivf_centroids
 
     emb = synth_embeddings(spark, n_vecs=2000, dims=32)
     vecs = emb.select("vec_id", "embedding")
-    trained = train_ivf_centroids(vecs, dims=32, n_centroids=40,
-                                  sample=512, iters=5)
+    trained, _ = lloyd_refine(vecs, 40, rounds=5)
     out = semantic_dedup(
         vecs, threshold=0.9, centroids=centroid_frame(spark, trained),
         probes=2,

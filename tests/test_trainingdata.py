@@ -1,8 +1,6 @@
-"""Training-data ops: dedup, similarity search, text stats."""
+"""Training-data ops: dedup and similarity search."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,20 +11,8 @@ from grass_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    simhash_candidates,
-    word_shingles,
 )
-from grass_spark.operators.similarity import (
-    cosine_topk,
-    embedding_neardup,
-    lsh_topk,
-)
-from grass_spark.operators.textstats import (
-    fingerprints,
-    lang_id,
-    quality_scores,
-    token_counts,
-)
+from grass_spark.operators.similarity import cosine_topk
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and then runs far away "
@@ -55,15 +41,6 @@ def test_exact_dedup(spark, docs):
     assert out[3]["n_copies"] == 1
 
 
-def test_word_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], ["t"])
-    got = df.select(word_shingles(F.col("t"), 3).alias("s")).collect()[0]["s"]
-    assert sorted(got) == ["a b c", "b c d"]
-    short = spark.createDataFrame([("hi there",)], ["t"])
-    got = short.select(word_shingles(F.col("t"), 3).alias("s")).collect()[0]["s"]
-    assert got == ["hi there"]
-
-
 def test_minhash_near_dup_found(spark, docs):
     sigs = minhash_signatures(docs, n_hashes=32).cache()
     cands = minhash_candidates(sigs, bands=8).collect()
@@ -88,33 +65,15 @@ def test_simhash_near_dup(spark, docs):
     fp = simhash(docs).cache()
     vals = {r["doc_id"]: r["simhash"] for r in fp.collect()}
     assert vals[1] == vals[4]
-    # bands=16 -> 4-bit bands; a pair with hamming h < 16 shares at
-    # least 16-h untouched bands (pigeonhole), so hamming-8 is found
-    cands = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_candidates(fp, max_hamming=12, bands=16).collect()
-    }
-    assert (1, 4) in cands and cands[(1, 4)] == 0
-    assert (1, 2) in cands and cands[(1, 2)] <= 12   # near dup
-    assert (1, 3) not in cands                       # hamming 35, filtered
+
+    def hamming(a, b):
+        return bin((vals[a] ^ vals[b]) & (2**64 - 1)).count("1")
+
+    assert hamming(1, 2) <= 12   # near dup: one word changed
+    assert hamming(1, 3) > 12    # unrelated
 
 
 # ---------------- similarity ----------------
-
-
-def _clustered_embeddings(spark, n_clusters=3, per=5, dim=16):
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    centers = rng.normal(size=(n_clusters, dim))
-    rows = []
-    vid = 0
-    for c in range(n_clusters):
-        for _ in range(per):
-            v = centers[c] + rng.normal(scale=0.01, size=dim)
-            rows.append((vid, c, [float(x) for x in v]))
-            vid += 1
-    return spark.createDataFrame(rows, ["vec_id", "cluster", "embedding"])
 
 
 def test_cosine_topk_exact(spark):
@@ -128,96 +87,6 @@ def test_cosine_topk_exact(spark):
     out = cosine_topk(emb, q, k=2).orderBy("rank").collect()
     assert [r["neighbor_id"] for r in out] == [1, 2]
     assert out[0]["cosine"] > 0.99
-
-
-def test_lsh_topk_finds_cluster_neighbors(spark):
-    emb = _clustered_embeddings(spark).cache()
-    q = emb.filter("vec_id = 0")
-    got = lsh_topk(emb, q, dims=16, k=4, n_planes=8, n_tables=3).collect()
-    ids = {r["neighbor_id"] for r in got}
-    # same-cluster vectors (1..4) are nearly parallel to the query ->
-    # must share buckets and dominate the top-k
-    assert {1, 2, 3, 4} <= ids
-
-
-def test_lsh_cosines_match_brute_force(spark):
-    emb = _clustered_embeddings(spark)
-    q = emb.filter("vec_id in (0, 5)")
-    brute = {
-        (r["q_id"], r["neighbor_id"]): r["cosine"]
-        for r in cosine_topk(emb, q, k=14).collect()
-    }
-    approx = lsh_topk(emb, q, dims=16, k=5).collect()
-    for r in approx:
-        assert abs(brute[(r["q_id"], r["neighbor_id"])] - r["cosine"]) < 1e-12
-
-
-def test_embedding_neardup(spark):
-    emb = _clustered_embeddings(spark)
-    pairs = embedding_neardup(emb, dims=16, threshold=0.999).collect()
-    got = {(r["id_a"], r["id_b"]) for r in pairs}
-    # all within-cluster pairs are near-identical (sigma=0.01)
-    for c in range(3):
-        base = c * 5
-        for i in range(5):
-            for j in range(i + 1, 5):
-                assert (base + i, base + j) in got
-    # no cross-cluster pair survives the threshold
-    assert all((a // 5) == (b // 5) for a, b in got)
-
-
-# ---------------- textstats ----------------
-
-
-def test_token_counts(spark):
-    df = spark.createDataFrame([(1, "Hello, world! 42 times")], ["doc_id", "text"])
-    r = token_counts(df).collect()[0]
-    assert r["n_ws_tokens"] == 4
-    # Hello , world ! 42 times
-    assert r["n_bpe_tokens"] == 6
-
-
-def test_quality_scores(spark):
-    df = spark.createDataFrame([(1, "the cat and the dog.")], ["doc_id", "text"])
-    r = quality_scores(df).collect()[0]
-    assert r["n_tokens"] == 5
-    assert r["stopword_ratio"] == pytest.approx(3 / 5)  # the, and, the
-    assert r["punct_ratio"] == pytest.approx(1 / 20)
-    assert 0 < r["alpha_ratio"] < 1
-
-
-def test_lang_id(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the cat and the dog of the house"),
-            (2, "le chat et la maison est grande"),
-            (3, "der hund und die katze ist hier"),
-            (4, "xyzzy plugh"),
-        ],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r["lang_guess"] for r in lang_id(df).collect()}
-    assert got == {1: "en", 2: "fr", 3: "de", 4: "unknown"}
-
-
-def test_fingerprints_match_hashlib(spark):
-    txt = "  The   QUICK brown  fox  "
-    df = spark.createDataFrame([(1, txt)], ["doc_id", "text"])
-    r = fingerprints(df).collect()[0]
-    norm = "the quick brown fox"
-    assert r["fingerprint_md5"] == hashlib.md5(norm.encode()).hexdigest()
-    assert isinstance(r["fingerprint_rolling"], int)
-
-
-def test_fingerprint_rolling_shift_tolerant(spark):
-    a = "alpha beta gamma delta epsilon zeta eta theta"
-    b = "PREFIX " + a  # shifted by one word: shares most 4-gram windows
-    df = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
-    rows = {r["doc_id"]: r["fingerprint_rolling"] for r in fingerprints(df).collect()}
-    assert rows[1] != rows[2]  # different docs -> different hash
-    # but both share window hashes: xor of the two fingerprints equals
-    # xor of the symmetric-difference windows only (sanity: non-zero)
-    assert rows[1] ^ rows[2] != 0
 
 
 def test_dedup_clusters(spark):
@@ -241,39 +110,6 @@ def test_dedup_clusters_chain(spark):
     )
     got = {r["id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
     assert set(got.values()) == {1}
-
-
-def test_ivf_topk_clustered(spark):
-    from grass_spark.operators.similarity import ivf_topk, train_ivf_centroids
-
-    emb = _clustered_embeddings(spark, n_clusters=4, per=6, dim=16).cache()
-    cents = train_ivf_centroids(emb, dims=16, n_centroids=4, sample=24, seed=1)
-    assert len(cents) == 4 and len(cents[0]) == 16
-    q = emb.filter("vec_id = 0")
-    got = ivf_topk(emb, q, cents, k=5, nprobe=1).collect()
-    ids = {r["neighbor_id"] for r in got}
-    # with one probe, same-cluster vectors (1..5) fill the top-5
-    assert ids == {1, 2, 3, 4, 5}
-    # cosines are exact (match brute force)
-    from grass_spark.operators.similarity import cosine_topk
-    brute = {
-        (r["q_id"], r["neighbor_id"]): r["cosine"]
-        for r in cosine_topk(emb, q, k=23).collect()
-    }
-    for r in got:
-        assert abs(brute[(0, r["neighbor_id"])] - r["cosine"]) < 1e-12
-
-
-def test_ivf_nprobe_widens_recall(spark):
-    from grass_spark.operators.similarity import ivf_topk, train_ivf_centroids
-
-    emb = _clustered_embeddings(spark, n_clusters=4, per=6, dim=16)
-    cents = train_ivf_centroids(emb, dims=16, n_centroids=4, sample=24, seed=1)
-    q = emb.filter("vec_id = 0")
-    n1 = ivf_topk(emb, q, cents, k=23, nprobe=1).count()
-    n4 = ivf_topk(emb, q, cents, k=23, nprobe=4).count()
-    assert n4 >= n1
-    assert n4 == 23  # all candidates reachable with every cell probed
 
 
 def test_near_dedup_end_to_end(spark, docs):
@@ -308,8 +144,7 @@ def test_lsh_bucket_cap_adversarial_boilerplate(spark):
     """1k identical-boilerplate docs (round-1 VERDICT #6): the hot band
     bucket is dropped at max_bucket_size, so the pair join stays
     sub-quadratic; distinct docs still pair up normally."""
-    from grass_spark.operators.dedup import (
-        minhash_candidates, minhash_signatures, simhash, simhash_candidates)
+    from grass_spark.operators.dedup import minhash_candidates, minhash_signatures
 
     boiler = [(i, "lorem ipsum dolor sit amet consectetur adipiscing elit")
               for i in range(1000)]
@@ -325,14 +160,6 @@ def test_lsh_bucket_cap_adversarial_boilerplate(spark):
     assert all(r["id_a"] >= 2000 for r in got)
     # the near-dup pair outside the hot bucket survives
     assert {(r["id_a"], r["id_b"]) for r in got} == {(2000, 2001)}
-
-    # uncapped, the same corpus would build 1000*999/2 pairs; capped
-    # simhash also completes with only the distinct pair
-    fps = simhash(df, shingle_n=2)
-    spairs = simhash_candidates(fps, max_hamming=16, bands=8, max_bucket_size=100)
-    ids = {(r["id_a"], r["id_b"]) for r in spairs.collect()}
-    assert (2000, 2001) in ids
-    assert all(a >= 2000 for a, _ in ids)
 
 
 def test_dedup_clusters_raises_on_forced_non_convergence(spark):
@@ -454,94 +281,6 @@ def test_dedup_clusters_chain_of_100_autoconverges(spark):
     )
     got = {r["id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
     assert len(got) == 101 and set(got.values()) == {0}
-
-
-def test_ivf_centroids_invariant_under_repartition(spark):
-    """VERDICT round-1 #9: the quantizer sample orders by a seeded hash,
-    so centroids don't change with partition layout."""
-    import numpy as np
-    from grass_spark.operators.similarity import train_ivf_centroids
-
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(300)]
-    df = spark.createDataFrame(rows, "id long, embedding array<double>")
-    c1 = train_ivf_centroids(df.repartition(1), 8, n_centroids=4, sample=64)
-    c2 = train_ivf_centroids(df.repartition(13, "id"), 8, n_centroids=4, sample=64)
-    assert c1 == c2
-
-
-# ---------------------------------------------------------------------
-# ANN recall on the REAL testdata embeddings (500 vectors, 10 labelled
-# clusters, dim 64) — the recall story on clustered data, vs the
-# documented ~10% SRP recall on *random* near-orthogonal vectors
-# ---------------------------------------------------------------------
-
-EMB_SF = "/root/testdata/sf0.001"
-
-
-def _recall_at_k(approx_rows, brute_rows, k=10):
-    def topsets(rows):
-        per = {}
-        for r in rows:
-            per.setdefault(r["q_id"], []).append((r["rank"], r["neighbor_id"]))
-        return {
-            q: {nid for _, nid in sorted(v)[:k]} for q, v in per.items()
-        }
-
-    a, b = topsets(approx_rows), topsets(brute_rows)
-    hits = sum(len(a.get(q, set()) & nb) for q, nb in b.items())
-    return hits / sum(len(nb) for nb in b.values())
-
-
-def test_ivf_recall_on_testdata_embeddings(spark):
-    """The testdata embeddings are near-random (only ~13% of true
-    top-10 neighbours share the query's label), i.e. the hard case for
-    any space-partitioning index.  The honest property to pin is the
-    recall/nprobe curve: monotone non-decreasing, and near-exhaustive
-    probing recovers almost everything."""
-    from grass_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-        train_ivf_centroids,
-    )
-
-    emb = spark.read.parquet(f"{EMB_SF}/embeddings.parquet").cache()
-    cents = train_ivf_centroids(
-        emb, dims=64, n_centroids=10, sample=500, seed=7
-    )
-    q = emb.filter("vec_id < 20")
-    brute = cosine_topk(emb, q, k=10).collect()
-    recalls = [
-        _recall_at_k(
-            ivf_topk(emb, q, cents, k=10, nprobe=npb).collect(), brute, k=10
-        )
-        for npb in (1, 3, 8)
-    ]
-    assert recalls == sorted(recalls), f"recall not monotone: {recalls}"
-    # measured on this table: ~0.59 @ nprobe=3, ~0.98 @ nprobe=8
-    assert recalls[-1] >= 0.9, f"IVF recall@10 (nprobe=8) = {recalls[-1]:.3f}"
-
-
-def test_srp_lsh_recall_on_testdata_embeddings(spark):
-    """Same data property: SRP-LSH recall on near-orthogonal vectors is
-    inherently low (CLAUDE.md) — pin the tuning direction instead of an
-    absolute: fewer planes per table x more tables => wider buckets =>
-    strictly better recall (measured 0.12 @ 8x6 -> 0.34 @ 6x8)."""
-    from grass_spark.operators.similarity import cosine_topk, lsh_topk
-
-    emb = spark.read.parquet(f"{EMB_SF}/embeddings.parquet").cache()
-    q = emb.filter("vec_id < 20")
-    brute = cosine_topk(emb, q, k=10).collect()
-    narrow = _recall_at_k(
-        lsh_topk(emb, q, dims=64, k=10, n_planes=8, n_tables=6, seed=3).collect(),
-        brute, k=10,
-    )
-    wide = _recall_at_k(
-        lsh_topk(emb, q, dims=64, k=10, n_planes=6, n_tables=8, seed=3).collect(),
-        brute, k=10,
-    )
-    assert wide > narrow, f"wide={wide:.3f} narrow={narrow:.3f}"
-    assert wide >= 0.25
 
 
 def test_sig_fold_equals_exploded_aggregate(spark):
