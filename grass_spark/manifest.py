@@ -1,4 +1,4 @@
-"""Checkpoint manifest — per-tier, per-partition lineage + metrics.
+"""Checkpoint manifest — the tier store's one metadata file.
 
 The reference keeps its lineage in the temporal catalog: every dataset
 row carries the creating ``command`` string
@@ -6,12 +6,24 @@ row carries the creating ``command`` string
 ``abstract_space_time_dataset.py:232-291`` ``update_command_string``) and
 ``update_from_registered_maps`` recomputes rollup metadata after each
 append.  This engine replaces that SQLite catalog with a JSON manifest
-per pipeline: one entry per (tier, output partition) recording rows,
-bytes and the input fingerprint (the tier record holds the tier's write
-wall; a day's share of it is not measured) — which is what makes a tier
-job **resumable mid-tier**: on restart the pipeline diffs target
-partitions against completed manifest entries and recomputes only the
-missing ones, overwriting idempotently (dynamic partition overwrite).
+per pipeline, and like that catalog it holds metadata, never cell data:
+
+* the store's layout pin (``layout``, and ``buckets`` for the bucketed
+  layout);
+* one record per tier: granularity, source, command, write wall and,
+  for a tier with a block store, its codec report;
+* one entry per (tier, output partition) recording rows, bytes and the
+  input fingerprint (the tier record holds the tier's write wall; a
+  day's share of it is not measured) — which is what makes a tier job
+  **resumable mid-tier**: on restart the pipeline diffs target
+  partitions against completed manifest entries and recomputes only the
+  missing ones, overwriting idempotently (dynamic partition overwrite).
+  An entry's position in the list is its record order: ``record_many``
+  moves a re-recorded entry to the end.
+
+A tier's column schema is not recorded here: every Spark-written parquet
+footer already carries it, and cannot disagree with the data it
+describes (``operators/rollup.py`` reads it from there).
 
 The manifest itself is tiny (one row per day-partition per tier) so a
 single JSON file is the right scale even at 10^12 turns: 3 tiers x a few
@@ -49,6 +61,7 @@ class TierRecord:
     aggregation: list[str] = field(default_factory=list)
     command: str = ""              # reference's strds_metadata.command analog
     write_s: float = 0.0           # wall time of the tier's last write
+    blocks: dict | None = None     # codec report of the tier's block store
 
 
 class CheckpointManifest:
@@ -69,18 +82,30 @@ class CheckpointManifest:
     def tiers(self) -> dict[str, dict]:
         return dict(self._data["tiers"])
 
+    # -- layout pin -----------------------------------------------------
+    def layout(self) -> dict | None:
+        """The store's pinned ``{"layout": ..., "buckets": ...}``
+        (``buckets`` only for the bucketed layout), or None if unpinned."""
+        return self._data.get("layout")
+
+    def set_layout(self, pin: dict) -> None:
+        self._data["layout"] = dict(pin)
+        self._save()
+
     # -- partition entries --------------------------------------------
     def finished_map(
         self, tier: str, input_fingerprint: str | None = None,
-    ) -> dict[str, float]:
-        """part -> ``finished_at`` for the partitions already completed
+    ) -> dict[str, int]:
+        """part -> record position for the partitions already completed
         for ``tier``.  If a fingerprint is given, entries computed from a
         *different* input snapshot do not count as done (the input
-        changed -> recompute).  The times let a tier's partition be
-        ordered against its source's."""
+        changed -> recompute).  Positions order a tier's partition
+        against its source's by when each was recorded, with no clock
+        involved: ``finished_at`` is wall time, which can step back
+        between runs."""
         return {
-            e["part"]: e["finished_at"]
-            for e in self._data["partitions"]
+            e["part"]: pos
+            for pos, e in enumerate(self._data["partitions"])
             if e["tier"] == tier
             and e["status"] == "ok"
             and (input_fingerprint is None or e["input_fingerprint"] == input_fingerprint)
@@ -90,8 +115,9 @@ class CheckpointManifest:
         self, entries: list[PartitionEntry],
         tiers: dict[str, TierRecord] | None = None,
     ) -> None:
-        """Upsert ``entries`` (idempotent on (tier, part)) and, in the same
-        save, ``tiers``."""
+        """Upsert ``entries`` (idempotent on (tier, part); an upserted
+        entry moves to the end, after every entry recorded before it)
+        and, in the same save, ``tiers``."""
         for name, rec in (tiers or {}).items():
             self._data["tiers"][name] = asdict(rec)
         keys = {(e.tier, e.part) for e in entries}
@@ -124,14 +150,9 @@ class CheckpointManifest:
 
     # -- io -------------------------------------------------------------
     def _save(self) -> None:
-        write_json_atomic(self.path, self._data, indent=1, sort_keys=True)
-
-
-def write_json_atomic(path: str, data, **dump_kw) -> None:
-    """Write ``data`` as JSON to ``path`` via a tmp file + ``os.replace``:
-    a crash mid-write leaves the previous file (or none), never a
-    truncated one."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(data, f, **dump_kw)
-    os.replace(tmp, path)
+        # tmp file + os.replace: a crash mid-write leaves the previous
+        # manifest (or none), never a truncated one
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(self._data, f, indent=1, sort_keys=True)
+        os.replace(tmp, self.path)

@@ -45,6 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
 from grass_spark.functions.granularity import (
     adjust_datetime_to_granularity,
@@ -52,12 +53,7 @@ from grass_spark.functions.granularity import (
     bucket_start_col,
 )
 from grass_spark.datagen import ROLES
-from grass_spark.manifest import (
-    CheckpointManifest,
-    PartitionEntry,
-    TierRecord,
-    write_json_atomic,
-)
+from grass_spark.manifest import CheckpointManifest, PartitionEntry, TierRecord
 
 #: integer metric columns carried by every tier, in column order
 TIER_METRICS = ("turn_cnt", *[f"n_{r}" for r in ROLES], "tool_calls",
@@ -141,6 +137,42 @@ def with_derived(df: DataFrame, granularity: str) -> DataFrame:
     ).withColumn("bucket_end", bucket_end_col(F.col("bucket_start"), granularity))
 
 
+#: the parquet footer key under which Spark stores a file's Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema of the parquet dataset at ``path``, from the
+    footer of its first data file (pyarrow; no Spark job).  Spark writes
+    the schema into every footer, so it describes the data it sits in.
+    A ``d=``-partitioned dataset gets ``d string`` appended: both tier
+    layouts expose the day as a string.  None if ``path`` holds no data
+    file yet."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                meta = pq.read_schema(os.path.join(root, f)).metadata
+                schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+                if os.path.basename(root).startswith("d="):
+                    schema = schema.add("d", StringType())
+                return schema
+    return None
+
+
+def _read_dataset(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet dataset at ``path``, read with the schema its own
+    footer carries instead of a schema-inference job."""
+    schema = _footer_schema(path)
+    if schema is None:
+        raise FileNotFoundError(f"{path} holds no parquet data file")
+    return spark.read.schema(schema).parquet(path)
+
+
 def _collapse_day_ranges(days: set[str]) -> list[tuple[str, str]]:
     """Collapse 'yyyy-MM-dd' strings into [start_day, end_day_exclusive)
     ranges of consecutive days (resume typically skips one big prefix)."""
@@ -189,9 +221,12 @@ class RollupPipeline:
     """Materialize the tier cascade with manifest-backed resume.
 
     ``base_dir`` holds one parquet dataset per tier plus
-    ``manifest.json``.  ``run()`` may be interrupted at any point and
-    re-invoked: completed (tier, day) partitions are skipped, partial
-    partitions are overwritten idempotently.
+    ``manifest.json``, the store's one metadata file (layout pin, tier
+    records, partition entries).  Each tier's column schema comes from
+    its own parquet footers, never from an inference job.  ``run()`` may
+    be interrupted at any point and re-invoked: completed (tier, day)
+    partitions are skipped, partial partitions are overwritten
+    idempotently.
     """
 
     #: integer metric columns carried by every tier (compressible)
@@ -243,28 +278,44 @@ class RollupPipeline:
 
     # -------------------------------------------------- bucketed layout
     def _check_layout_pin(self) -> None:
-        """Pin (layout, buckets, sketches) on first use.  Files written
-        with a different bucket count hash rows into DIFFERENT buckets —
-        a mismatched re-open would silently produce wrong shuffle-free
-        results; a ``sketches`` flip would mix day files with and
-        without the sketch columns (and the bucketed publish would drop
-        them).  So a mismatch is a hard error, not a warning."""
+        """Pin (layout, buckets) in the manifest on first use, and refuse
+        a re-open that would change a tier's shape.  Files written with a
+        different bucket count hash rows into DIFFERENT buckets — a
+        mismatched re-open would silently produce wrong shuffle-free
+        results; a ``sketches`` or ``keys`` change would mix day files of
+        different columns (and the bucketed publish would drop some); a
+        granularity change would mix buckets of different widths.  So a
+        mismatch is a hard error, not a warning.  ``sketches`` and
+        ``keys`` are not pinned: the first tier's parquet footer says
+        what the store holds, and with no file yet there is nothing to
+        contradict.  Granularities come from the manifest's tier
+        records.  A ``_layout.json`` pin from an older store is folded
+        into the manifest once, then deleted."""
         import json
 
-        pin_path = os.path.join(self.base_dir, "_layout.json")
+        stored = self.manifest.layout()
+        legacy = os.path.join(self.base_dir, "_layout.json")
+        if os.path.exists(legacy):
+            if stored is None:
+                with open(legacy) as f:
+                    old = json.load(f)
+                stored = {k: old[k] for k in ("layout", "buckets") if k in old}
+                self.manifest.set_layout(stored)
+            os.remove(legacy)
         has_tier_data = any(
-            os.path.isdir(os.path.join(self.base_dir, name))
-            for name, _ in self.tiers
+            os.path.isdir(self.tier_path(name)) for name, _ in self.tiers
         )
         pin = {"layout": self.layout}
         if self.layout == "bucketed":
             pin["buckets"] = self.buckets
-        pin["sketches"] = self.sketches
-        stored = None
-        if os.path.exists(pin_path):
-            with open(pin_path) as f:
-                stored = json.load(f)
-        elif has_tier_data and self.layout == "bucketed":
+        if not has_tier_data:
+            # a pin with no tier files behind it (constructed-but-never-run
+            # pipeline, or a first run that crashed before any write)
+            # constrains nothing — re-pin
+            if stored != pin:
+                self.manifest.set_layout(pin)
+            return
+        if stored is None and self.layout == "bucketed":
             # no pin: a pre-pin store (tier dirs already on disk) can
             # only be the plain layout — adopting a 'bucketed' claim for
             # files that were never bucket-hashed would plan
@@ -274,40 +325,28 @@ class RollupPipeline:
                 "and its files are not bucketed; re-open with "
                 "layout='plain' or publish into a fresh base_dir"
             )
-        elif has_tier_data:
-            stored = {"layout": "plain"}
-        prior = dict(stored or {})
-        if has_tier_data and "sketches" not in prior:
-            # pinned before `sketches` was: the first tier's files say
-            # (no file yet: nothing to contradict)
-            found = self._tier_has_sketches(self.tiers[0][0])
-            prior["sketches"] = self.sketches if found is None else found
-        if prior == pin:
-            if stored != pin:
-                write_json_atomic(pin_path, pin)
-            return
-        if has_tier_data:
+        have, want = dict(stored or {"layout": "plain"}), dict(pin)
+        schema = _footer_schema(self.tier_path(self.tiers[0][0]))
+        if schema is not None:
+            cols = schema.fieldNames()
+            have["sketches"] = "len_kll" in cols
+            have["keys"] = cols[:cols.index("bucket_start")]
+            want["sketches"], want["keys"] = self.sketches, self.keys
+        recorded = self.manifest.tiers()
+        have["granularity"] = {
+            n: recorded[n]["granularity"] for n, _ in self.tiers if n in recorded
+        }
+        want["granularity"] = {n: g for n, g in self.tiers if n in recorded}
+        bad = [k for k in want if have.get(k) != want[k]]
+        if bad:
             raise ValueError(
                 f"tier store at {self.base_dir} was written with "
-                f"{prior}; re-open with the same layout/buckets/sketches "
-                f"(got {pin}) or use a fresh base_dir"
+                f"{ {k: have.get(k) for k in bad} }; re-open with the same "
+                f"layout and tier schema (got { {k: want[k] for k in bad} }) "
+                "or use a fresh base_dir"
             )
-        # a pin with no tier files behind it (constructed-but-never-run
-        # pipeline, or a first run that crashed before any write)
-        # constrains nothing — re-pin
-        write_json_atomic(pin_path, pin)
-
-    def _tier_has_sketches(self, name: str) -> bool | None:
-        """Whether ``name``'s day files carry the sketch columns, from
-        one parquet footer (no Spark job); None if it has no file."""
-        import pyarrow.parquet as pq
-
-        for root, dirs, files in os.walk(self.tier_path(name)):
-            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-            for f in sorted(files):
-                if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                    return "len_kll" in pq.read_schema(os.path.join(root, f)).names
-        return None
+        if stored != pin:
+            self.manifest.set_layout(pin)
 
     def _buckets_for(self, name: str) -> int:
         if isinstance(self.buckets, dict):
@@ -330,8 +369,8 @@ class RollupPipeline:
     ) -> str:
         """Ensure the catalog entry for a bucketed tier exists (the
         in-memory catalog is session-scoped; tier FILES survive a
-        restart, the table metadata does not).  Its columns come from the
-        day directories on disk, or, for a tier with none yet, from
+        restart, the table metadata does not).  Its columns come from a
+        day file's footer on disk, or, for a tier with none yet, from
         ``schema`` (the frame about to be written).  An entry whose day
         directories are gone (the store was deleted) is dropped and
         re-created, so a store rebuilt at the same ``base_dir`` never
@@ -346,7 +385,9 @@ class RollupPipeline:
                 return table
             spark.sql(f"DROP TABLE {table}")
         if on_disk or schema is None:
-            schema = spark.read.parquet(path).schema
+            schema = _footer_schema(path)
+        if schema is None:
+            raise FileNotFoundError(f"{path} holds no parquet data file")
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in schema.fields if f.name != "d"
@@ -369,13 +410,7 @@ class RollupPipeline:
         bucket spec and re-introduce the cascade shuffles."""
         if self.layout == "bucketed":
             return spark.table(self._attach_bucketed(spark, name))
-        # partition-type inference would surface d as DATE here while the
-        # bucketed catalog table declares d STRING — cast so both layouts
-        # expose the identical schema (predicates on cast(d) still prune:
-        # they only involve the partition column)
-        return spark.read.parquet(self.tier_path(name)).withColumn(
-            "d", F.col("d").cast("string")
-        )
+        return _read_dataset(spark, self.tier_path(name))
 
     def read_tier(self, spark: SparkSession, name: str) -> DataFrame:
         gran = dict(self.tiers)[name]
@@ -408,7 +443,7 @@ class RollupPipeline:
         inverse of the codec; see operators/blocks.py)."""
         from grass_spark.operators.blocks import decompress_blocks
 
-        blocks = spark.read.parquet(self.tier_path(name) + "_blocks")
+        blocks = _read_dataset(spark, self.tier_path(name) + "_blocks")
         return decompress_blocks(
             blocks, keys=self.keys, ts_col="bucket_start",
             int_cols=list(self.INT_METRICS),
@@ -423,7 +458,7 @@ class RollupPipeline:
 
         from grass_spark.operators.blocks import compress_blocks, report_columns
 
-        tier = spark.read.parquet(self.tier_path(name))
+        tier = self._read_tier_frame(spark, name)
         blocks = compress_blocks(
             tier, keys=self.keys, ts_col="bucket_start",
             int_cols=list(self.INT_METRICS), block="month",
@@ -499,11 +534,11 @@ class RollupPipeline:
                 # an upper-tier day is done only if it was recorded after
                 # the lower tier's same day: a run cut between two tiers
                 # (or between a tier's commit and its manifest entry)
-                # leaves the lower day newer, and the day is redone
+                # leaves the lower day recorded later, and the day is redone
                 below = self.manifest.finished_map(src) if i else {}
                 done_now = {
-                    d for d, t in self.manifest.finished_map(name, fp).items()
-                    if t > below.get(d, 0.0)
+                    d for d, pos in self.manifest.finished_map(name, fp).items()
+                    if pos > below.get(d, -1)
                 }
             if i == 0:
                 src = raw
@@ -536,15 +571,8 @@ class RollupPipeline:
             # hold a handful of points and the per-block headers EXCEED
             # the data (measured ratio 0.55) — so only tier 0 gets one
             if self.compress and i == 0 and res.days_written:
-                codec = self._write_blocks(spark, name)
-                rec = self.manifest.tiers()[name]
-                self.manifest.register_tier(
-                    name,
-                    TierRecord(**{
-                        **rec,
-                        "command": rec["command"] + f" | blocks(ratio={codec['ratio']})",
-                    }),
-                )
+                record.blocks = self._write_blocks(spark, name)
+                self.manifest.register_tier(name, record)
         return results
 
     # ------------------------------------------------------------------

@@ -74,6 +74,23 @@ def test_done_parts_respects_fingerprint_and_status(tmp_path):
     assert m.finished_map("t1d") == {}
 
 
+def test_finished_map_orders_by_record_not_clock(tmp_path, monkeypatch):
+    """A re-recorded entry ranks after every entry recorded before it,
+    even when the clock stepped back in between."""
+    import grass_spark.manifest as manifest_module
+
+    now = [2000.0]
+    monkeypatch.setattr(manifest_module.time, "time", lambda: now[0])
+    m = CheckpointManifest(_path(tmp_path))
+    m.record_many([PartitionEntry(tier="t1m", part="d1")])
+    m.record_many([PartitionEntry(tier="t1h", part="d1")])
+    now[0] = 1000.0
+    m.record_many([PartitionEntry(tier="t1m", part="d1")])
+    assert m.finished_map("t1m")["d1"] > m.finished_map("t1h")["d1"]
+    again = CheckpointManifest(_path(tmp_path))
+    assert again.finished_map("t1m")["d1"] > again.finished_map("t1h")["d1"]
+
+
 def test_rows_in_map_skips_failed_entries(tmp_path):
     m = CheckpointManifest(_path(tmp_path))
     m.record_many([
@@ -107,9 +124,9 @@ def test_metrics_returns_copies(tmp_path):
 
 
 def test_layout_pin_write_crash_leaves_store_reopenable(tmp_path, monkeypatch):
-    """A crash inside the first ``_layout.json`` write must not leave a
-    truncated pin: the pin goes through the same tmp + ``os.replace``
-    step as the manifest, so the next open sees no pin and re-pins."""
+    """A crash inside the first layout-pin write must not leave a
+    truncated manifest: the pin is saved through the manifest's tmp +
+    ``os.replace`` step, so the next open sees no pin and re-pins."""
     from grass_spark.operators.rollup import RollupPipeline
 
     base = str(tmp_path / "store")
@@ -125,5 +142,5 @@ def test_layout_pin_write_crash_leaves_store_reopenable(tmp_path, monkeypatch):
 
     pipe = RollupPipeline(base)
     assert pipe.layout == "plain"
-    with open(os.path.join(base, "_layout.json")) as f:
-        assert json.load(f) == {"layout": "plain", "sketches": False}
+    with open(os.path.join(base, "manifest.json")) as f:
+        assert json.load(f)["layout"] == {"layout": "plain"}

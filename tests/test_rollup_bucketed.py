@@ -9,10 +9,12 @@ same Spark commit as the plain layout, which replaces exactly the days
 it writes.  These tests pin: result parity with the plain layout, both
 resume modes, the 0-Exchange plan contract on PIPELINE-written (not
 hand-written) tiers, cross-session catalog re-attach, a store rebuilt
-at the same base_dir, the bucket-count and sketches pins, the jobs one run
-launches, and — over both layouts — that a run cut by a failed write
-task, by a crash between Spark's commit and the manifest entry, or
-between two tiers is reconciled by the next run.
+at the same base_dir, the bucket-count pin and the refusal of a re-open
+that changes a tier's schema, the fold of an older ``_layout.json`` pin
+into the manifest, the jobs one run launches, and — over both layouts —
+that a run cut by a failed write task, by a crash between Spark's
+commit and the manifest entry, or between two tiers is reconciled by
+the next run, also when the clock stepped back between runs.
 """
 
 from __future__ import annotations
@@ -21,16 +23,18 @@ import datetime as dt
 import json
 import os
 import shutil
+import types
 
 import pytest
 from pyspark.sql import functions as F
 
+from grass_spark import manifest as manifest_module
 from grass_spark.datagen import synth_transcripts
 from grass_spark.manifest import CheckpointManifest
 from grass_spark.operators.rollup import RollupPipeline, rollup_from_tier
 from grass_spark.functions.granularity import adjust_datetime_to_granularity
 
-from test_rollup_run import BASE_TURNS, NEW_DAY_TURNS, _raw as _turns
+from test_rollup_run import BASE_TURNS, NEW_DAY_TURNS, _jobs, _raw as _turns
 
 
 def _raw(spark, n_convs=30, avg_turns=25):
@@ -44,6 +48,24 @@ def _n_exchanges(df) -> int:
 LAYOUTS = pytest.mark.parametrize(
     "layout", [{}, {"layout": "bucketed", "buckets": 4}], ids=["plain", "bucketed"]
 )
+
+
+def _to_legacy_pin(base, **extra) -> dict:
+    """Rewrite the store at ``base`` in the older format: its layout pin
+    (plus ``extra`` keys, e.g. ``sketches``) in ``_layout.json``, none in
+    ``manifest.json``, and tier records without a ``blocks`` field.
+    Returns the pin."""
+    path = os.path.join(base, "manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    pin = manifest.pop("layout")
+    for rec in manifest["tiers"].values():
+        del rec["blocks"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with open(os.path.join(base, "_layout.json"), "w") as f:
+        json.dump({**pin, **extra}, f)
+    return pin
 
 
 def test_bucketed_matches_plain(spark, tmp_path):
@@ -161,11 +183,13 @@ def test_bucketed_reattach_after_catalog_loss(spark, tmp_path):
 
 def test_pre_pin_store_rejects_bucketed_claim(spark, tmp_path):
     """A tier store written before the layout pin existed (plain files,
-    no _layout.json) must refuse a 'bucketed' re-open — adopting the
-    claim would plan shuffle-free over non-bucketed files."""
+    no pin in the manifest or in a _layout.json) must refuse a
+    'bucketed' re-open — adopting the claim would plan shuffle-free over
+    non-bucketed files."""
     raw = _raw(spark, n_convs=5, avg_turns=5)
     base = str(tmp_path / "tiers")
     RollupPipeline(base).run(raw)
+    _to_legacy_pin(base)
     os.remove(os.path.join(base, "_layout.json"))  # simulate pre-pin
     with pytest.raises(ValueError, match="predates the layout pin"):
         RollupPipeline(base, layout="bucketed", buckets=8)
@@ -181,6 +205,8 @@ def test_layout_pin_rejects_mismatch(spark, tmp_path):
         RollupPipeline(base, layout="bucketed", buckets=16)
     with pytest.raises(ValueError, match="layout"):
         RollupPipeline(base, layout="plain")
+    pin = {"layout": "bucketed", "buckets": 8}
+    assert RollupPipeline(base, **pin).manifest.layout() == pin
 
 
 @LAYOUTS
@@ -196,23 +222,19 @@ def test_layout_pin_rejects_sketches_flip(spark, tmp_path, layout):
 
 @LAYOUTS
 def test_pin_without_sketches_key_reads_it_from_the_store(spark, tmp_path, layout):
-    """A pin written before ``sketches`` was pinned has no such key: the
+    """An older ``_layout.json`` pin without a ``sketches`` key: the
     store re-opens with its own options (sketches or not, read from a
-    t1m footer), resumes, appends, and refuses the other setting."""
+    t1m footer), folds the pin into the manifest, resumes, appends, and
+    refuses the other setting."""
     for sketches in (False, True):
         base = str(tmp_path / f"sk{sketches}")
         RollupPipeline(base, sketches=sketches, **layout).run(_turns(spark, BASE_TURNS))
-        pin_path = os.path.join(base, "_layout.json")
-        with open(pin_path) as f:
-            pin = json.load(f)
-        del pin["sketches"]
-        with open(pin_path, "w") as f:
-            json.dump(pin, f)
+        pin = _to_legacy_pin(base)
         with pytest.raises(ValueError, match="sketches"):
             RollupPipeline(base, sketches=not sketches, **layout)
         pipe = RollupPipeline(base, sketches=sketches, **layout)
-        with open(pin_path) as f:
-            assert json.load(f)["sketches"] is sketches
+        assert pipe.manifest.layout() == pin
+        assert not os.path.exists(os.path.join(base, "_layout.json"))
         if sketches:
             done = pipe.run(_turns(spark, BASE_TURNS))
             assert all(r.days_written == [] for r in done)
@@ -222,6 +244,45 @@ def test_pin_without_sketches_key_reads_it_from_the_store(spark, tmp_path, layou
             assert t1d.agg(F.sum("turn_cnt")).collect()[0][0] == len(
                 BASE_TURNS + NEW_DAY_TURNS
             )
+
+
+@LAYOUTS
+def test_older_store_folds_its_pin_and_resumes(spark, tmp_path, layout):
+    """A store whose pin sits in ``_layout.json`` with its ``sketches``
+    key re-opens, moves the pin into ``manifest.json``, deletes the file
+    and resumes with no day rewritten."""
+    base = str(tmp_path / "tiers")
+    raw = _turns(spark, BASE_TURNS)
+    RollupPipeline(base, **layout).run(raw)
+    pin = _to_legacy_pin(base, sketches=False)
+    entries = CheckpointManifest(os.path.join(base, "manifest.json")).metrics()
+    pipe = RollupPipeline(base, **layout)
+    assert not os.path.exists(os.path.join(base, "_layout.json"))
+    assert CheckpointManifest(os.path.join(base, "manifest.json")).layout() == pin
+    assert all(r.days_written == [] for r in pipe.run(raw))
+    assert pipe.manifest.metrics() == entries
+
+
+def test_reopen_rejects_keys_change(spark, tmp_path):
+    """A tier's keys are its files' leading columns: a re-open with other
+    keys would append day files of another shape, so it is refused."""
+    base = str(tmp_path / "tiers")
+    RollupPipeline(base).run(_turns(spark, BASE_TURNS))
+    with pytest.raises(ValueError, match="keys"):
+        RollupPipeline(base, keys=["conv_id", "role"])
+    RollupPipeline(base, keys=["conv_id"])
+
+
+def test_reopen_rejects_granularity_change(spark, tmp_path):
+    """A re-open that names a recorded tier with another granularity
+    would mix buckets of two widths in one tier, so it is refused; a
+    prefix of the recorded cascade re-opens."""
+    base = str(tmp_path / "tiers")
+    RollupPipeline(base).run(_turns(spark, BASE_TURNS))
+    tiers = (("t1m", "1 minute"), ("t1h", "2 hours"), ("t1d", "1 day"))
+    with pytest.raises(ValueError, match="granularity"):
+        RollupPipeline(base, tiers=tiers)
+    RollupPipeline(base, tiers=(("t1m", "1 minute"),))
 
 
 def test_per_tier_bucket_counts(spark, tmp_path):
@@ -330,17 +391,6 @@ SPAN_APPEND = [
 BUCKETED_JOB_BUDGET = {"fresh": 11, "append": 9}
 
 
-def _jobs(spark, group, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, f"bucketed RollupPipeline.run {group}")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_bucketed_run_job_budget(spark, tmp_path):
     base = str(tmp_path / "tiers")
     raw = _turns(spark, SPAN_TURNS)
@@ -412,9 +462,9 @@ def test_resume_after_crash_between_tiers_matches_fresh_build(
     spark, tmp_path, monkeypatch, layout, backfilled_fresh,
 ):
     """The backfill run dies after t1m is published, before t1h is
-    written.  t1h's and t1d's entries for the backfilled days are older
-    than t1m's, so the rerun must redo those days there, not keep the
-    stale rows as done."""
+    written.  t1h's and t1d's entries for the backfilled days were
+    recorded before t1m's, so the rerun must redo those days there, not
+    keep the stale rows as done."""
     def crash(write_tier):
         def crashing(self, spark, tiered, name, *a, **kw):
             if name == "t1h":
@@ -455,13 +505,41 @@ def test_failed_write_task_keeps_published_days(
     _assert_rerun_matches_fresh(spark, base, layout, backfilled_fresh)
 
 
+def test_clock_step_back_between_runs_is_reconciled(
+    spark, tmp_path, monkeypatch, backfilled_fresh,
+):
+    """The clock steps back between the build and a backfill run that
+    dies before t1h is written, so the backfilled days' new t1m entries
+    carry EARLIER times than t1h's stale ones.  Entries are ordered by
+    when they were recorded, not by their times: the rerun still redoes
+    those days in t1h and t1d."""
+    now = [2_000_000_000.0]
+    monkeypatch.setattr(
+        manifest_module, "time", types.SimpleNamespace(time=lambda: now[0])
+    )
+
+    def crash(write_tier):
+        def crashing(self, spark, tiered, name, *a, **kw):
+            now[0] = 1_000_000_000.0
+            if name == "t1h":
+                raise RuntimeError("injected crash before the t1h write")
+            return write_tier(self, spark, tiered, name, *a, **kw)
+        return crashing
+
+    base = str(tmp_path / "tiers")
+    _build_then_crash_backfill(
+        spark, base, {}, monkeypatch, RollupPipeline, "_write_tier", crash
+    )
+    _assert_rerun_matches_fresh(spark, base, {}, backfilled_fresh)
+
+
 @LAYOUTS
 def test_crash_between_commit_and_manifest_is_reconciled(
     spark, tmp_path, monkeypatch, layout, backfilled_fresh,
 ):
     """Spark commits t1h's rewritten days, then the run dies before
     their manifest entries are saved.  The rerun sees t1h's entries
-    older than t1m's and redoes those days in t1h and t1d."""
+    recorded before t1m's and redoes those days in t1h and t1d."""
     def crash(record_many):
         def crashing(self, entries, tiers=None):
             if tiers and "t1h" in tiers:

@@ -8,8 +8,9 @@
 * Write shape: one parquet file per (tier, day) by default; a day larger
   than AQE's advisory partition size is split over several files.
 * Job budget: the Spark jobs one run launches, without and with the
-  block codec, so a re-added raw scan, per-tier re-count or codec report
-  scan fails loudly.
+  block codec, so a re-added raw scan, per-tier re-count, codec report
+  scan or schema-inference read fails loudly; reading a tier back
+  launches none.
 * Honest durations: the tier write wall lives on the tier record;
   partition entries do not claim it.
 """
@@ -218,46 +219,73 @@ def test_hot_day_splits_over_files_and_stays_exact(spark, tmp_path):
 
 
 #: Spark jobs of one fresh run over BASE_TURNS: the fused raw pre-scan,
-#: then per tier its aggregate + rebalanced write, plus the lower tier's
-#: schema read for t1h and t1d.  Per-day counts come from parquet
-#: footers and launch none.
-RUN_JOB_BUDGET = 13
+#: then per tier its aggregate + rebalanced write.  The lower tier's
+#: schema and the per-day counts come from parquet footers and launch
+#: none.
+RUN_JOB_BUDGET = 11
+
+
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_run_job_budget(spark, tmp_path):
-    sc = spark.sparkContext
     raw = _raw(spark, BASE_TURNS)
-    sc.setJobGroup("rollup-run-budget", "RollupPipeline.run job budget")
-    try:
-        RollupPipeline(str(tmp_path / "tiers")).run(raw, input_fingerprint="fp")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("rollup-run-budget")
-    assert len(jobs) <= RUN_JOB_BUDGET, f"{len(jobs)} jobs, budget {RUN_JOB_BUDGET}"
+    jobs = _jobs(spark, "rollup-run-budget", lambda: RollupPipeline(
+        str(tmp_path / "tiers")).run(raw, input_fingerprint="fp"))
+    assert jobs <= RUN_JOB_BUDGET, f"{jobs} jobs, budget {RUN_JOB_BUDGET}"
 
 
 #: Spark jobs of one fresh ``compress=True`` run over BASE_TURNS plus a
-#: full t1m block decode: the plain run's jobs, then the tier's schema
-#: read, the block write's shuffle and write (codec metrics observed on
-#: the write, no read-back), and the block store's schema read and
-#: decode.
-CODEC_JOB_BUDGET = 18
+#: full t1m block decode: the plain run's jobs, then the block write's
+#: shuffle and write (codec metrics observed on the write, no
+#: read-back), and the decode.  Both schemas come from footers.
+CODEC_JOB_BUDGET = 14
 
 
 def test_codec_run_job_budget(spark, tmp_path):
-    sc = spark.sparkContext
     raw = _raw(spark, BASE_TURNS)
-    sc.setJobGroup("rollup-codec-budget", "RollupPipeline.run codec job budget")
-    try:
+
+    def run_and_decode():
         pipe = RollupPipeline(str(tmp_path / "tiers"), compress=True)
         pipe.run(raw, input_fingerprint="fp")
         pipe.read_tier_from_blocks(spark, "t1m").write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("rollup-codec-budget")
-    assert len(jobs) <= CODEC_JOB_BUDGET, f"{len(jobs)} jobs, budget {CODEC_JOB_BUDGET}"
+
+    jobs = _jobs(spark, "rollup-codec-budget", run_and_decode)
+    assert jobs <= CODEC_JOB_BUDGET, f"{jobs} jobs, budget {CODEC_JOB_BUDGET}"
+
+
+def test_read_job_budget(spark, tmp_path):
+    """Reading a tier back takes its schema from a parquet footer:
+    building ``read_tier`` for each tier, ``read_tier_from_blocks``, and
+    a bucketed tier's catalog re-attach after its table was dropped
+    launch no Spark job."""
+    raw = _raw(spark, BASE_TURNS)
+    plain = RollupPipeline(str(tmp_path / "plain"), compress=True)
+    plain.run(raw, input_fingerprint="fp")
+    buck = RollupPipeline(str(tmp_path / "buck"), layout="bucketed", buckets=2)
+    buck.run(raw, input_fingerprint="fp")
+    jobs = {}
+    for name in PREFIX:
+        jobs[f"plain {name}"] = _jobs(
+            spark, f"read-plain-{name}", lambda: plain.read_tier(spark, name))
+        spark.sql(f"DROP TABLE {buck._table_name(name)}")
+        jobs[f"bucketed {name}"] = _jobs(
+            spark, f"read-bucketed-{name}", lambda: buck.read_tier(spark, name))
+    jobs["blocks"] = _jobs(
+        spark, "read-blocks", lambda: plain.read_tier_from_blocks(spark, "t1m"))
+    assert jobs == dict.fromkeys(jobs, 0)
+    assert buck.read_tier(spark, "t1d").agg(F.sum("turn_cnt")).collect()[0][0] == len(
+        BASE_TURNS
+    )
 
 
 def test_partition_durations_within_tier_wall(spark, tmp_path):
@@ -268,7 +296,7 @@ def test_partition_durations_within_tier_wall(spark, tmp_path):
     results = RollupPipeline(base, compress=True).run(_raw(spark, BASE_TURNS))
     m = CheckpointManifest(os.path.join(base, "manifest.json"))
     tiers = m.tiers()
-    assert "blocks(ratio=" in tiers["t1m"]["command"]
+    assert tiers["t1m"]["blocks"]["n_blocks"] > 0
     for r in results:
         wall = tiers[r.name]["write_s"]
         assert wall == round(r.duration_s, 3) and wall > 0
