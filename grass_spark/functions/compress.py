@@ -3,8 +3,9 @@
 The reference compresses raster rows with RLE/ZLIB/LZ4/BZIP2/ZSTD
 (``lib/gis/compress.c:21-27``).  This engine's analog — per the north
 star — is time-series-aware compression of bucket blocks: **delta-of-
-delta** for timestamps and **XOR** for float metrics, in the spirit of
-Facebook's Gorilla TSDB paper (Pelkonen et al., VLDB 2015).
+delta** for timestamps and **delta** for integer metrics, in the spirit
+of Facebook's Gorilla TSDB paper (Pelkonen et al., VLDB 2015).  Every
+stored tier metric is an integer, so there is no float stream.
 
 Layout twist for Spark: classic Gorilla is a single sequential
 bitstream, which forces per-value Python on decode.  We store the same
@@ -16,20 +17,20 @@ per-value Python, which is what makes the codec legal inside
 Arrow UDFs under the engine's no-per-row-Python rule.
 
 Classes (both streams):
-  0: delta-of-delta == 0 / XOR == 0            (0 payload bits)
+  0: delta-of-delta == 0 / delta == 0          (0 payload bits)
   1: fits in 16 bits                           (16)
   2: fits in 32 bits                           (32)
   3: full 64 bits                              (64)
 
-Timestamps are int64 microseconds; dods are zigzag-encoded before
-classification.  Floats are bit-cast to uint64 and XORed with the
-previous value (prefix-xor <=> cumulative-xor on decode).  NULLs are
-carried in a separate validity bitmap (GRASS NULL-cell analog).
+Timestamps are int64 microseconds; dods and deltas are zigzag-encoded
+before classification.  NULLs are carried in a separate validity bitmap
+(GRASS NULL-cell analog).  A blob starts with a 10-byte header: magic
+``0x47``, version 1, the value count as little-endian int64.
 
 Segmented kernels: every codec works on a *batch* of blocks at once —
 the values of all blocks concatenated, plus one length per block
-(``lengths``).  Diffs, XORs and cumulative sums reset at block starts,
-and the encoders return all blobs as one byte buffer plus Arrow-style
+(``lengths``).  Diffs and cumulative sums reset at block starts, and
+the encoders return all blobs as one byte buffer plus Arrow-style
 ``offsets`` (blob ``i`` is ``data[offsets[i]:offsets[i + 1]]``).  The
 per-block ``encode_ints``/``encode_timestamps`` and their decoders are
 the one-segment case, so a blob is the same bytes whichever way it was
@@ -104,12 +105,6 @@ def _seg_cumsum(x: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     cs = np.zeros(len(x) + 1, dtype=x.dtype)
     np.add.accumulate(x, out=cs[1:])
     return cs[1:] - np.repeat(cs[_starts(lengths)], lengths)
-
-
-def _seg_cumxor(x: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    acc = np.zeros(len(x) + 1, dtype=x.dtype)
-    np.bitwise_xor.accumulate(x, out=acc[1:])
-    return acc[1:] ^ np.repeat(acc[_starts(lengths)], lengths)
 
 
 def _seg_packbits(bits: np.ndarray, nbits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -218,19 +213,6 @@ def decode_timestamps_segments(data: np.ndarray, offsets: np.ndarray) -> tuple[n
     dod[first] = 0
     ts = _seg_cumsum(_seg_cumsum(dod, n), n) + np.repeat(base, n[n > 0])
     return ts.astype(np.int64), n
-
-
-def encode_floats_segments(vals: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """XOR-encode each segment of float64 values against the previous
-    value.  NaN is a legal value and round-trips bit-exactly."""
-    v = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
-    lengths = np.asarray(lengths, dtype=np.int64)
-    return _encode_u64(v ^ _prev(v, _first(lengths)), lengths)
-
-
-def decode_floats_segments(data: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    x, n = _decode_u64(data, offsets)
-    return _seg_cumxor(x, n).view(np.float64), n
 
 
 def encode_ints_segments(vals: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -11,7 +11,9 @@ per pipeline, and like that catalog it holds metadata, never cell data:
 * the store's layout pin (``layout``, and ``buckets`` for the bucketed
   layout);
 * one record per tier: granularity, source, command, write wall and,
-  for a tier with a block store, its codec report;
+  for a tier with a block store, its codec report (blocks, points, the
+  tier's and the block store's parquet bytes, and their ratio).  A
+  tier that writes no day keeps its record;
 * one entry per (tier, output partition) recording rows, bytes and the
   input fingerprint (the tier record holds the tier's write wall; a
   day's share of it is not measured) — which is what makes a tier job
@@ -61,7 +63,9 @@ class TierRecord:
     aggregation: list[str] = field(default_factory=list)
     command: str = ""              # reference's strds_metadata.command analog
     write_s: float = 0.0           # wall time of the tier's last write
-    blocks: dict | None = None     # codec report of the tier's block store
+    # the tier's block-store report: n_blocks, n_points, tier_bytes,
+    # comp_bytes, ratio = tier_bytes / comp_bytes; None until written
+    blocks: dict | None = None
 
 
 class CheckpointManifest:

@@ -1,10 +1,10 @@
 """Compressed bucket blocks — the Gorilla codec as batched Arrow operators.
 
-Turns a (keys..., ts, metrics...) tier into one row per (keys...,
-block_start) holding delta-of-delta-compressed timestamps and
-XOR/delta-compressed metric columns (:mod:`grass_spark.functions.compress`),
-plus byte-level lineage (raw vs compressed sizes).  The inverse operator
-restores the original rows bit-exactly.
+Turns a (keys..., bucket_start, int metrics...) tier into one row per
+(keys..., month) holding delta-of-delta-compressed timestamps and
+delta-compressed integer metric columns
+(:mod:`grass_spark.functions.compress`).  The inverse operator restores
+the original rows bit-exactly.
 
 This is the engine's counterpart of GRASS's per-row raster compression
 (``lib/gis/compress.c:21-27``) — but time-series-aware, and implemented
@@ -12,16 +12,18 @@ as ``mapInArrow`` over whole record batches.  Encode repartitions by
 (keys, block), sorts within partitions, and codes every block of a
 batch in one segmented numpy pass; a block that runs past the end of a
 batch is carried into the next one, never split.  Decode expands a
-batch of block rows with segmented cumulative sums/XORs and emits Arrow
+batch of block rows with segmented cumulative sums and emits Arrow
 arrays directly.  The only Python in the plan is whole-array numpy and
 pyarrow calls per batch (the BASELINE "zero per-row Python" rule).
 
-Blocks are keyed by (keys..., ``date_trunc(block, ts)``): the rollup
-writes month blocks of its minute tier, so one block is at most one
-conversation-month.  NULL metrics travel in a validity bitmap; a float
-NaN is a value, not a NULL, and keeps its bits.  Block rows are ~5-50x
-smaller than their input, so everything downstream of the codec is
-cheap.
+Blocks are keyed by (keys..., ``date_trunc("month", bucket_start)``):
+one block is at most one conversation-month of the minute tier.  NULL
+metrics travel in a validity bitmap.  A block row holds ``block_start``,
+the point count ``n``, ``ts_blob`` and a ``{m}_blob``/``{m}_valid`` pair
+per metric; decode selects just those columns, so block files that carry
+more (older stores wrote per-block byte counts) still decode.  The
+store's codec report is read from the files afterwards
+(``RollupPipeline._write_blocks``), not tallied here.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grass_spark.functions import compress as C
@@ -37,17 +39,8 @@ from grass_spark.functions import compress as C
 #: int64 stand-in for a NULL timestamp inside a ts blob
 _NULL_TS = np.iinfo(np.int64).min
 
-
-def report_columns() -> list[Column]:
-    """The codec metrics over block rows, as aggregate columns, observed
-    on the rollup's block write."""
-    return [
-        F.count(F.lit(1)).alias("n_blocks"),
-        F.sum("n").alias("n_points"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("comp_bytes").alias("comp_bytes"),
-        F.round(F.sum("raw_bytes") / F.sum("comp_bytes"), 3).alias("ratio"),
-    ]
+#: the timestamp column a block codes, and the unit a block spans
+_TS, _BLOCK = "bucket_start", "month"
 
 
 def _binary_type(df: DataFrame) -> pa.DataType:
@@ -71,13 +64,13 @@ def _blobs(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return np.frombuffer(data, dtype=np.uint8), offsets.astype(np.int64)
 
 
-def _numpy(arr: pa.Array, typ: pa.DataType, fill) -> tuple[np.ndarray, np.ndarray]:
-    """(values, valid) of a column: NULL slots hold ``fill``."""
-    arr = arr.cast(typ)
+def _numpy(arr: pa.Array, fill: int) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 values, valid) of a column: NULL slots hold ``fill``."""
+    arr = arr.cast(pa.int64())
     if arr.null_count == 0:
         return arr.to_numpy(zero_copy_only=False), np.ones(len(arr), dtype=bool)
     valid = arr.is_valid().to_numpy(zero_copy_only=False)
-    return pc.fill_null(arr, pa.scalar(fill, typ)).to_numpy(zero_copy_only=False), valid
+    return pc.fill_null(arr, pa.scalar(fill, pa.int64())).to_numpy(zero_copy_only=False), valid
 
 
 def _masked(vals: np.ndarray, valid: np.ndarray, typ: pa.DataType) -> pa.Array:
@@ -103,62 +96,37 @@ def _breaks(batch: pa.RecordBatch, prev: pa.RecordBatch | None) -> np.ndarray:
 
 
 def compress_blocks(
-    df: DataFrame,
-    *,
-    keys: list[str] | None = None,
-    ts_col: str = "bucket_start",
-    float_cols: list[str] | None = None,
-    int_cols: list[str] | None = None,
-    block: str = "day",
+    df: DataFrame, *, int_cols: list[str], keys: list[str] | None = None,
 ) -> DataFrame:
-    """One compressed block per (keys..., date_trunc(block, ts))."""
+    """One compressed block per (keys..., month of ``bucket_start``)."""
     keys = ["conv_id"] if keys is None else list(keys)
-    float_cols = list(float_cols or [])
-    int_cols = list(int_cols or [])
+    int_cols = list(int_cols)
     group = [*keys, "_block"]
     binary = _binary_type(df)
 
     key_fields = ", ".join(
         f"{k} {t}" for k, t in df.select(*keys).dtypes
     )
-    blob_fields = ", ".join(
-        [f"{m}_blob binary, {m}_valid binary" for m in float_cols + int_cols]
-    )
-    schema = (
-        f"{key_fields}, block_start timestamp, n bigint, "
-        f"ts_blob binary, raw_bytes bigint, comp_bytes bigint"
-        + (", " + blob_fields if blob_fields else "")
-    )
+    blob_fields = "".join(f", {m}_blob binary, {m}_valid binary" for m in int_cols)
+    schema = f"{key_fields}, block_start timestamp, n bigint, ts_blob binary{blob_fields}"
     out_names = [
-        *keys, "block_start", "n", "ts_blob", "raw_bytes", "comp_bytes",
-        *[f"{m}_{s}" for m in float_cols + int_cols for s in ("blob", "valid")],
-    ]
-
-    codecs = [
-        *[(m, C.encode_floats_segments, pa.float64(), np.nan) for m in float_cols],
-        *[(m, C.encode_ints_segments, pa.int64(), 0) for m in int_cols],
+        *keys, "block_start", "n", "ts_blob",
+        *[f"{m}_{s}" for m in int_cols for s in ("blob", "valid")],
     ]
 
     def encode_blocks(rows: list[pa.RecordBatch], lengths: np.ndarray) -> pa.RecordBatch:
         """Code every block of ``rows``: block i is the next lengths[i] rows."""
         b = pa.Table.from_batches(rows).combine_chunks().to_batches()[0]
         first = pa.array(np.cumsum(lengths) - lengths)
-        ts, _ = _numpy(b.column(ts_col), pa.int64(), _NULL_TS)
-        ts_data, ts_offs = C.encode_timestamps_segments(ts, lengths)
+        ts, _ = _numpy(b.column(_TS), _NULL_TS)
         cols = {k: b.column(k).take(first) for k in keys}
         cols["block_start"] = b.column("_block").take(first)
         cols["n"] = pa.array(lengths, pa.int64())
-        cols["ts_blob"] = _binary(ts_data, ts_offs, binary)
-        comp = np.diff(ts_offs)
-        for m, enc, typ, fill in codecs:
-            vals, valid = _numpy(b.column(m), typ, fill)
-            data, offs = enc(vals, lengths)
-            vdata, voffs = C.encode_validity_segments(valid, lengths)
-            cols[f"{m}_blob"] = _binary(data, offs, binary)
-            cols[f"{m}_valid"] = _binary(vdata, voffs, binary)
-            comp += np.diff(offs) + np.diff(voffs)
-        cols["raw_bytes"] = pa.array(lengths * 8 * (1 + len(codecs)), pa.int64())
-        cols["comp_bytes"] = pa.array(comp, pa.int64())
+        cols["ts_blob"] = _binary(*C.encode_timestamps_segments(ts, lengths), binary)
+        for m in int_cols:
+            vals, valid = _numpy(b.column(m), 0)
+            cols[f"{m}_blob"] = _binary(*C.encode_ints_segments(vals, lengths), binary)
+            cols[f"{m}_valid"] = _binary(*C.encode_validity_segments(valid, lengths), binary)
         return pa.RecordBatch.from_arrays([cols[c] for c in out_names], names=out_names)
 
     def encode(batches):
@@ -181,41 +149,26 @@ def compress_blocks(
             yield encode_blocks(carry, np.array([sum(b.num_rows for b in carry)]))
 
     return (
-        df.select(*keys, F.date_trunc(block, F.col(ts_col)).alias("_block"),
-                  ts_col, *float_cols, *int_cols)
+        df.select(*keys, F.date_trunc(_BLOCK, F.col(_TS)).alias("_block"), _TS, *int_cols)
         .repartition(*group)
-        .sortWithinPartitions(*group, ts_col)
+        .sortWithinPartitions(*group, _TS)
         .mapInArrow(encode, schema=schema)
     )
 
 
 def decompress_blocks(
-    blocks: DataFrame,
-    *,
-    keys: list[str] | None = None,
-    ts_col: str = "bucket_start",
-    float_cols: list[str] | None = None,
-    int_cols: list[str] | None = None,
+    blocks: DataFrame, *, int_cols: list[str], keys: list[str] | None = None,
 ) -> DataFrame:
     """Inverse of :func:`compress_blocks` — bit-exact restore."""
     keys = ["conv_id"] if keys is None else list(keys)
-    float_cols = list(float_cols or [])
-    int_cols = list(int_cols or [])
+    int_cols = list(int_cols)
 
     key_fields = ", ".join(
         f"{k} {t}" for k, t in blocks.select(*keys).dtypes
     )
-    out_fields = ", ".join(
-        [f"{m} double" for m in float_cols] + [f"{m} bigint" for m in int_cols]
-    )
-    schema = f"{key_fields}, {ts_col} timestamp" + (
-        ", " + out_fields if out_fields else ""
-    )
-    out_names = [*keys, ts_col, *float_cols, *int_cols]
-    codecs = [
-        *[(m, C.decode_floats_segments, pa.float64()) for m in float_cols],
-        *[(m, C.decode_ints_segments, pa.int64()) for m in int_cols],
-    ]
+    out_fields = "".join(f", {m} bigint" for m in int_cols)
+    schema = f"{key_fields}, {_TS} timestamp{out_fields}"
+    out_names = [*keys, _TS, *int_cols]
 
     def decode(batches):
         for b in batches:
@@ -224,14 +177,14 @@ def decompress_blocks(
             ts, n = C.decode_timestamps_segments(*_blobs(b.column("ts_blob")))
             rows = pa.array(np.repeat(np.arange(len(n)), n))
             cols = {k: b.column(k).take(rows) for k in keys}
-            cols[ts_col] = _masked(ts, ts != _NULL_TS, b.schema.field("block_start").type)
-            for m, dec, typ in codecs:
-                vals, _ = dec(*_blobs(b.column(f"{m}_blob")))
+            cols[_TS] = _masked(ts, ts != _NULL_TS, b.schema.field("block_start").type)
+            for m in int_cols:
+                vals, _ = C.decode_ints_segments(*_blobs(b.column(f"{m}_blob")))
                 valid = C.decode_validity_segments(*_blobs(b.column(f"{m}_valid")), n)
-                cols[m] = _masked(vals, valid, typ)
+                cols[m] = _masked(vals, valid, pa.int64())
             yield pa.RecordBatch.from_arrays([cols[c] for c in out_names], names=out_names)
 
     cols = [*keys, "block_start", "n", "ts_blob"] + [
-        f"{m}_{s}" for m in float_cols + int_cols for s in ("blob", "valid")
+        f"{m}_{s}" for m in int_cols for s in ("blob", "valid")
     ]
     return blocks.select(*cols).mapInArrow(decode, schema=schema)

@@ -173,6 +173,20 @@ def _read_dataset(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def _parquet_files(path: str) -> tuple[int, int, int]:
+    """(files, rows, bytes) of the parquet data files directly under
+    ``path``: rows from their footers, bytes from their sizes; no Spark
+    job."""
+    import pyarrow.parquet as pq
+
+    files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    return (
+        len(files),
+        sum(pq.read_metadata(f).num_rows for f in files),
+        sum(os.path.getsize(f) for f in files),
+    )
+
+
 def _collapse_day_ranges(days: set[str]) -> list[tuple[str, str]]:
     """Collapse 'yyyy-MM-dd' strings into [start_day, end_day_exclusive)
     ranges of consecutive days (resume typically skips one big prefix)."""
@@ -444,33 +458,31 @@ class RollupPipeline:
         from grass_spark.operators.blocks import decompress_blocks
 
         blocks = _read_dataset(spark, self.tier_path(name) + "_blocks")
-        return decompress_blocks(
-            blocks, keys=self.keys, ts_col="bucket_start",
-            int_cols=list(self.INT_METRICS),
-        )
+        return decompress_blocks(blocks, keys=self.keys, int_cols=list(self.INT_METRICS))
 
     def _write_blocks(self, spark: SparkSession, name: str) -> dict:
         """Materialize the tier's Gorilla block store (delta-of-delta
-        timestamps + delta ints inside batched Arrow UDFs) and return the
-        codec metrics (ratio recorded per tier in the manifest), observed
-        on the write itself rather than by reading the store back."""
-        from pyspark.sql import Observation
+        timestamps + delta ints inside batched Arrow UDFs) and return its
+        codec report, read from what is on disk and in the manifest with
+        no Spark job: ``n_blocks`` from the block files' footers,
+        ``comp_bytes`` from their sizes, ``n_points`` and ``tier_bytes``
+        from the tier's partition entries, and ``ratio`` =
+        ``tier_bytes / comp_bytes`` (above 1 when the block store is the
+        smaller copy of the tier)."""
+        from grass_spark.operators.blocks import compress_blocks
 
-        from grass_spark.operators.blocks import compress_blocks, report_columns
-
-        tier = self._read_tier_frame(spark, name)
-        blocks = compress_blocks(
-            tier, keys=self.keys, ts_col="bucket_start",
-            int_cols=list(self.INT_METRICS), block="month",
-        )
-        report = Observation()
         bpath = self.tier_path(name) + "_blocks"
-        blocks.observe(report, *report_columns()).write.mode("overwrite").parquet(bpath)
-        rep = report.get
+        compress_blocks(
+            self._read_tier_frame(spark, name), keys=self.keys,
+            int_cols=list(self.INT_METRICS),
+        ).write.mode("overwrite").parquet(bpath)
+        _, n_blocks, comp_bytes = _parquet_files(bpath)
+        entries = self.manifest.metrics(name)
+        tier_bytes = sum(e["bytes_out"] for e in entries)
         return {
-            "n_blocks": int(rep["n_blocks"]), "n_points": int(rep["n_points"]),
-            "raw_bytes": int(rep["raw_bytes"]), "comp_bytes": int(rep["comp_bytes"]),
-            "ratio": float(rep["ratio"]),
+            "n_blocks": n_blocks, "n_points": sum(e["rows_out"] for e in entries),
+            "tier_bytes": tier_bytes, "comp_bytes": comp_bytes,
+            "ratio": tier_bytes / comp_bytes,
         }
 
     # ------------------------------------------------------------------
@@ -566,13 +578,18 @@ class RollupPipeline:
                 record=record,
             )
             results.append(res)
-            # block stores only pay where groups are dense: the finest
-            # tier compresses 5.8x, but a day tier's (conv, block) groups
-            # hold a handful of points and the per-block headers EXCEED
-            # the data (measured ratio 0.55) — so only tier 0 gets one
-            if self.compress and i == 0 and res.days_written:
-                record.blocks = self._write_blocks(spark, name)
-                self.manifest.register_tier(name, record)
+            # only tier 0 gets a block store: a day tier's (conv, block)
+            # groups hold a handful of points, so per-block headers
+            # outweigh the data.  It is rewritten whenever the tier's
+            # stored record carries no codec report: after the tier
+            # wrote a day (a written day registers a fresh record), and
+            # after a run cut between the tier and its block store
+            if self.compress and i == 0:
+                stored = self.manifest.tiers()[name]
+                if not stored.get("blocks"):
+                    self.manifest.register_tier(name, TierRecord(
+                        **{**stored, "blocks": self._write_blocks(spark, name)}
+                    ))
         return results
 
     # ------------------------------------------------------------------
@@ -637,9 +654,8 @@ class RollupPipeline:
         days (already excluded upstream; the filter here is the safety
         net that keeps the write idempotent even if a caller passes an
         unfiltered frame).  ``record`` is registered with the write wall
-        in the same manifest save as the tier's partition entries."""
-        import pyarrow.parquet as pq
-
+        in the same manifest save as the tier's partition entries; a
+        tier that writes no day keeps the record it has stored."""
         path = self.tier_path(name)
         tiered = tiered.withColumn("d", F.date_format("bucket_start", "yyyy-MM-dd"))
 
@@ -679,28 +695,24 @@ class RollupPipeline:
                 )
             if day in done:
                 continue
-            day_dir = os.path.join(path, part)
-            files = [
-                os.path.join(day_dir, f)
-                for f in os.listdir(day_dir)
-                if f.endswith(".parquet")
-            ]
-            if not files:
+            n_files, rows, n_bytes = _parquet_files(os.path.join(path, part))
+            if not n_files:
                 continue
-            per_day[day] = sum(pq.read_metadata(f).num_rows for f in files)
+            per_day[day] = rows
             entries.append(
                 PartitionEntry(
                     tier=name,
                     part=day,
                     rows_in=int((rows_in_map or {}).get(day, 0)),
                     rows_out=per_day[day],
-                    bytes_out=sum(os.path.getsize(f) for f in files),
-                    n_files=len(files),
+                    bytes_out=n_bytes,
+                    n_files=n_files,
                     input_fingerprint=input_fingerprint,
                 )
             )
-        record.write_s = round(duration, 3)
-        self.manifest.record_many(entries, tiers={name: record})
+        if entries or name not in self.manifest.tiers():
+            record.write_s = round(duration, 3)
+            self.manifest.record_many(entries, tiers={name: record})
         return TierResult(
             name=name,
             granularity=gran,

@@ -51,7 +51,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    if extra_conf.get("spark.master", master).startswith("local"):
+        # Spark lists more than 32 paths (a tier of more than 32 days)
+        # in a listing job; on a local master its tasks run in the
+        # driver's own JVM anyway, so the job is pure launch overhead
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -42,21 +42,6 @@ def test_ts_codec_roundtrip_any_deltas(deltas):
 
 @given(
     st.lists(
-        st.floats(allow_nan=True, allow_infinity=True, width=64),
-        min_size=0,
-        max_size=400,
-    )
-)
-@settings(max_examples=60, deadline=None)
-def test_float_codec_bitexact_any_values(vals):
-    v = np.array(vals, dtype=np.float64)
-    data, offsets = C.encode_floats_segments(v, [len(v)])
-    out = C.decode_floats_segments(data, offsets)[0]
-    assert np.array_equal(v.view(np.uint64), out.view(np.uint64))
-
-
-@given(
-    st.lists(
         st.integers(min_value=-(2**62), max_value=2**62), min_size=0, max_size=400
     )
 )

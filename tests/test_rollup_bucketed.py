@@ -13,8 +13,9 @@ at the same base_dir, the bucket-count pin and the refusal of a re-open
 that changes a tier's schema, the fold of an older ``_layout.json`` pin
 into the manifest, the jobs one run launches, and — over both layouts —
 that a run cut by a failed write task, by a crash between Spark's
-commit and the manifest entry, or between two tiers is reconciled by
-the next run, also when the clock stepped back between runs.
+commit and the manifest entry, between two tiers, or between t1m and
+its block store is reconciled by the next run, also when the clock
+stepped back between runs.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from grass_spark.manifest import CheckpointManifest
 from grass_spark.operators.rollup import RollupPipeline, rollup_from_tier
 from grass_spark.functions.granularity import adjust_datetime_to_granularity
 
-from test_rollup_run import BASE_TURNS, NEW_DAY_TURNS, _jobs, _raw as _turns
+from test_rollup_run import BASE_TURNS, NEW_DAY_TURNS, SPAN_TURNS, _jobs, _raw as _turns
 
 
 def _raw(spark, n_convs=30, avg_turns=25):
@@ -373,12 +374,7 @@ def test_store_deleted_and_rebuilt_in_one_session(spark, tmp_path):
         assert tier.agg(F.sum("turn_cnt")).collect()[0][0] == len(NEW_DAY_TURNS)
 
 
-#: 40 consecutive days with one turn per day in each of two
-#: conversations, and 5 more days appended to them
-SPAN_TURNS = [
-    (conv, (dt.datetime(2024, 1, 1, 12) + dt.timedelta(days=i)).isoformat(" "))
-    for i in range(40) for conv in ("a", "b")
-]
+#: 5 more days appended to SPAN_TURNS
 SPAN_APPEND = [
     ("a", (dt.datetime(2024, 2, 10, 12) + dt.timedelta(days=i)).isoformat(" "))
     for i in range(5)
@@ -552,3 +548,33 @@ def test_crash_between_commit_and_manifest_is_reconciled(
         spark, base, layout, monkeypatch, CheckpointManifest, "record_many", crash
     )
     _assert_rerun_matches_fresh(spark, base, layout, backfilled_fresh)
+
+
+@LAYOUTS
+def test_crash_before_block_write_is_reconciled(
+    spark, tmp_path, monkeypatch, layout, backfilled_fresh,
+):
+    """The backfill run of a ``compress=True`` store dies in
+    ``_write_blocks``, after t1m recorded its rewritten days.  The rerun
+    writes no t1m day, but t1m's record carries no codec report, so it
+    rewrites the block store: the blocks decode to the t1m tier again
+    and the report is back on the record."""
+    def crash(write_blocks):
+        def crashing(self, spark, name):
+            raise RuntimeError("injected crash before the block write")
+        return crashing
+
+    base = str(tmp_path / "tiers")
+    layout = {**layout, "compress": True}
+    _build_then_crash_backfill(
+        spark, base, layout, monkeypatch, RollupPipeline, "_write_blocks", crash
+    )
+    assert RollupPipeline(base, **layout).manifest.tiers()["t1m"]["blocks"] is None
+    _assert_rerun_matches_fresh(spark, base, layout, backfilled_fresh)
+    pipe = RollupPipeline(base, **layout)
+    cols = [*pipe.keys, "bucket_start", *pipe.INT_METRICS]
+    decoded = pipe.read_tier_from_blocks(spark, "t1m").select(*cols).collect()
+    assert sorted(map(tuple, decoded), key=repr) == sorted(
+        (tuple(r) for r in pipe.read_tier(spark, "t1m").select(*cols).collect()), key=repr
+    )
+    assert pipe.manifest.tiers()["t1m"]["blocks"]["n_points"] == len(decoded)

@@ -10,13 +10,18 @@
 * Job budget: the Spark jobs one run launches, without and with the
   block codec, so a re-added raw scan, per-tier re-count, codec report
   scan or schema-inference read fails loudly; reading a tier back
-  launches none.
+  launches none, also on a store of more days than Spark lists without
+  a job by default.
+* Codec report: read from the files the block write left, with no job;
+  its ratio is the tier's parquet bytes over the block store's.  A
+  no-op rerun keeps every tier record, report included.
 * Honest durations: the tier write wall lives on the tier record;
   partition entries do not claim it.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
 
@@ -41,6 +46,13 @@ BASE_TURNS = [
 NEW_DAY_TURNS = [
     ("a", "2024-03-06 12:00:00"), ("a", "2024-03-06 12:00:30"),
     ("a", "2024-03-06 12:01:00"),
+]
+#: 40 consecutive days with one turn per day in each of two
+#: conversations: more day directories than Spark lists without a job
+#: by default (32)
+SPAN_TURNS = [
+    (conv, (dt.datetime(2024, 1, 1, 12) + dt.timedelta(days=i)).isoformat(" "))
+    for i in range(40) for conv in ("a", "b")
 ]
 #: tier -> number of leading ts characters naming its bucket
 PREFIX = {"t1m": 16, "t1h": 13, "t1d": 10}
@@ -267,25 +279,88 @@ def test_read_job_budget(spark, tmp_path):
     """Reading a tier back takes its schema from a parquet footer:
     building ``read_tier`` for each tier, ``read_tier_from_blocks``, and
     a bucketed tier's catalog re-attach after its table was dropped
-    launch no Spark job."""
+    launch no Spark job.  Nor does a plain read of a 40-day store: on a
+    local master, Spark lists its day directories without a job."""
     raw = _raw(spark, BASE_TURNS)
     plain = RollupPipeline(str(tmp_path / "plain"), compress=True)
     plain.run(raw, input_fingerprint="fp")
     buck = RollupPipeline(str(tmp_path / "buck"), layout="bucketed", buckets=2)
     buck.run(raw, input_fingerprint="fp")
+    span = RollupPipeline(str(tmp_path / "span"), compress=True)
+    span.run(_raw(spark, SPAN_TURNS), input_fingerprint="fp")
     jobs = {}
     for name in PREFIX:
         jobs[f"plain {name}"] = _jobs(
             spark, f"read-plain-{name}", lambda: plain.read_tier(spark, name))
+        jobs[f"40 days {name}"] = _jobs(
+            spark, f"read-span-{name}", lambda: span.read_tier(spark, name))
         spark.sql(f"DROP TABLE {buck._table_name(name)}")
         jobs[f"bucketed {name}"] = _jobs(
             spark, f"read-bucketed-{name}", lambda: buck.read_tier(spark, name))
-    jobs["blocks"] = _jobs(
-        spark, "read-blocks", lambda: plain.read_tier_from_blocks(spark, "t1m"))
+    for pipe in (plain, span):
+        jobs[f"blocks {pipe.base_dir}"] = _jobs(
+            spark, f"read-blocks-{len(jobs)}",
+            lambda: pipe.read_tier_from_blocks(spark, "t1m"))
     assert jobs == dict.fromkeys(jobs, 0)
     assert buck.read_tier(spark, "t1d").agg(F.sum("turn_cnt")).collect()[0][0] == len(
         BASE_TURNS
     )
+
+
+#: Spark jobs of ``_write_blocks``: the encode's repartition runs its
+#: shuffle map stage as a job of its own under AQE, then the block
+#: files are written.  The codec report is read from those files and
+#: the manifest, so it adds none.
+BLOCK_WRITE_JOBS = 2
+
+
+def test_block_report_is_read_from_the_files(spark, tmp_path):
+    """The codec report costs no Spark job, and its ratio is the t1m
+    parquet bytes over the block store's bytes, both as on disk."""
+    base = str(tmp_path / "tiers")
+    pipe = RollupPipeline(base, compress=True)
+    pipe.run(_raw(spark, BASE_TURNS), input_fingerprint="fp")
+
+    def parquet_bytes(path):
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(path) for f in files if f.endswith(".parquet")
+        )
+
+    def assert_matches_disk(report):
+        tier_bytes = parquet_bytes(pipe.tier_path("t1m"))
+        comp_bytes = parquet_bytes(pipe.tier_path("t1m") + "_blocks")
+        assert report["ratio"] == tier_bytes / comp_bytes
+        assert (report["tier_bytes"], report["comp_bytes"]) == (tier_bytes, comp_bytes)
+        blocks = spark.read.parquet(pipe.tier_path("t1m") + "_blocks")
+        assert report["n_blocks"] == blocks.count() == 3  # (conv, month) pairs
+        assert report["n_points"] == pipe.read_tier(spark, "t1m").count()
+        assert not {"raw_bytes", "comp_bytes"} & set(blocks.columns)
+
+    assert_matches_disk(pipe.manifest.tiers()["t1m"]["blocks"])
+    report = {}
+    jobs = _jobs(spark, "write-blocks", lambda: report.update(pipe._write_blocks(spark, "t1m")))
+    assert jobs == BLOCK_WRITE_JOBS
+    assert_matches_disk(report)
+
+
+def test_noop_rerun_keeps_tier_records(spark, tmp_path):
+    """A rerun that writes no day keeps every tier's stored record
+    (write wall and codec report included) and leaves the block store
+    untouched."""
+    base = str(tmp_path / "tiers")
+    raw = _raw(spark, BASE_TURNS)
+    RollupPipeline(base, compress=True).run(raw, input_fingerprint="fp")
+    manifest = os.path.join(base, "manifest.json")
+    blocks = os.path.join(base, "t1m_blocks")
+    before = CheckpointManifest(manifest).tiers()
+    stamps = {f: os.path.getmtime(os.path.join(blocks, f)) for f in os.listdir(blocks)}
+    assert before["t1m"]["blocks"]["n_blocks"] > 0
+    for _ in range(2):
+        results = RollupPipeline(base, compress=True).run(raw, input_fingerprint="fp")
+        assert [r.days_written for r in results] == [[]] * 3
+        assert CheckpointManifest(manifest).tiers() == before
+    assert {f: os.path.getmtime(os.path.join(blocks, f)) for f in os.listdir(blocks)} == stamps
 
 
 def test_partition_durations_within_tier_wall(spark, tmp_path):
